@@ -160,20 +160,21 @@ def budget_line(
     blow the line; a relative cap like budget/2 breaks as soon as the
     fixed headline fields grow past it, observed when the canary/steal
     fields landed) and ``queries`` (the PINNED_LINE_QUERIES set in its
-    fixed order — round-12 stabilization; slowest-first only as the
-    fallback when none of the pinned names exist in ``times``, e.g.
-    synthetic test suites). Pure function: unit-tested in
+    fixed order — round-12 stabilization; a pinned name absent from
+    ``times`` still emits, as null; slowest-first only as the fallback
+    when none of the pinned names exist in ``times``, e.g. synthetic
+    test suites). Pure function: unit-tested in
     tests/test_bench_budget.py."""
     # bytes kept free for the per-query map: at least the EXACT size of
     # the full pinned window (so the retimed fill can never push a
     # pinned query off the line — a partial window would reintroduce
     # the run-to-run set rotation this window exists to stop)
-    pinned = [n for n in PINNED_LINE_QUERIES if n in times]
+    pinned = any(n in times for n in PINNED_LINE_QUERIES)
     queries_reserve = 600
     if pinned:
         queries_reserve = max(
             queries_reserve,
-            len(json.dumps({n: times[n] for n in pinned},
+            len(json.dumps({n: times.get(n) for n in PINNED_LINE_QUERIES},
                            separators=(",", ":"))) + 16,
         )
     head = dict(full)
@@ -197,19 +198,20 @@ def budget_line(
             head["retimed_omitted"] = len(retimed) - len(head["retimed"])
             break
     if pinned:
-        # deterministic window: same key set every run (failed pinned
-        # queries still emit, as null — a failure must stay visible)
-        fill = [(n, times[n]) for n in pinned]
+        # deterministic window: same key set every run (failed or
+        # missing pinned queries still emit, as null — a failure must
+        # stay visible)
+        fill = [(n, times.get(n)) for n in PINNED_LINE_QUERIES]
     else:
         fill = sorted(
             times.items(), key=lambda kv: (-(kv[1] or 0.0), kv[0])
         )
     for name, t in fill:
         head["queries"][name] = t
-        head["queries_omitted"] = len(times) - len(head["queries"])
+        head["queries_omitted"] = len(times.keys() - head["queries"].keys())
         if len(json.dumps(head, separators=(",", ":"))) > budget:
             del head["queries"][name]
-            head["queries_omitted"] = len(times) - len(head["queries"])
+            head["queries_omitted"] = len(times.keys() - head["queries"].keys())
             break
     return head
 
@@ -758,23 +760,14 @@ def main() -> int:
         qps = round(len(qs) / (time.perf_counter() - t0), 2)
 
         # batched serving (the engine's documented throughput path):
-        # all queries in ONE job, per-query top-10 via a window
-        from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
+        # all queries in ONE job, per-query top-10 through the library's
+        # scoring and ranking path
+        from otters_spark.functions.vector import queries_df, rank_topk, score_pairs
 
-        from otters_spark.functions.vector import queries_df, score_expr
-        from otters_spark.store import INV_NORM_COL
-
-        qdf = queries_df(spark, qs)
-        scored = store.df.crossJoin(F.broadcast(qdf)).withColumn(
-            "score",
-            score_expr("embedding", "qvec", "cosine", INV_NORM_COL, F.col("q_inv_norm")),
-        )
-        w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id"))
-        batched = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 10)
-            .select("query_id", "vec_id", "score")
+        scored = score_pairs(store.df, queries_df(spark, qs), "cosine", "embedding")
+        batched = rank_topk(
+            scored.select("query_id", "vec_id", "score"), 10, "cosine", "vec_id",
+            query_col="query_id",
         )
         t0 = time.perf_counter()
         batched.collect()

@@ -15,6 +15,9 @@ Semantics preserved:
   0.0, never NaN (src/vec.rs:365-368, src/vec_compute.rs:25-32)
 * euclidean: **squared** distance, never sqrt'd (src/vec_compute.rs:35-54)
 
+Every vector search entry point scores and ranks through the one path at
+the end of this module: :func:`score_pairs` and :func:`rank_topk`.
+
 Scale note: for dim≈64 these codegen'd expressions are the fast path; an
 Arrow/pandas-UDF matmul path for very wide vectors lives in
 ``otters_spark.operators.similarity``.
@@ -27,6 +30,7 @@ from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 __all__ = [
     "METRICS",
@@ -40,7 +44,20 @@ __all__ = [
     "inv_norm_of",
     "score_expr",
     "queries_df",
+    "ranks_ascending",
+    "score_pairs",
+    "rank_topk",
+    "per_query_topk",
+    "check_per_query_k",
 ]
+
+#: the store's precomputed inverse-norm column (written at build by
+#: ``otters_spark.store``; read here by :func:`score_pairs`)
+INV_NORM_COL = "__inv_norm"
+
+#: the session conf below which Spark plans ``row_number() <= k`` as
+#: WindowGroupLimit Partial/Final (inclusive; default 1000)
+WINDOW_GROUP_LIMIT_CONF = "spark.sql.optimizer.windowGroupLimitThreshold"
 
 #: metric -> default take direction (src/vec.rs:92-98: Euclidean->Min,
 #: Cosine/DotProduct->Max). Manhattan is the reference's own roadmap
@@ -242,3 +259,139 @@ def queries_df(spark: SparkSession, queries: Iterable[Sequence[float]]) -> DataF
         (i, [float(x) for x in q], inv_norm_of(q)) for i, q in enumerate(queries)
     ]
     return spark.createDataFrame(rows, _QUERY_SCHEMA)
+
+
+# --- the one scoring-and-ranking path ----------------------------------
+#
+# Every vector search entry point (plan API, serving, LSH/IVF/PQ/binary
+# ANN, the pandas matmul merge) ranks through :func:`rank_topk`, and
+# every broadcast-queries × store scoring goes through
+# :func:`score_pairs`. The ranking rule is the reference's: direction
+# from METRICS (src/vec.rs:92-98), NaN scores dropped
+# (src/vec_compute.rs:236-239) — NULL with them, since a NULL score
+# would sort first under ascending order — and ties broken on id
+# ascending so results are reproducible.
+
+
+def ranks_ascending(metric: str, direction: str | None = None) -> bool:
+    """True when smaller scores rank first. ``direction`` ("min" or
+    "max") overrides the metric's own (the plan's take_min/take_max);
+    otherwise it comes from :data:`METRICS`. The only place the
+    direction rule lives."""
+    d = direction or METRICS.get(metric)
+    if d not in ("min", "max"):
+        raise ValueError(f"unknown metric {metric!r}; expected one of {sorted(METRICS)}")
+    return d == "min"
+
+
+def _valid_score(score_col: str) -> Column:
+    # isnan(NULL) is false, so NULL needs its own test
+    return F.col(score_col).isNotNull() & ~F.isnan(F.col(score_col))
+
+
+def score_pairs(
+    candidates: DataFrame,
+    queries: DataFrame,
+    metric: str,
+    vec_col: str,
+    qvec_col: str = "qvec",
+) -> DataFrame:
+    """Every candidate row crossed with every query row (the query
+    batch broadcasts — it is the small side) plus a ``score`` column
+    from :func:`score_expr`. Inverse norms are the stored ones: the
+    candidates' :data:`INV_NORM_COL` when present, the queries'
+    ``q_inv_norm`` column (as :func:`queries_df` builds it), each
+    computed in place when absent. NULL/NaN scores are dropped here,
+    so score filters and survivor counts downstream see valid scores
+    only. All columns of both sides are carried through."""
+    if "q_inv_norm" not in queries.columns:
+        queries = queries.withColumn("q_inv_norm", inv_norm_expr(qvec_col))
+    inv = INV_NORM_COL if INV_NORM_COL in candidates.columns else None
+    scored = candidates.crossJoin(F.broadcast(queries)).withColumn(
+        "score",
+        score_expr(vec_col, qvec_col, metric, inv_norm_col=inv,
+                   q_inv_norm=F.col("q_inv_norm")),
+    )
+    return scored.filter(_valid_score("score"))
+
+
+def rank_topk(
+    scored: DataFrame,
+    k: int | None,
+    metric: str,
+    id_col: str,
+    query_col: str | None = None,
+    score_col: str = "score",
+    direction: str | None = None,
+) -> DataFrame:
+    """Top-``k`` of an already-scored frame by the engine's one ranking
+    rule: NULL/NaN scores dropped, direction from :func:`ranks_ascending`,
+    ties on ``id_col`` ascending. With ``query_col=None`` the ranking is
+    global — ``ORDER BY … LIMIT k``, planned as TakeOrderedAndProject
+    (per-partition bounded heaps + a driver merge, the distributed
+    TopKCollector of src/vec_compute.rs:77-294); ``k=None`` keeps every
+    row, sorted. Otherwise each ``query_col`` group keeps its own top-k
+    through :func:`per_query_topk`. All input columns are carried
+    through."""
+    ascending = ranks_ascending(metric, direction)
+    valid = scored.filter(_valid_score(score_col))
+    if query_col is not None:
+        return per_query_topk(valid, k, query_col, score_col, id_col, ascending)
+    first = F.col(score_col).asc_nulls_last() if ascending else F.col(score_col).desc()
+    out = valid.orderBy(first, F.col(id_col).asc())
+    return out if k is None else out.limit(k)
+
+
+def per_query_topk(
+    scored: DataFrame,
+    k: int,
+    query_col: str = "query_id",
+    score_col: str = "score",
+    id_col: str = "vec_id",
+    ascending: bool = False,
+) -> DataFrame:
+    """EXACT per-query top-k over an already-scored frame whose shuffle
+    input is BOUNDED — the scale-safe device for batch/serving search.
+
+    One plain rank window: Spark plans ``row_number() <= k`` as
+    **WindowGroupLimit Partial/Final** (SPARK-37099) for k up to
+    :data:`WINDOW_GROUP_LIMIT_CONF` (default 1000). Each map task
+    pre-limits its partition to k rows per query BEFORE the exchange,
+    so the shuffle and the final per-query window see at most
+    partitions × |queries| × k rows — never the scored corpus. Above
+    the threshold that bound is silently lost, so a larger ``k``
+    raises. The plan shape is locked by
+    tests/test_plans.py::test_per_query_topk_shuffle_input_is_bounded.
+
+    Spark's own NULL/NaN window semantics are kept as they are: a NULL
+    query key is its own group, NaN sorts as the largest double, NULL
+    scores sort last under DESC / first under ASC — identical to the
+    naive window, asserted in tests/test_similarity.py. Callers that
+    rank vector scores go through :func:`rank_topk`, which drops
+    NULL/NaN scores first.
+
+    Ordering: ``score_col`` desc (asc when ``ascending``), then
+    ``id_col`` asc. All input columns are carried through."""
+    check_per_query_k(scored.sparkSession, k)
+    direction = F.col(score_col).asc() if ascending else F.col(score_col).desc()
+    w = Window.partitionBy(query_col).orderBy(direction, F.col(id_col).asc())
+    return (
+        scored.withColumn("__pqk_rn", F.row_number().over(w))
+        .filter(F.col("__pqk_rn") <= k)
+        .drop("__pqk_rn")
+    )
+
+
+def check_per_query_k(spark: SparkSession, k: int) -> None:
+    """Raise unless 1 <= ``k`` <= the session's WindowGroupLimit
+    threshold; above it a per-query top-k would shuffle every scored
+    row."""
+    if k is None or k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    limit = int(spark.conf.get(WINDOW_GROUP_LIMIT_CONF))
+    if k > limit:
+        raise ValueError(
+            f"k={k} exceeds {WINDOW_GROUP_LIMIT_CONF}={limit}: above it Spark no "
+            "longer pre-limits each query's rows before the shuffle; raise the "
+            "conf or lower k"
+        )

@@ -25,11 +25,18 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from ..functions.vector import METRICS, dot_expr, inv_norm_expr, inv_norm_of, queries_df
-from ..store import INV_NORM_COL, VecStore
+from ..functions.vector import (
+    dot_expr,
+    inv_norm_expr,
+    inv_norm_of,
+    per_query_topk,
+    queries_df,
+    rank_topk,
+    ranks_ascending,
+)
+from ..store import INV_NORM_COL
 
 __all__ = [
-    "knn",
     "maxsim_topk",
     "pandas_matmul_topk",
     "per_query_topk",
@@ -211,11 +218,6 @@ def prototype_outliers(
     )
 
 
-def knn(store: VecStore, query: Sequence[float], k: int, metric: str = "cosine") -> DataFrame:
-    """Exact top-k — the reference's core query (src/vec.rs:206-311)."""
-    return store.query(list(query), metric).take(k).df()
-
-
 # --- Arrow/NumPy matmul path --------------------------------------------
 
 
@@ -291,6 +293,7 @@ def pandas_matmul_topk(
         ]
     )
     nq = Q.shape[0]
+    ascending = ranks_ascending(metric)
 
     def score(batches):
         import pandas as pd
@@ -320,7 +323,7 @@ def pandas_matmul_topk(
             for qi in range(nq):
                 s = S[:, qi]
                 if len(s) > k:
-                    idx = np.argpartition(-s if metric != "euclidean" else s, k)[:k]
+                    idx = np.argpartition(s if ascending else -s, k)[:k]
                 else:
                     idx = np.arange(len(s))
                 frames.append(
@@ -330,64 +333,7 @@ def pandas_matmul_topk(
                 )
             yield pd.concat(frames, ignore_index=True)
 
-    scored = df.mapInPandas(score, out_schema)
-    asc = METRICS.get(metric) == "min"
-    order = [
-        F.col("score").asc() if asc else F.col("score").desc(),
-        F.col(id_col).asc(),
-    ]
-    return scored.orderBy(*order).limit(k)
-
-
-def per_query_topk(
-    scored: DataFrame,
-    k: int,
-    query_col: str = "query_id",
-    score_col: str = "score",
-    id_col: str = "vec_id",
-    ascending: bool = False,
-) -> DataFrame:
-    """EXACT per-query top-k over an already-scored frame whose shuffle
-    input is BOUNDED — the scale-safe device for batch/serving search.
-
-    One plain rank window, because on Spark 3.5+/4.x the optimizer
-    plans ``row_number() <= k`` as **WindowGroupLimit Partial/Final**
-    (SPARK-37099, for k <= spark.sql.window.group.limit.threshold,
-    default 1000): each map task pre-limits its partition to k rows
-    per query BEFORE the exchange (a spillable local JVM sort feeds
-    the limit), so the shuffle and the final per-query window see at
-    most partitions × |queries| × k rows — never the scored corpus.
-    The round-10 "window funnels each query's entire scored corpus
-    through one task" hazard does not exist on this Spark version;
-    the plan shape is locked by
-    tests/test_plans.py::test_per_query_topk_shuffle_input_is_bounded.
-
-    Round 12 (VERDICT item 3): this replaces the round-11 mapInPandas
-    partial-top-k stage, which achieved the same bound by hand but put
-    an Arrow crossing on the full scored store (guide §4: every row
-    paid JVM→Python→JVM serialization) and carried pandas NULL-handling
-    hazards (groupby dropna silently dropped NULL query keys; NaN/NULL
-    score conflation under ascending order — the round-11 ADVICE
-    items). The JVM shape keeps Spark's own NULL/NaN window semantics
-    exactly: a NULL query key is its own group, NaN sorts as the
-    largest double, NULL scores sort last under DESC / first under ASC
-    — identical to the naive window by construction, asserted in
-    tests/test_similarity.py and by the vs_per_query_topk oracle.
-
-    Ordering is the engine's window convention: (``score_col`` desc —
-    or asc for distance metrics — then ``id_col`` asc). All input
-    columns are carried through unchanged."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    from pyspark.sql.window import Window
-
-    direction = F.col(score_col).asc() if ascending else F.col(score_col).desc()
-    w = Window.partitionBy(query_col).orderBy(direction, F.col(id_col).asc())
-    return (
-        scored.withColumn("__pqk_rn", F.row_number().over(w))
-        .filter(F.col("__pqk_rn") <= k)
-        .drop("__pqk_rn")
-    )
+    return rank_topk(df.mapInPandas(score, out_schema), k, metric, id_col)
 
 
 # --- random-hyperplane LSH ----------------------------------------------
@@ -487,10 +433,9 @@ def lsh_search(
     )
     if round_to is not None:
         score = F.round(score, round_to)
-    scored = cand.withColumn("score", score)
-    asc = METRICS.get(metric) == "min"
-    order = [F.col("score").asc() if asc else F.col("score").desc(), F.col(id_col).asc()]
-    return scored.orderBy(*order).limit(k).select(id_col, "score", "lsh_bucket")
+    return rank_topk(cand.withColumn("score", score), k, metric, id_col).select(
+        id_col, "score", "lsh_bucket"
+    )
 
 
 def _search_batch(
@@ -507,12 +452,7 @@ def _search_batch(
 ) -> DataFrame:
     """Shared body of the batch search paths: broadcast the
     (query_id, partition-key) probe table + query batch onto the
-    pruned index, exact re-score, per-query bounded top-k window.
-    One helper on purpose — the repo already paid once for keeping
-    four copies of this ordering logic in sync (the hardcoded
-    euclidean-direction bug)."""
-    from pyspark.sql.window import Window
-
+    pruned index, exact re-score, per-query bounded top-k."""
     from ..functions.vector import score_expr
 
     if not qlist or k < 1:
@@ -538,16 +478,9 @@ def _search_batch(
         # k-boundary discipline) so cross-engine evaluations rank the
         # same floats
         score = F.round(score, round_to)
-    scored = cand.withColumn("score", score)
-    asc = METRICS.get(metric) == "min"
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").asc() if asc else F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= k)
-        .select("query_id", id_col, "score", partition_col)
-    )
+    return rank_topk(
+        cand.withColumn("score", score), k, metric, id_col, query_col="query_id"
+    ).select("query_id", id_col, "score", partition_col)
 
 
 def lsh_search_batch(
@@ -755,9 +688,7 @@ def ivf_search(
     scored = cand.withColumn(
         "score", score_expr(vec_col, qlit, metric, q_inv_norm=inv_norm_of(q))
     )
-    asc = METRICS.get(metric) == "min"
-    order = [F.col("score").asc() if asc else F.col("score").desc(), F.col(id_col).asc()]
-    return scored.orderBy(*order).limit(k).select(id_col, "score", "ivf_cell")
+    return rank_topk(scored, k, metric, id_col).select(id_col, "score", "ivf_cell")
 
 
 def ivf_search_batch(
@@ -1026,10 +957,8 @@ def pq_search(
     q = np.asarray(list(map(float, query)), dtype=np.float64).reshape(M, dsub)
     if metric == "euclidean":
         table = ((codebooks - q[:, None, :]) ** 2).sum(axis=2)  # (M, K)
-        asc = True
     elif metric == "dot":
         table = np.einsum("md,mkd->mk", q, codebooks)
-        asc = False
     else:
         raise ValueError("pq_search supports metrics 'euclidean' and 'dot'")
     tbl = F.array(*[F.lit(float(v)) for v in table.flatten()])
@@ -1043,27 +972,20 @@ def pq_search(
         lambda acc, x: acc + x,
     )
     scored = encoded.withColumn("approx_score", approx)
-    order = [
-        F.col("approx_score").asc_nulls_last() if asc else F.col("approx_score").desc(),
-        F.col(id_col).asc(),
-    ]
     if store is None or rerank is None:
-        return scored.orderBy(*order).limit(k).select(id_col, "approx_score")
-    cand = scored.orderBy(*order).limit(max(rerank, k)).select(id_col, "approx_score")
+        return rank_topk(scored, k, metric, id_col, score_col="approx_score").select(
+            id_col, "approx_score"
+        )
+    cand = rank_topk(
+        scored, max(rerank, k), metric, id_col, score_col="approx_score"
+    ).select(id_col, "approx_score")
     qflat = [float(x) for x in np.asarray(query, dtype=np.float64).ravel()]
     qlit = F.array(*[F.lit(x) for x in qflat])
     exact = store.join(F.broadcast(cand), id_col).withColumn(
         "score",
-        score_expr(
-            vec_col, qlit, metric if metric != "dot" else "dot",
-            q_inv_norm=inv_norm_of(np.asarray(qflat)),
-        ),
+        score_expr(vec_col, qlit, metric, q_inv_norm=inv_norm_of(np.asarray(qflat))),
     )
-    order2 = [
-        F.col("score").asc() if asc else F.col("score").desc(),
-        F.col(id_col).asc(),
-    ]
-    return exact.orderBy(*order2).limit(k).select(id_col, "score", "approx_score")
+    return rank_topk(exact, k, metric, id_col).select(id_col, "score", "approx_score")
 
 
 # ---------------------------------------------------------------------
@@ -1167,10 +1089,9 @@ def binary_search(
         raise ValueError(f"query dim {len(q)} != index dim {dim}")
     qwords = pack_sign_bits_py(q)
     ham = hamming_bits_expr(bits_col, qwords)
-    cand = (
-        indexed.withColumn("hamming", ham)
-        .orderBy(F.col("hamming").asc(), F.col(id_col).asc())
-        .limit(shortlist)
+    cand = rank_topk(
+        indexed.withColumn("hamming", ham), shortlist, "hamming", id_col,
+        score_col="hamming",
     )
     from ..functions.vector import cosine_expr, inv_norm_expr
 
@@ -1178,12 +1099,7 @@ def binary_search(
     score = cosine_expr(vec_col, qlit, inv_norm_expr(vec_col), inv_norm_of(q))
     if round_to is not None:
         score = F.round(score, round_to)
-    return (
-        cand.withColumn("score", score)
-        .orderBy(F.col("score").desc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-        .drop(bits_col)
-    )
+    return rank_topk(cand.withColumn("score", score), k, "cosine", id_col).drop(bits_col)
 
 
 def mmr_rerank(

@@ -7,10 +7,11 @@ Reference lifecycle (SURVEY.md §3):
 Spark realization is a single declarative pipeline::
 
     store.filter(meta_pred)                  # ← Catalyst pushes into scan
-         .crossJoin(broadcast(query_batch))  # ← tiny broadcast side
-         .withColumn('score', <codegen expr>)
-         .filter(~isnan(score) & score CMP t)
-         .orderBy(score).limit(k)            # ← TakeOrderedAndProject
+         .crossJoin(broadcast(query_batch))  # ┐ functions.vector.score_pairs:
+         .withColumn('score', <codegen expr>)# │ tiny broadcast side,
+         .filter(~isnan(score))              # ┘ NULL/NaN scores dropped
+         .filter(score CMP t)
+         .orderBy(score).limit(k)            # ← rank_topk: TakeOrderedAndProject
 
 so the reference's hand-built machinery maps 1:1 onto planner features:
 chunk pruning = row-group pruning (src/meta.rs:646-660), rayon chunk
@@ -44,8 +45,8 @@ from .errors import (
     PlanError,
 )
 from .expr import Expr, compile_expr
-from .functions.vector import METRICS, queries_df, score_expr
-from .store import INV_NORM_COL, MetaStore, VecStore
+from .functions.vector import METRICS, queries_df, rank_topk, score_pairs
+from .store import MetaStore, VecStore
 
 __all__ = ["VecQueryPlan", "MetaQueryPlan", "QueryStats"]
 
@@ -387,26 +388,8 @@ class VecQueryPlan:
             base = base.filter(mask)
         if obs_candidates is not None:
             base = base.observe(obs_candidates, F.count(F.lit(1)).alias("n"))
-        spark = base.sparkSession
-        qdf = queries_df(spark, self._queries)
-        scored = base.crossJoin(F.broadcast(qdf)).withColumn(
-            "score",
-            score_expr(
-                store.vec_col,
-                "qvec",
-                self._metric,
-                inv_norm_col=INV_NORM_COL,
-                q_inv_norm=F.col("q_inv_norm"),
-            ),
-        )
-        # NaN scores silently dropped (src/vec_compute.rs:236-239).
-        # NULL joins the drop: isnan(NULL) is false in Spark, so NaN
-        # filtering alone would keep a NULL score (ragged vector under
-        # validate=False) and min-direction ordering sorts NULLS FIRST
-        # — it would silently occupy the top-k slots.
-        scored = scored.filter(
-            F.col("score").isNotNull() & ~F.isnan(F.col("score"))
-        )
+        qdf = queries_df(base.sparkSession, self._queries)
+        scored = score_pairs(base, qdf, self._metric, store.vec_col)
         if self._vec_filter is not None:
             thr, cmp = self._vec_filter
             c = F.col("score")
@@ -416,17 +399,9 @@ class VecQueryPlan:
             )
         if obs_survivors is not None:
             scored = scored.observe(obs_survivors, F.count(F.lit(1)).alias("n"))
-        direction = self._take_dir or METRICS[self._metric]
-        order = [
-            F.col("score").asc_nulls_last() if direction == "min" else F.col("score").desc(),
-            F.col(store.id_col).asc(),
-        ]
-        out = scored.orderBy(*order)
-        if self._k is not None:
-            # ORDER BY + LIMIT k → TakeOrderedAndProject: per-partition
-            # bounded priority queue + driver merge — the distributed
-            # equivalent of TopKCollector (src/vec_compute.rs:77-294)
-            out = out.limit(self._k)
+        out = rank_topk(
+            scored, self._k, self._metric, store.id_col, direction=self._take_dir
+        )
         return out.select(*self._result_columns())
 
     def collect(self) -> list:

@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 
 from .errors import StoreBuildError
 from .expr import _schema_dtypes
-from .functions.vector import inv_norm_expr
+from .functions.vector import INV_NORM_COL, inv_norm_expr
 
 __all__ = [
     "VecStore",
@@ -42,7 +42,6 @@ __all__ = [
     "parse_datetime_column",
 ]
 
-INV_NORM_COL = "__inv_norm"
 _MANIFEST = "_otters_manifest.json"
 
 

@@ -4,22 +4,18 @@ static store.
 The reference is batch/in-memory only; this is the extension surface a
 serving deployment needs. Two Spark-native shapes:
 
-* :func:`stream_static_scores` — stream-static inner join: each
-  arriving query row crossJoins (broadcast, tiny) nothing — the STORE
-  is the static side, scored with the same codegen score expression the
-  batch path uses. Append-mode safe (no aggregation), so any sink
-  works; downstream consumers filter/threshold.
+* :func:`stream_static_scores` — stream-static join: every arriving
+  query row is scored against the static store. Append-mode safe (no
+  aggregation), so any sink works; an optional score threshold
+  pre-filters in the stream.
 * :func:`serve_query_stream` — micro-batch top-k via ``foreachBatch``:
-  every micro-batch of queries runs the BATCHED serving plan (broadcast
-  query batch + per-query window top-k — one job per micro-batch, the
-  measured ~20× amortization from SCALE.md) and hands results to a
-  callback. This is the engine's documented serving loop, driven by a
-  stream.
+  every micro-batch of queries runs ONE batched scoring job (broadcast
+  query batch + per-query top-k) and hands results to a callback.
 
-Both reuse ``functions.vector.score_expr`` so streaming and batch
-scoring are THE SAME expression — equivalence is asserted in
-tests/test_streaming_serving.py the same way the events streams are
-checked against their batch twins.
+Both score through ``functions.vector.score_pairs`` and rank (or
+threshold) by ``functions.vector``'s one direction rule, so for every
+metric a served query returns the rows the batch plan API returns —
+asserted metric by metric in tests/test_streaming_serving.py.
 """
 
 from __future__ import annotations
@@ -28,19 +24,10 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.vector import score_expr
-from ..store import INV_NORM_COL, VecStore
+from ..functions.vector import check_per_query_k, rank_topk, ranks_ascending, score_pairs
+from ..store import VecStore
 
 __all__ = ["stream_static_scores", "serve_query_stream"]
-
-
-def _q_inv_norm(qvec_col: str) -> F.Column:
-    acc = F.aggregate(
-        F.transform(F.col(qvec_col), lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
-    return F.when(acc > 0, F.lit(1.0) / F.sqrt(acc)).otherwise(F.lit(0.0))
 
 
 def stream_static_scores(
@@ -55,20 +42,13 @@ def stream_static_scores(
     (query_id, qvec); every store row is scored against every arriving
     query (the static store side is re-read per micro-batch — at scale,
     point the store at a pruned/partitioned layout). Append-safe:
-    returns (query_id, id, score) without aggregation; pass
-    ``threshold`` to pre-filter in the stream."""
-    scored = queries.withColumn("__qin", _q_inv_norm(qvec_col)).crossJoin(
-        store.df
-    ).withColumn(
-        "score",
-        score_expr(
-            store.vec_col, qvec_col, metric,
-            inv_norm_col=INV_NORM_COL, q_inv_norm=F.col("__qin"),
-        ),
-    )
-    scored = scored.filter(~F.isnan(F.col("score")))
+    returns (query_id, id, score) without aggregation. ``threshold``
+    keeps the rows at least that good: ``score >= threshold`` for
+    similarity metrics, ``score <= threshold`` for distance metrics."""
+    scored = score_pairs(store.df, queries, metric, store.vec_col, qvec_col)
     if threshold is not None:
-        scored = scored.filter(F.col("score") >= threshold)
+        c = F.col("score")
+        scored = scored.filter(c <= threshold if ranks_ascending(metric) else c >= threshold)
     return scored.select(query_id_col, store.id_col, "score")
 
 
@@ -84,43 +64,26 @@ def serve_query_stream(
 ):
     """Micro-batch top-k serving loop: for each arriving micro-batch of
     queries, run ONE batched scoring job (broadcast queries × store,
-    per-query window top-k) and pass the result DataFrame to
-    ``on_batch(results, batch_id)``. Returns the started
+    per-query top-k planned as WindowGroupLimit, so each map task
+    pre-limits to k rows per query before the exchange) and pass the
+    result DataFrame to ``on_batch(results, batch_id)``. ``metric`` and
+    ``k`` are checked before the stream starts. Returns the started
     ``StreamingQuery`` (caller awaits/stops)."""
+    ranks_ascending(metric)
+    check_per_query_k(queries.sparkSession, k)
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        qdf = F.broadcast(
-            batch_df.select(
-                F.col(query_id_col),
-                F.col(qvec_col),
-                _q_inv_norm(qvec_col).alias("__qin"),
-            )
+        # only the query columns cross the join, so a stream column
+        # cannot collide with a store column
+        scored = score_pairs(
+            store.df, batch_df.select(query_id_col, qvec_col), metric,
+            store.vec_col, qvec_col,
         )
-        scored = store.df.crossJoin(qdf).withColumn(
-            "score",
-            score_expr(
-                store.vec_col, qvec_col, metric,
-                inv_norm_col=INV_NORM_COL, q_inv_norm=F.col("__qin"),
-            ),
-        ).filter(~F.isnan(F.col("score")))
-        # per-query top-k via operators.similarity.per_query_topk:
-        # Spark 3.5+/4.x plans the rank window as WindowGroupLimit
-        # Partial/Final, so each map task pre-limits to k rows per
-        # query BEFORE the exchange — the shuffle never carries the
-        # full scored store, and (round 12) no Python boundary sits in
-        # the serving hot path. Project to the three result columns
-        # first so the scan stays pruned.
-        from ..operators.similarity import per_query_topk
-
-        topk = per_query_topk(
+        topk = rank_topk(
             scored.select(query_id_col, store.id_col, "score"),
-            k,
-            query_col=query_id_col,
-            score_col="score",
-            id_col=store.id_col,
-            ascending=(metric == "euclidean"),
+            k, metric, store.id_col, query_col=query_id_col,
         )
         on_batch(topk, batch_id)
 

@@ -28,7 +28,7 @@ from pyspark.sql.window import Window
 
 from .expr import col
 from .functions.scan import spread_small_scan
-from .functions.vector import queries_df, score_expr
+from .functions.vector import queries_df, rank_topk, score_expr, score_pairs
 from .store import INV_NORM_COL, MetaStore
 
 # --- fixed query vectors (seeds 7/11/13, rounded 4dp; deterministic) ---
@@ -351,21 +351,16 @@ FROM scored WHERE s >= 0.2 ORDER BY s DESC, vec_id
 def vs_per_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine extension (SURVEY §2.2 windows): per-query top-5 — the
     reference merges globally; this is the batch-search variant it
-    lacks. Routed through operators.similarity.per_query_topk: Spark
-    3.5+/4.x plans the rank window as WindowGroupLimit Partial/Final,
-    so the exchange only ever carries k rows per query per map task —
-    never the full scored store (plan shape locked in
-    tests/test_plans.py). Round 12 dropped the round-11 MapInPandas
-    partial stage: same bound, no Arrow crossing (VERDICT item 3)."""
-    from .operators.similarity import per_query_topk
-
+    lacks. Routed through functions.vector.rank_topk: Spark plans the
+    per-query rank window as WindowGroupLimit Partial/Final, so the
+    exchange only ever carries k rows per query per map task — never
+    the full scored store (plan shape locked in tests/test_plans.py)."""
     store = emb_store(spark, sf_dir)
     qdf = queries_df(spark, [Q7, Q11, Q13])
-    scored = store.df.crossJoin(F.broadcast(qdf)).withColumn(
-        "score",
-        score_expr("embedding", "qvec", "cosine", INV_NORM_COL, F.col("q_inv_norm")),
-    ).select("query_id", "vec_id", "score", "label")
-    return per_query_topk(scored, 5).select(
+    scored = score_pairs(store.df, qdf, "cosine", "embedding").select(
+        "query_id", "vec_id", "score", "label"
+    )
+    return rank_topk(scored, 5, "cosine", "vec_id", query_col="query_id").select(
         "query_id", "vec_id", F.round("score", 6).alias("score"), "label"
     )
 
@@ -3366,21 +3361,14 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = store.df.filter(F.col("vec_id") % 131 == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
-        F.col(INV_NORM_COL).alias("q_inv"),
+        F.col(INV_NORM_COL).alias("q_inv_norm"),
         F.col("label").alias("q_label"),
     )
-    scored = (
-        store.df.crossJoin(F.broadcast(q))
-        .filter(F.col("label") != F.col("q_label"))
-        .withColumn(
-            "score",
-            score_expr("embedding", "qvec", "cosine", INV_NORM_COL, F.col("q_inv")),
-        )
+    scored = score_pairs(store.df, q, "cosine", "embedding").filter(
+        F.col("label") != F.col("q_label")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
+        rank_topk(scored, 3, "cosine", "vec_id", query_col="query_id")
         .select(
             "query_id",
             "q_label",
@@ -3874,7 +3862,6 @@ def eval_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         hyperplanes,
         lsh_index,
         lsh_search_batch,
-        per_query_topk,
     )
 
     emb = load(spark, sf_dir, "embeddings")
@@ -3911,7 +3898,7 @@ def eval_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "score"
         ),
     )
-    exact = per_query_topk(exact_scored, 10)
+    exact = rank_topk(exact_scored, 10, "cosine", "vec_id", query_col="query_id")
     metrics = retrieval_metrics(with_rank(ann), with_rank(exact))
     return metrics.orderBy("query_id")
 
@@ -7801,11 +7788,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_expr("embedding", qlit, inv_norm_expr("embedding"), inv_norm_of(Q7)),
         6,
     )
-    shortlist = (
-        emb.withColumn("score", rel)
-        .orderBy(F.col("score").desc(), F.col("vec_id").asc())
-        .limit(50)
-    )
+    shortlist = rank_topk(emb.withColumn("score", rel), 50, "cosine", "vec_id")
     return mmr_rerank(shortlist, k=_MMR_K, lam=_MMR_LAM)
 
 
@@ -8550,10 +8533,7 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id")
-    )
-    top = cand.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 10)
+    top = rank_topk(cand, 10, "cosine", "vec_id", query_col="query_id")
     votes = top.groupBy("query_id", "label").agg(
         F.count(F.lit(1)).alias("n_votes")
     )

@@ -390,7 +390,9 @@ def test_queries_window_is_deterministic_across_runs():
     selection rotated as queries sped up, and PERF_r11 reported 8 false
     dropped_from_bench rows. Two synthetic runs with REVERSED per-query
     costs must emit identical key sets: exactly the pinned names, with
-    each run's own values, failed (None) pinned queries included."""
+    each run's own values, failed (None) pinned queries included — and
+    a pinned name missing from a run's times entirely emits as null
+    instead of silently vanishing from the line."""
     extras = {f"zz_extra_{i:03d}": 9.9 for i in range(200)}  # all slower
     run1 = {n: 0.5 + i * 0.01 for i, n in enumerate(PINNED_LINE_QUERIES)}
     run2 = {n: 5.0 - i * 0.01 for i, n in enumerate(PINNED_LINE_QUERIES)}
@@ -405,6 +407,13 @@ def test_queries_window_is_deterministic_across_runs():
     # current values ride along; a failed pinned query stays visible
     assert h1["queries"][PINNED_LINE_QUERIES[1]] == run1[PINNED_LINE_QUERIES[1]]
     assert h2["queries"][PINNED_LINE_QUERIES[0]] is None
+    # a third run that never recorded one pinned name at all
+    run3 = {n: 1.0 for n in PINNED_LINE_QUERIES[:-1]}
+    h3 = budget_line(_full(run3 | extras, {}, {}), run3 | extras,
+                     [], {}, {}, 1800)
+    assert list(h3["queries"]) == list(h1["queries"])
+    assert h3["queries"][PINNED_LINE_QUERIES[-1]] is None
+    assert h3["queries_omitted"] == 200
     # no extra (non-pinned) names sneak in to rotate next run
     assert not any(k.startswith("zz_extra_") for k in h1["queries"])
     assert h1["queries_omitted"] == 200

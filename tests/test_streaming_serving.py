@@ -83,3 +83,213 @@ def test_serve_query_stream_topk(spark, sf_dir, tmp_path):
     for qid, vec in qs:
         rows = sorted(by_query[qid], key=lambda r: -r["score"])
         assert rows[0]["vec_id"] == qid and rows[0]["score"] == pytest.approx(1.0)
+
+
+# --- every metric × every entry point against one exact NumPy top-k ---
+
+_NAN = float("nan")
+# id 8 is a NULL vector, id 9 a NaN vector: no entry point may return them
+_ROWS = [
+    [0.0, 0.0, 0.0, 0.0],
+    [1.0, 0.0, 0.0, 0.0],
+    [1.0, 1.0, 0.0, 0.0],
+    [0.0, 1.0, 1.0, 0.0],
+    [2.0, 0.0, 1.0, 0.0],
+    [1.0, 1.0, 1.0, 1.0],
+    [0.0, 0.0, 2.0, 2.0],
+    [-1.0, 0.5, 0.0, 1.0],
+    None,
+    [_NAN, 0.0, 0.0, 0.0],
+]
+_BAD_IDS = {8, 9}
+_MATRIX_QUERIES = [[1.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 1.0]]
+_THRESHOLDS = {"dot": 1.0, "cosine": 0.5, "euclidean": 2.0,
+               "manhattan": 2.0, "hamming": 2.0, "jaccard": 0.5}
+
+
+def _np_score(metric, v, q):
+    import numpy as np
+
+    if v is None:
+        return None
+    v, q = np.asarray(v, dtype=np.float64), np.asarray(q, dtype=np.float64)
+    if metric == "dot":
+        return float(v @ q)
+    if metric == "cosine":
+        nv, nq = np.sqrt(v @ v), np.sqrt(q @ q)
+        return float((v @ q) * (0.0 if nv == 0 else 1 / nv) * (0.0 if nq == 0 else 1 / nq))
+    if metric == "euclidean":
+        return float(((v - q) ** 2).sum())
+    if metric == "manhattan":
+        return float(np.abs(v - q).sum())
+    if metric == "hamming":
+        return float((v != q).sum())
+    inter, union = ((v != 0) & (q != 0)).sum(), ((v != 0) | (q != 0)).sum()
+    return 0.0 if union == 0 else float(inter / union)
+
+
+def _np_scored(metric, q):
+    """(id, score) of every row with a valid (non-NULL, non-NaN) score."""
+    import math
+
+    out = []
+    for i, v in enumerate(_ROWS):
+        s = _np_score(metric, v, q)
+        if s is not None and not math.isnan(s):
+            out.append((i, s))
+    return out
+
+
+def _np_topk(metric, q, k):
+    from otters_spark.functions.vector import METRICS
+
+    sign = 1.0 if METRICS[metric] == "min" else -1.0
+    return sorted(_np_scored(metric, q), key=lambda r: (sign * r[1], r[0]))[:k]
+
+
+def _assert_rows(got, want):
+    assert [i for i, _ in got] == [i for i, _ in want], (got, want)
+    for (_, a), (_, b) in zip(got, want):
+        assert a == pytest.approx(b, abs=1e-5)
+
+
+@pytest.fixture(scope="module")
+def matrix_store(spark):
+    from otters_spark.store import VecStore
+
+    df = spark.createDataFrame(
+        list(enumerate(_ROWS)), "vec_id long, embedding array<double>"
+    )
+    return VecStore.from_df(df, dim=4, validate=False)
+
+
+@pytest.mark.parametrize("metric", ["dot", "cosine", "euclidean", "manhattan",
+                                    "hamming", "jaccard"])
+def test_every_entry_point_matches_numpy_topk(spark, matrix_store, metric, tmp_path):
+    """Plan API, serving, stream-static threshold, LSH and IVF (single
+    and batch, every bucket/cell probed) all return the exact float64
+    top-k: direction from METRICS, id tie-break, NULL/NaN rows never
+    returned."""
+    import numpy as np
+
+    from otters_spark.functions.vector import METRICS
+    from otters_spark.operators.similarity import (
+        hyperplanes, ivf_search, ivf_search_batch, lsh_index, lsh_search,
+        lsh_search_batch,
+    )
+
+    assert sorted(METRICS) == sorted(_THRESHOLDS)
+    k, qs = 3, _MATRIX_QUERIES
+    want = {qid: _np_topk(metric, q, k) for qid, q in enumerate(qs)}
+    for rows in want.values():
+        assert len(rows) == k and not {i for i, _ in rows} & _BAD_IDS
+
+    def pairs(rows, score="score"):
+        return [(r["vec_id"], r[score]) for r in rows]
+
+    def per_query(rows):
+        out = {}
+        for r in sorted(rows, key=lambda r: r["query_id"]):
+            out.setdefault(r["query_id"], []).append(r)
+        return out
+
+    def ranked(rows):
+        # a per-query result is a set; order it by the same rule
+        sign = 1.0 if METRICS[metric] == "min" else -1.0
+        return sorted(pairs(rows), key=lambda r: (sign * r[1], r[0]))
+
+    # plan API
+    for qid, q in enumerate(qs):
+        _assert_rows(pairs(matrix_store.query(q, metric).take(k).collect()), want[qid])
+
+    # ANN entry points over the unvalidated index, every bucket/cell probed
+    raw = matrix_store.df.drop("__inv_norm")
+    planes = hyperplanes(4, n_planes=1, seed=3)
+    indexed = lsh_index(raw, planes)
+    assigned = raw.withColumn("ivf_cell", (raw["vec_id"] % 2).cast("int"))
+    centroids = np.zeros((2, 4))
+    for qid, q in enumerate(qs):
+        got = lsh_search(indexed, q, planes, k, metric=metric, multiprobe=1).collect()
+        _assert_rows(pairs(got), want[qid])
+        got = ivf_search(assigned, centroids, q, k, nprobe=2, metric=metric).collect()
+        _assert_rows(pairs(got), want[qid])
+    for got in (
+        lsh_search_batch(indexed, qs, planes, k, metric=metric, multiprobe=1),
+        ivf_search_batch(assigned, centroids, qs, k, nprobe=2, metric=metric),
+    ):
+        by_q = per_query(got.collect())
+        assert sorted(by_q) == [0, 1]
+        for qid, rows in by_q.items():
+            _assert_rows(ranked(rows), want[qid])
+
+    # stream-static scores with a threshold (batch input; the stream
+    # twin is asserted equal in test_stream_static_matches_batch)
+    t = _THRESHOLDS[metric]
+    keep = (lambda s: s <= t) if METRICS[metric] == "min" else (lambda s: s >= t)
+    qdf = spark.createDataFrame(list(enumerate(qs)), QUERY_SCHEMA)
+    got = stream_static_scores(qdf, matrix_store, metric=metric, threshold=t).collect()
+    by_q = per_query(got)
+    for qid, q in enumerate(qs):
+        want_t = sorted((i, s) for i, s in _np_scored(metric, q) if keep(s))
+        assert want_t, (metric, qid)
+        _assert_rows(sorted(pairs(by_q.get(qid, []))), want_t)
+
+    # the serving loop: one stream, both queries in one micro-batch
+    qdir = str(tmp_path / "queries")
+    _write_queries(spark, qdir, list(enumerate(qs)))
+    served = []
+    sq = serve_query_stream(
+        spark.readStream.schema(QUERY_SCHEMA).json(qdir), matrix_store,
+        on_batch=lambda df, bid: served.extend(df.collect()),
+        checkpoint_dir=str(tmp_path / "ckpt"), metric=metric, k=k,
+    )
+    try:
+        sq.processAllAvailable()
+    finally:
+        sq.stop()
+    by_q = per_query(served)
+    assert sorted(by_q) == [0, 1]
+    for qid, rows in by_q.items():
+        _assert_rows(ranked(rows), want[qid])
+
+
+def test_per_query_k_bounded_by_window_group_limit(spark, matrix_store, tmp_path):
+    """k is checked where callers hit it: up to the WindowGroupLimit
+    threshold the per-query top-k plans (and runs), one above raises
+    naming the conf, and serving rejects a bad k before any stream
+    starts."""
+    from otters_spark.functions.vector import (
+        WINDOW_GROUP_LIMIT_CONF, per_query_topk, queries_df, rank_topk, score_pairs,
+    )
+
+    scored = score_pairs(
+        matrix_store.df, queries_df(spark, _MATRIX_QUERIES), "cosine", "embedding"
+    )
+    old = spark.conf.get(WINDOW_GROUP_LIMIT_CONF)
+    spark.conf.set(WINDOW_GROUP_LIMIT_CONF, "3")
+    try:
+        top = rank_topk(scored, 3, "cosine", "vec_id", query_col="query_id")
+        assert "WindowGroupLimit" in top._jdf.queryExecution().executedPlan().toString()
+        assert top.count() == 6
+        for call in (
+            lambda: rank_topk(scored, 4, "cosine", "vec_id", query_col="query_id"),
+            lambda: per_query_topk(scored, 4),
+            lambda: serve_query_stream(
+                spark.readStream.schema(QUERY_SCHEMA).json(str(tmp_path)),
+                matrix_store, on_batch=lambda df, bid: None,
+                checkpoint_dir=str(tmp_path / "ckpt"), k=4,
+            ),
+        ):
+            with pytest.raises(ValueError, match=WINDOW_GROUP_LIMIT_CONF):
+                call()
+    finally:
+        spark.conf.set(WINDOW_GROUP_LIMIT_CONF, old)
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        serve_query_stream(
+            spark.readStream.schema(QUERY_SCHEMA).json(str(tmp_path)),
+            matrix_store, on_batch=lambda df, bid: None,
+            checkpoint_dir=str(tmp_path / "ckpt0"), k=0,
+        )
+    assert len(spark.streams.active) == active
+    assert not (tmp_path / "ckpt0").exists()
