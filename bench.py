@@ -299,36 +299,6 @@ def wait_for_quiet_box(
     return guard
 
 
-# The parquet tables every oracle view set is built from — single
-# source of truth for bench's anchor AND scripts/check_oracle.py
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
-
-
-def regenerate_oracles(sf_dir: str) -> dict[str, str]:
-    """The suite's oracle SQL with every data-derived entry
-    (DYNAMIC_ORACLES) regenerated for this sf_dir — the committed
-    strings are bound to sf0.01 at import. A generator that raises is
-    tolerated: the stale SQL stays in the map and fails (and is
-    counted) where it runs. Shared by run_duckdb_anchor and
-    scripts/check_oracle.py so the regeneration discipline can't
-    drift between the gate and the anchor."""
-    from otters_spark.suite import DYNAMIC_ORACLES, ORACLE_SQL
-
-    oracles = dict(ORACLE_SQL)
-    for dname, gen in DYNAMIC_ORACLES.items():
-        try:
-            oracles[dname] = gen(sf_dir)
-        except Exception as e:
-            print(
-                f"bench: could not regenerate dynamic oracle {dname}: {e}",
-                file=sys.stderr,
-            )
-    return oracles
-
-
 def run_duckdb_anchor(sf_dir: str) -> dict:
     """Same-session DuckDB anchor (round-10, VERDICT item 2): run the
     suite's own oracle SQL — the exact statements the driver's
@@ -343,37 +313,19 @@ def run_duckdb_anchor(sf_dir: str) -> dict:
     computed within one box-state — both numerator and denominator
     breathe with the same hypervisor.
 
-    Same setup as scripts/check_oracle.py (which imports TABLES and
-    regenerate_oracles from here so the two can't drift): one
-    in-memory connection, a view per parquet table, data-derived
-    oracles regenerated for this sf_dir. Results are materialized with
-    fetchall() so each query's full pipeline runs. Per-query failures
-    are counted, never fatal — an anchor with failures > 0 should be
-    read with suspicion (the ratio's denominator is missing work) and
-    says so in-artifact."""
-    import duckdb
+    Same setup as scripts/check_oracle.py: the oracle map and the view
+    set come from ``suite.oracles_for`` and ``suite.oracle_connection``.
+    Results are materialized with fetchall() so each query's full
+    pipeline runs. Per-query failures are counted, never fatal — an
+    anchor with failures > 0 should be read with suspicion (the ratio's
+    denominator is missing work) and says so in-artifact."""
+    from otters_spark.suite import oracle_connection, oracles_for
 
-    oracles = regenerate_oracles(sf_dir)
-    tables = TABLES
-    con = duckdb.connect()
+    oracles = oracles_for(sf_dir)
+    failed = 0
+    t0 = time.perf_counter()
+    con = oracle_connection(sf_dir)
     try:
-        try:  # keep the bench tail clean for the driver's stdout window
-            con.execute("SET enable_progress_bar = false")
-        except Exception:
-            pass
-        failed = 0
-        t0 = time.perf_counter()
-        for t in tables:
-            # per-table, not one block: a single missing/unreadable
-            # parquet must cost only the queries that touch it (counted
-            # below), never null out the whole anchor
-            try:
-                con.sql(
-                    f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-                )
-            except Exception as e:
-                print(f"bench: duckdb anchor view {t} failed: {e}",
-                      file=sys.stderr)
         for name, sql in oracles.items():
             try:
                 con.sql(sql).fetchall()
@@ -382,11 +334,9 @@ def run_duckdb_anchor(sf_dir: str) -> dict:
                 print(f"bench: duckdb anchor {name} failed: {e}",
                       file=sys.stderr)
         wall = time.perf_counter() - t0
-        return {
-            "sec": round(wall, 3), "n_queries": len(oracles), "failed": failed,
-        }
     finally:
         con.close()
+    return {"sec": round(wall, 3), "n_queries": len(oracles), "failed": failed}
 
 
 def main() -> int:

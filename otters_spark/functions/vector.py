@@ -153,15 +153,19 @@ def manhattan_expr(a, b) -> Column:
 def _null_guarded_lane(cond):
     """Lane combinator for zip_with kernels that count matches: maps a
     (x, y) predicate to 1/0 as int64, but NULLs the lane when either
-    side is NULL — so a ragged (zip_with NULL-padded) or null-element
-    input propagates NULL through the sum instead of silently counting
-    the padded lanes (SQL 3VL would send the NULL comparison to the
-    otherwise-branch 0). Shared by hamming and jaccard; manhattan gets
-    the same behavior from arithmetic NULL propagation for free."""
+    side is NULL or NaN — so a ragged (zip_with NULL-padded) or
+    null-element input propagates NULL through the sum instead of
+    silently counting the padded lanes (SQL 3VL would send the NULL
+    comparison to the otherwise-branch 0), and a NaN coordinate gives
+    a NULL score, which ranking drops, as the arithmetic metrics' NaN
+    scores are dropped. Shared by hamming and jaccard; manhattan gets
+    the same behavior from arithmetic NULL/NaN propagation for free."""
 
     def lane(x, y):
         return F.when(
-            x.isNull() | y.isNull(), F.lit(None).cast("long")
+            x.isNull() | y.isNull()
+            | F.isnan(x.cast("double")) | F.isnan(y.cast("double")),
+            F.lit(None).cast("long"),
         ).otherwise(
             F.when(cond(x, y), F.lit(1)).otherwise(F.lit(0)).cast("long")
         )

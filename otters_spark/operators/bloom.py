@@ -119,8 +119,14 @@ def bloom_probe(
     # Catalyst re-expands a shared subtree per consumer — unpinned,
     # each of the k broadcast builds re-ran the caller's ENTIRE filter
     # build, observed as 4 extra corpus scans in pipeline_bloom_decontam).
-    # The table is ≤ ceil(m_bits/63) rows by construction — bounded.
-    bloom = bloom.localCheckpoint(eager=False)
+    # Re-aggregated first: a union of filters repeats word_idx, and a
+    # repeated key would duplicate the probe rows at each join. The
+    # table is ≤ ceil(m_bits/63) rows by construction — bounded.
+    bloom = (
+        bloom.groupBy("word_idx")
+        .agg(F.bit_or("word").alias("word"))
+        .localCheckpoint(eager=False)
+    )
     h = F.col(value_col) if hashed else md5_long_expr(F.col(value_col))
     # Materialize the HASH once behind a Generate barrier (a 1-element
     # explode — the md5-fanout trap guard, see tests/test_suite_plans.py):

@@ -12,15 +12,10 @@ import os
 import sys
 import time
 
-import duckdb
 import numpy as np
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-# shared with bench.py's same-session anchor so the view set and the
-# dynamic-oracle regeneration discipline can't drift between the two
-from bench import TABLES, regenerate_oracles  # noqa: E402
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -58,17 +53,12 @@ def compare(name: str, sdf: pd.DataFrame, ddf: pd.DataFrame) -> list[str]:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from otters_spark.session import get_spark
-    from otters_spark.suite import QUERIES
+    from otters_spark.suite import QUERIES, oracle_connection, oracles_for
 
-    # data-derived oracles are bound to sf0.01 at import; regenerate
-    # for whatever sf_dir this check runs at (shared helper with bench)
-    ORACLE_SQL = regenerate_oracles(sf_dir)
-
+    oracles = oracles_for(sf_dir)
     only = set(sys.argv[2:])
     spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=16)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_connection(sf_dir)
 
     failures = 0
     for name, fn in QUERIES.items():
@@ -81,11 +71,8 @@ def main() -> int:
             print(f"FAIL {name}: spark raised {type(e).__name__}: {e}")
             failures += 1
             continue
-        if name not in ORACLE_SQL:
-            print(f"SKIP {name}: no oracle (rows-only) — {len(sdf)} rows in {time.time()-t0:.1f}s")
-            continue
         try:
-            ddf = con.sql(ORACLE_SQL[name]).df()
+            ddf = con.sql(oracles[name]).df()
         except Exception as e:
             print(f"FAIL {name}: duckdb raised {type(e).__name__}: {e}")
             failures += 1

@@ -9,27 +9,27 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from otters_spark.suite import ORACLE_SQL, QUERIES  # noqa: E402
+from otters_spark.suite import DYNAMIC_ORACLES, QUERIES  # noqa: E402
 
 HEADER = """# Query index
 
-Every driver-contract query (`__spark_entry__.queries()`), its check
-type, and what it demonstrates. Generated from suite docstrings
+Every driver-contract query (`__spark_entry__.queries()`) and what it
+demonstrates, in registry order. Generated from suite docstrings
 (`python scripts/gen_query_index.py`).
 
-**Frozen-registry contract (round 8):** rows 1-50 are the driver's
-correctness window — the per-round recorder samples exactly the FIRST
-50 registry entries, and the registry order in `otters_spark/suite.py`
-was frozen in round 8 (verification-priority order, marker comments at
-the `_REGISTRY` block). Do NOT reorder it: a reorder silently swaps
-which queries get driver-recorded rows and breaks cross-round
-comparability of `CORRECTNESS_r*.json`. Rows 51+ never get driver rows
-again; their current-code correctness statement is the mandatory
-per-round full sweep (`python scripts/check_oracle.py` at sf0.001 /
-0.01 / 0.1, summarized in each `ROUND*_NOTES.md`).
+Each query is one `(query function, oracle)` line of the `REGISTRY`
+tuple in `otters_spark/suite.py`, so every query has a DuckDB oracle.
+{dynamic} generate their oracle SQL from the data in `sf_dir`.
 
-| # | query | check | demonstrates |
-|---|---|---|---|
+**Frozen order:** rows 1-50 are the driver's correctness window. The
+driver records exactly the FIRST 50 registry entries each round. Do
+NOT reorder the tuple: a reorder swaps which queries get driver rows
+and breaks comparison of `CORRECTNESS_r*.json` across rounds. Rows 51+
+are covered by the full sweep (`python scripts/check_oracle.py` at
+sf0.001 / 0.01 / 0.1).
+
+| # | query | demonstrates |
+|---|---|---|
 """
 
 
@@ -43,10 +43,10 @@ def first_sentence(doc: str | None) -> str:
 
 
 def main() -> None:
-    out = [HEADER]
+    dynamic = " and ".join(f"`{name}`" for name in DYNAMIC_ORACLES)
+    out = [HEADER.format(dynamic=dynamic)]
     for i, (name, fn) in enumerate(QUERIES.items(), 1):
-        check = "DuckDB oracle" if name in ORACLE_SQL else "rows-only"
-        out.append(f"| {i} | `{name}` | {check} | {first_sentence(fn.__doc__)} |\n")
+        out.append(f"| {i} | `{name}` | {first_sentence(fn.__doc__)} |\n")
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                         "docs", "QUERIES.md")
     with open(path, "w") as f:

@@ -1,16 +1,16 @@
 #!/usr/bin/env python
-"""Round-11 optimization measurement harness.
+"""Per-query measurement harness.
 
 Times selected suite queries exactly the way bench.py does (noop sink,
 min-of-N reps, local[$SPARK_GRAFT_CPUS], shuffle_partitions=cpus) and
-optionally dumps .explain("formatted") for each to plans/r11/.
+optionally dumps .explain("formatted") for each.
 
 Usage:
-    python scripts/r11_measure.py [--reps N] [--explain SUFFIX] query ...
-    python scripts/r11_measure.py --top 30          # 30 slowest from BENCH_FULL.json
+    python scripts/measure.py [--reps N] [--explain DIR] query ...
+    python scripts/measure.py --top 30          # 30 slowest from BENCH_FULL.json
 
-With --explain SUFFIX each query's formatted plan is written to
-plans/r11/<query>_<SUFFIX>.txt (e.g. SUFFIX=before / after).
+With --explain DIR each query's formatted plan is written to
+DIR/<query>.txt (e.g. DIR=plans/r13/before, then plans/r13/after).
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     args = sys.argv[1:]
     reps = 2
-    explain_suffix = None
+    plans_dir = None
     names: list[str] = []
     top_n = 0
     i = 0
@@ -35,7 +35,7 @@ def main() -> int:
         if a == "--reps":
             reps = int(args[i + 1]); i += 2
         elif a == "--explain":
-            explain_suffix = args[i + 1]; i += 2
+            plans_dir = args[i + 1]; i += 2
         elif a == "--top":
             top_n = int(args[i + 1]); i += 2
         else:
@@ -59,7 +59,7 @@ def main() -> int:
     from otters_spark.suite import QUERIES
 
     spark = get_spark(
-        app_name="r11-measure",
+        app_name="measure",
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),
     )
@@ -68,8 +68,8 @@ def main() -> int:
     # warm JVM/codegen with the cheapest stable plan
     QUERIES["vs_dot_topk"](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    plans_dir = os.path.join(here, "plans", "r11")
-    os.makedirs(plans_dir, exist_ok=True)
+    if plans_dir:
+        os.makedirs(plans_dir, exist_ok=True)
 
     out: dict[str, float | None] = {}
     import gc
@@ -78,18 +78,18 @@ def main() -> int:
             print(f"?? unknown query {name}", file=sys.stderr)
             continue
         fn = QUERIES[name]
-        if explain_suffix:
+        if plans_dir:
             try:
                 plan = fn(spark, sf_dir)
                 txt = plan._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
                 )
-                with open(os.path.join(plans_dir, f"{name}_{explain_suffix}.txt"), "w") as f:
+                with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
                     f.write(txt)
             except Exception as e:
                 print(f"explain {name} failed: {e}", file=sys.stderr)
         best = None
-        spark.sparkContext.setJobDescription(f"r11:{name}")
+        spark.sparkContext.setJobDescription(f"measure:{name}")
         for _ in range(reps):
             t0 = time.perf_counter()
             try:

@@ -67,6 +67,18 @@ def test_union_of_filters_is_bit_or(spark):
     assert direct.exceptAll(merged).count() == 0
 
 
+def test_probe_against_union_of_filters_keeps_one_row_per_input(spark):
+    # unioned word tables repeat word_idx; the probe must not multiply
+    # rows, and members of either filter must probe true
+    a = _members(spark, 50)
+    b = spark.range(50).select(F.concat(F.lit("other-"), F.col("id")).alias("v"))
+    union = bloom_build(a, "v", M, K).union(bloom_build(b, "v", M, K))
+    out = bloom_probe(a.union(b), "v", union, M, K).collect()
+    assert len(out) == 100
+    assert len({r["v"] for r in out}) == 100
+    assert all(r["maybe_member"] for r in out)
+
+
 def test_probe_preserves_rows_and_nulls_probe_false(spark):
     members = _members(spark, 10)
     filt = bloom_build(members, "v", M, K)

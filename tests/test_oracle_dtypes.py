@@ -13,16 +13,17 @@ action), so the whole sweep costs seconds, not a full 73-query run.
 
 from __future__ import annotations
 
-import duckdb
+import hashlib
+import json
+import os
+
 import pytest
 from pyspark.sql import types as T
 
-from otters_spark.suite import ORACLE_SQL, QUERIES
+import otters_spark.suite as suite
+from otters_spark.suite import DYNAMIC_ORACLES, ORACLE_SQL, QUERIES
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _duck_class(t: str) -> str:
@@ -67,9 +68,7 @@ def _spark_class(dt: T.DataType) -> str:
 
 @pytest.fixture(scope="module")
 def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = suite.oracle_connection(sf_dir)
     yield con
     con.close()
 
@@ -95,3 +94,37 @@ def test_oracle_dtype_parity(name, spark, sf_dir, duck):
         f"{name}: dtype class mismatch (driver hash would differ even on "
         f"equal values): {mismatches}"
     )
+
+
+# ------------------------------------------------ driver contract (no Spark)
+
+
+def test_driver_window_order_matches_recorded_rounds():
+    # the driver records the first 50 registry entries; its latest
+    # record fixes their order
+    with open(os.path.join(REPO, "CORRECTNESS_r12.json")) as f:
+        recorded = list(json.load(f))
+    assert len(recorded) == 50
+    assert list(QUERIES)[:50] == recorded
+
+
+def test_driver_query_order_is_frozen():
+    digest = hashlib.sha256("\n".join(QUERIES).encode()).hexdigest()
+    assert len(QUERIES) == len(suite.REGISTRY) == 220
+    assert digest == (
+        "3d719fb2630e5b467649d6d023d844b6befbc995023db4b26293ae847cdf81c0"
+    )
+
+
+def test_every_query_has_an_oracle():
+    assert set(ORACLE_SQL) | set(DYNAMIC_ORACLES) == set(QUERIES)
+
+
+def test_every_module_sql_constant_is_a_registered_oracle():
+    registered = {oracle for _, oracle in suite.REGISTRY}
+    orphans = [
+        name for name, value in vars(suite).items()
+        if name.endswith("_SQL") and isinstance(value, str)
+        and value not in registered
+    ]
+    assert not orphans

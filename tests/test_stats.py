@@ -167,20 +167,21 @@ def test_robust_outliers_basic(spark):
 def test_robust_outliers_fused_mad_stats_are_exact(spark):
     """Round-12 fusion: the MAD pass derives its binning stats
     algebraically (0 <= |v-med| <= max(mx-med, med-mn), n unchanged)
-    instead of a second corpus stats pass. Loose bounds must not move
-    a bit: engineer groups where the derived upper bound is strictly
-    looser than the true max residual (two-sided extremes), plus the
+    instead of a second corpus stats pass. The derived upper bound is
+    always the exact max residual; only the lower bound 0 can be loose,
+    when no value equals the median. Loose bounds must not move a bit:
+    pin against direct computation on two-sided extremes, the
     degenerate all-equal group (zero-width residual range) and an
-    even-count group (interpolated MAD), and pin against direct
-    computation."""
+    even-count group (interpolated MAD, loose lower bound)."""
     import statistics
 
     from otters_spark.operators.stats import robust_outliers
 
     groups = {
-        # derived bound = max(1000-2, 2-(-1000)) = 1002 > true max 998
+        # derived bound = max(1000-2, 2-(-1000)) = 1002 = true max
         "two_sided": [-1000.0, 1.0, 2.0, 3.0, 1000.0],
         "all_equal": [7.0, 7.0, 7.0],
+        # median 3 is not a value: derived min 0 < true min residual 1
         "even_interp": [1.0, 2.0, 4.0, 8.0],
     }
     rows = [(g, v) for g, vs in groups.items() for v in vs]

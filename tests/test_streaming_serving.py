@@ -88,7 +88,8 @@ def test_serve_query_stream_topk(spark, sf_dir, tmp_path):
 # --- every metric × every entry point against one exact NumPy top-k ---
 
 _NAN = float("nan")
-# id 8 is a NULL vector, id 9 a NaN vector: no entry point may return them
+# id 8 is a NULL vector, ids 9 and 10 partly and wholly NaN vectors:
+# no entry point may return them, whatever the metric
 _ROWS = [
     [0.0, 0.0, 0.0, 0.0],
     [1.0, 0.0, 0.0, 0.0],
@@ -100,8 +101,9 @@ _ROWS = [
     [-1.0, 0.5, 0.0, 1.0],
     None,
     [_NAN, 0.0, 0.0, 0.0],
+    [_NAN] * 4,
 ]
-_BAD_IDS = {8, 9}
+_BAD_IDS = {8, 9, 10}
 _MATRIX_QUERIES = [[1.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 1.0]]
 _THRESHOLDS = {"dot": 1.0, "cosine": 0.5, "euclidean": 2.0,
                "manhattan": 2.0, "hamming": 2.0, "jaccard": 0.5}
@@ -113,6 +115,8 @@ def _np_score(metric, v, q):
     if v is None:
         return None
     v, q = np.asarray(v, dtype=np.float64), np.asarray(q, dtype=np.float64)
+    if np.isnan(v).any():  # the reference drops NaN scores
+        return None
     if metric == "dot":
         return float(v @ q)
     if metric == "cosine":
@@ -198,9 +202,11 @@ def test_every_entry_point_matches_numpy_topk(spark, matrix_store, metric, tmp_p
         sign = 1.0 if METRICS[metric] == "min" else -1.0
         return sorted(pairs(rows), key=lambda r: (sign * r[1], r[0]))
 
-    # plan API
+    # plan API; with k = every row, only the valid rows come back
     for qid, q in enumerate(qs):
         _assert_rows(pairs(matrix_store.query(q, metric).take(k).collect()), want[qid])
+        got = matrix_store.query(q, metric).take(len(_ROWS)).collect()
+        _assert_rows(pairs(got), _np_topk(metric, q, len(_ROWS)))
 
     # ANN entry points over the unvalidated index, every bucket/cell probed
     raw = matrix_store.df.drop("__inv_norm")
