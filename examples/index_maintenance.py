@@ -60,12 +60,11 @@ def main() -> int:
                 F.lit(qid).alias("query_id"), "vec_id", "score"
             )
         )
-        qlit = F.array(*[F.lit(float(x)) for x in q])
         exact_lanes.append(
             grown.select(
                 F.lit(qid).alias("query_id"),
                 "vec_id",
-                score_expr("embedding", qlit, "cosine").alias("score"),
+                score_expr("embedding", q, "cosine").alias("score"),
             )
             .orderBy(F.col("score").desc(), "vec_id")
             .limit(10)

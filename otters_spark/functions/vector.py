@@ -1,11 +1,15 @@
 """Vector scoring as native Catalyst expressions.
 
 Replaces the reference's SIMD scoring kernels (otters
-src/vec_compute.rs:9-54) with JVM-side higher-order functions —
-``zip_with`` + ``aggregate`` stay inside whole-stage codegen, so the hot
-loop never crosses into Python. All accumulation is in float64 (the
-reference accumulates f32; we compare against the DuckDB oracle at 1e-5,
-the reference's own test tolerance, tests/vec_store_tests.rs:158,586).
+src/vec_compute.rs:9-54) with JVM-side higher-order functions
+(``zip_with`` + ``aggregate``), so the hot loop never crosses into
+Python. They are not compiled by whole-stage codegen: Spark evaluates
+higher-order functions through ``CodegenFallback``, at about 20 µs per
+64-d pair (perfbench/README.md), so the number of kernel evaluations per
+(row, query) pair is what a plan shape costs. All accumulation is in
+float64 (the reference accumulates f32; we compare against the DuckDB
+oracle at 1e-5, the reference's own test tolerance,
+tests/vec_store_tests.rs:158,586).
 
 Semantics preserved:
 
@@ -15,21 +19,26 @@ Semantics preserved:
   0.0, never NaN (src/vec.rs:365-368, src/vec_compute.rs:25-32)
 * euclidean: **squared** distance, never sqrt'd (src/vec_compute.rs:35-54)
 
-Every vector search entry point scores and ranks through the one path at
-the end of this module: :func:`score_pairs` and :func:`rank_topk`.
+A kernel's query operand is a column name, a Column, or a vector given
+as a Python sequence, which is inlined as one ``array(…D)`` literal
+(:func:`vector_literal_sql`): a known query is a constant in the plan,
+never a relation to join. Every vector search entry point scores and
+ranks through the functions at the end of this module:
+:func:`score_queries` (known queries: one as a literal, several as a
+LocalRelation), :func:`score_pairs` (queries that are themselves a
+DataFrame) and :func:`rank_topk`.
 
-Scale note: for dim≈64 these codegen'd expressions are the fast path; an
-Arrow/pandas-UDF matmul path for very wide vectors lives in
-``otters_spark.operators.similarity``.
+Scale note: an Arrow/pandas-UDF matmul path for very wide vectors lives
+in ``otters_spark.operators.similarity``.
 """
 
 from __future__ import annotations
 
 import math
+import numbers
 from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 __all__ = [
@@ -43,8 +52,11 @@ __all__ = [
     "inv_norm_expr",
     "inv_norm_of",
     "score_expr",
+    "vector_literal_sql",
     "queries_df",
     "ranks_ascending",
+    "valid_score",
+    "score_queries",
     "score_pairs",
     "rank_topk",
     "per_query_topk",
@@ -76,30 +88,112 @@ METRICS = {
 }
 
 
-def _c(x) -> Column:
-    return x if isinstance(x, Column) else F.col(x)
+def _sql(x) -> str:
+    """SQL text of a kernel operand: a column name, a vector (any
+    sequence of numbers) as an inline literal, a number, or a Column,
+    embedded through the SQL text Spark prints for it — so a Column
+    operand must be one that prints as SQL (a column reference,
+    arithmetic, an ``F.expr``)."""
+    if isinstance(x, Column):
+        return f"({x._jc.toString()})"
+    if isinstance(x, str):
+        return x if "`" in x else "`" + x.replace(".", "`.`") + "`"
+    if isinstance(x, numbers.Real):
+        return _double_sql(x)
+    return vector_literal_sql(x)
+
+
+def _double_sql(x) -> str:
+    # repr round-trips every finite double (-0.0 included); NaN and
+    # ±∞ have no literal syntax, so they go through a string cast
+    if x is None:
+        return "CAST(NULL AS DOUBLE)"
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def vector_literal_sql(vec: Sequence[float] | None) -> str:
+    """SQL text of a vector as an ``array<double>`` literal, bit-exact
+    for every element (NULL, NaN and ±∞ included)."""
+    body = "NULL" if vec is None else "array(" + ", ".join(map(_double_sql, vec)) + ")"
+    return f"CAST({body} AS ARRAY<DOUBLE>)"
+
+
+# --- the kernels, rendered once as SQL text -------------------------------
+#
+# Each kernel is one SQL expression over operand texts (see _sql), so a
+# scoring expression costs one parse instead of a py4j round-trip per
+# lambda, cast and operator; the public *_expr functions wrap it in
+# F.expr. Lanes are cast to double, so every metric accumulates in
+# float64 whatever the stored element type.
+
+_X, _Y = "CAST(x AS DOUBLE)", "CAST(y AS DOUBLE)"
+
+
+def _lane_sum(a: str, b: str, lane: str, zero: str = "0.0D") -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> {lane}), {zero}, (acc, x) -> acc + x)"
+
+
+def _guarded_count(a: str, b: str, cond: str) -> str:
+    """Count of lanes where ``cond`` holds, as int64 — but a lane where
+    either side is NULL or NaN is NULL, so a ragged (zip_with
+    NULL-padded) or null-element input propagates NULL through the sum
+    instead of silently counting the padded lanes (SQL 3VL would send
+    the NULL comparison to the ELSE branch 0), and a NaN coordinate
+    gives a NULL score, which ranking drops, as the arithmetic metrics'
+    NaN scores are dropped. Shared by hamming and jaccard; manhattan
+    gets the same behavior from arithmetic NULL/NaN propagation."""
+    lane = (
+        f"CASE WHEN x IS NULL OR y IS NULL OR isnan({_X}) OR isnan({_Y}) "
+        f"THEN CAST(NULL AS BIGINT) ELSE CAST(CASE WHEN {cond} THEN 1 ELSE 0 END AS BIGINT) END"
+    )
+    return _lane_sum(a, b, lane, "0L")
+
+
+def _inv_norm_sql(v: str) -> str:
+    norm = f"sqrt(aggregate(transform({v}, x -> {_X} * {_X}), 0.0D, (acc, x) -> acc + x))"
+    return f"CASE WHEN {norm} = 0.0D THEN 0.0D ELSE 1.0D / {norm} END"
+
+
+def _kernel_sql(metric: str, a: str, b: str, inv_a: str | None = None,
+                inv_b: str | None = None) -> str:
+    """The one renderer of score arithmetic: ``metric`` of the operand
+    texts ``a`` (store side) and ``b`` (query side). Cosine multiplies
+    the dot product by the given inverse-norm texts, computing a missing
+    one in place."""
+    if metric == "dot":
+        return _lane_sum(a, b, f"{_X} * {_Y}")
+    if metric == "cosine":
+        inv_a = inv_a or _inv_norm_sql(a)
+        inv_b = inv_b or _inv_norm_sql(b)
+        return f"{_kernel_sql('dot', a, b)} * {inv_a} * {inv_b}"
+    if metric == "euclidean":
+        return _lane_sum(a, b, f"({_X} - {_Y}) * ({_X} - {_Y})")
+    if metric == "manhattan":
+        return _lane_sum(a, b, f"abs({_X} - {_Y})")
+    if metric == "hamming":
+        return f"CAST({_guarded_count(a, b, 'x != y')} AS DOUBLE)"
+    if metric == "jaccard":
+        inter = _guarded_count(a, b, "(x != 0) AND (y != 0)")
+        union = _guarded_count(a, b, "(x != 0) OR (y != 0)")
+        return (f"CASE WHEN {union} = 0 THEN 0.0D "
+                f"ELSE CAST({inter} AS DOUBLE) / CAST({union} AS DOUBLE) END")
+    raise ValueError(f"unknown metric {metric!r}; expected one of {sorted(METRICS)}")
 
 
 def dot_expr(a, b) -> Column:
-    """Dot product of two array columns, accumulated in float64
+    """Dot product of two vector operands, accumulated in float64
     (reference: src/vec_compute.rs:9-22)."""
-    return F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
+    return F.expr(_kernel_sql("dot", _sql(a), _sql(b)))
 
 
 def inv_norm_expr(v) -> Column:
     """Inverse L2 norm; 0.0 for the zero vector (src/vec.rs:365-368)."""
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(_c(v), lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-    )
-    return F.when(norm == 0.0, F.lit(0.0)).otherwise(F.lit(1.0) / norm)
+    return F.expr(_inv_norm_sql(_sql(v)))
 
 
 def inv_norm_of(vec: Sequence[float]) -> float:
@@ -111,66 +205,25 @@ def inv_norm_of(vec: Sequence[float]) -> float:
 
 
 def cosine_expr(a, b, inv_norm_a, inv_norm_b) -> Column:
-    """Cosine similarity from precomputed inverse norms
-    (src/vec_compute.rs:25-32). Zero-norm vectors score 0.0 by
-    construction (inv_norm stored as 0.0)."""
-    ia = inv_norm_a if isinstance(inv_norm_a, Column) else F.lit(float(inv_norm_a))
-    ib = inv_norm_b if isinstance(inv_norm_b, Column) else F.lit(float(inv_norm_b))
-    return dot_expr(a, b) * ia * ib
+    """Cosine similarity from precomputed inverse norms (a column name,
+    a Column or a float each; src/vec_compute.rs:25-32). Zero-norm
+    vectors score 0.0 by construction (inv_norm stored as 0.0)."""
+    return F.expr(_kernel_sql("cosine", _sql(a), _sql(b), _sql(inv_norm_a), _sql(inv_norm_b)))
 
 
 def euclidean_sq_expr(a, b) -> Column:
     """Squared euclidean distance — squared on purpose, matching the
     reference exactly (src/vec_compute.rs:35-54; test
     tests/vec_store_tests.rs:636-656)."""
-    return F.aggregate(
-        F.zip_with(
-            _c(a),
-            _c(b),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
+    return F.expr(_kernel_sql("euclidean", _sql(a), _sql(b)))
 
 
 def manhattan_expr(a, b) -> Column:
     """L1 (Manhattan) distance — the reference's roadmap metric
     (README.md:209). Like the other kernels: zip_with + aggregate in
-    float64, inside whole-stage codegen."""
-    return F.aggregate(
-        F.zip_with(
-            _c(a),
-            _c(b),
-            lambda x, y: F.abs(x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _null_guarded_lane(cond):
-    """Lane combinator for zip_with kernels that count matches: maps a
-    (x, y) predicate to 1/0 as int64, but NULLs the lane when either
-    side is NULL or NaN — so a ragged (zip_with NULL-padded) or
-    null-element input propagates NULL through the sum instead of
-    silently counting the padded lanes (SQL 3VL would send the NULL
-    comparison to the otherwise-branch 0), and a NaN coordinate gives
-    a NULL score, which ranking drops, as the arithmetic metrics' NaN
-    scores are dropped. Shared by hamming and jaccard; manhattan gets
-    the same behavior from arithmetic NULL/NaN propagation for free."""
-
-    def lane(x, y):
-        return F.when(
-            x.isNull() | y.isNull()
-            | F.isnan(x.cast("double")) | F.isnan(y.cast("double")),
-            F.lit(None).cast("long"),
-        ).otherwise(
-            F.when(cond(x, y), F.lit(1)).otherwise(F.lit(0)).cast("long")
-        )
-
-    return lane
+    float64, evaluated through CodegenFallback (see the module
+    docstring)."""
+    return F.expr(_kernel_sql("manhattan", _sql(a), _sql(b)))
 
 
 def hamming_expr(a, b) -> Column:
@@ -181,15 +234,11 @@ def hamming_expr(a, b) -> Column:
     so every metric scores as one column type.
 
     Length-mismatched (ragged) inputs score NULL, not a silent
-    undercount — see :func:`_null_guarded_lane`. VecStore's dim
+    undercount — see :func:`_guarded_count`. VecStore's dim
     validation prevents ragged rows at ingest; the guard covers direct
-    users of the public function, and the plan layer drops NULL scores
+    users of the public function, and ranking drops NULL scores
     alongside NaN so a guarded row can never occupy a top-k slot."""
-    return F.aggregate(
-        F.zip_with(_c(a), _c(b), _null_guarded_lane(lambda x, y: x != y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    ).cast("double")
+    return F.expr(_kernel_sql("hamming", _sql(a), _sql(b)))
 
 
 def jaccard_expr(a, b) -> Column:
@@ -201,80 +250,75 @@ def jaccard_expr(a, b) -> Column:
 
     Length-mismatched (ragged) inputs score NULL rather than silently
     miscounting the zip_with NULL-padded lanes — the shared
-    :func:`_null_guarded_lane` guard."""
-    inter = F.aggregate(
-        F.zip_with(
-            _c(a), _c(b), _null_guarded_lane(lambda x, y: (x != 0) & (y != 0))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    union = F.aggregate(
-        F.zip_with(
-            _c(a), _c(b), _null_guarded_lane(lambda x, y: (x != 0) | (y != 0))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return F.when(union == 0, F.lit(0.0)).otherwise(
-        inter.cast("double") / union.cast("double")
-    )
+    :func:`_guarded_count` guard."""
+    return F.expr(_kernel_sql("jaccard", _sql(a), _sql(b)))
 
 
 def score_expr(vec_col, q_col, metric: str, inv_norm_col=None, q_inv_norm=None) -> Column:
     """Score expression for one (store-vector, query-vector) pair.
 
-    ``inv_norm_col`` is the store's precomputed inverse-norm column;
-    ``q_inv_norm`` the query's (Column or float). Both required for
-    cosine — precomputing them is the engine's analog of the reference's
-    ingest-time norm precompute (src/vec.rs:365-368).
+    ``q_col`` is a column name, a Column, or the query vector itself
+    (inlined as a literal). ``inv_norm_col`` is the store's precomputed
+    inverse-norm column; ``q_inv_norm`` the query's (Column or float).
+    Cosine computes a missing one in place — a literal query's on the
+    driver with :func:`inv_norm_of`, hoisted once per query. Precomputing
+    them is the engine's analog of the reference's ingest-time norm
+    precompute (src/vec.rs:365-368).
     """
-    if metric == "dot":
-        return dot_expr(vec_col, q_col)
-    if metric == "cosine":
-        ia = _c(inv_norm_col) if inv_norm_col is not None else inv_norm_expr(vec_col)
-        ib = q_inv_norm if q_inv_norm is not None else inv_norm_expr(q_col)
-        return cosine_expr(vec_col, q_col, ia, ib)
-    if metric == "euclidean":
-        return euclidean_sq_expr(vec_col, q_col)
-    if metric == "manhattan":
-        return manhattan_expr(vec_col, q_col)
-    if metric == "hamming":
-        return hamming_expr(vec_col, q_col)
-    if metric == "jaccard":
-        return jaccard_expr(vec_col, q_col)
-    raise ValueError(f"unknown metric {metric!r}; expected one of {sorted(METRICS)}")
+    if q_inv_norm is None and metric == "cosine" and not isinstance(q_col, (str, Column)):
+        # a NULL vector or element makes every score NULL whatever this is
+        nulls = q_col is None or any(x is None for x in q_col)
+        q_inv_norm = 0.0 if nulls else inv_norm_of(q_col)
+    return F.expr(_kernel_sql(
+        metric, _sql(vec_col), _sql(q_col),
+        None if inv_norm_col is None else _sql(inv_norm_col),
+        None if q_inv_norm is None else _sql(q_inv_norm),
+    ))
 
 
-_QUERY_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.IntegerType(), False),
-        T.StructField("qvec", T.ArrayType(T.DoubleType(), False), False),
-        T.StructField("q_inv_norm", T.DoubleType(), False),
-    ]
-)
-
-
-def queries_df(spark: SparkSession, queries: Iterable[Sequence[float]]) -> DataFrame:
-    """Materialize a query batch as a tiny DataFrame (broadcast side of
-    the scoring join). Mirrors ``QueryBatch`` (src/vec.rs:320-336) with
-    per-query inverse norms hoisted driver-side."""
+def queries_df(
+    spark: SparkSession,
+    queries: Iterable[Sequence[float]],
+    ids: Sequence[Column] | None = None,
+) -> DataFrame:
+    """Materialize a query batch as a tiny DataFrame
+    (``query_id, qvec array<double>, q_inv_norm double``) for
+    callers that join queries to rows. Mirrors ``QueryBatch``
+    (src/vec.rs:320-336) with per-query inverse norms hoisted
+    driver-side. ``query_id`` is 0..n-1 (int), or ``ids`` — one typed
+    literal Column per query — when given. The batch is an inline
+    ``VALUES`` table, so it plans as a LocalRelation, not a Python RDD:
+    building it starts no Python worker."""
     rows = [
-        (i, [float(x) for x in q], inv_norm_of(q)) for i, q in enumerate(queries)
+        f"({i}, {vector_literal_sql(q)}, {_double_sql(inv_norm_of(q))})"
+        for i, q in enumerate(queries)
     ]
-    return spark.createDataFrame(rows, _QUERY_SCHEMA)
+    if not rows:
+        raise ValueError("queries_df needs at least one query")
+    qdf = spark.sql(
+        f"SELECT * FROM VALUES {', '.join(rows)} AS t(query_id, qvec, q_inv_norm)"
+    )
+    if ids is not None:
+        qdf = qdf.withColumn("query_id", F.element_at(F.array(*ids), F.col("query_id") + 1))
+    return qdf
 
 
 # --- the one scoring-and-ranking path ----------------------------------
 #
 # Every vector search entry point (plan API, serving, LSH/IVF/PQ/binary
-# ANN, the pandas matmul merge) ranks through :func:`rank_topk`, and
-# every broadcast-queries × store scoring goes through
-# :func:`score_pairs`. The ranking rule is the reference's: direction
-# from METRICS (src/vec.rs:92-98), NaN scores dropped
-# (src/vec_compute.rs:236-239) — NULL with them, since a NULL score
-# would sort first under ascending order — and ties broken on id
+# ANN, the pandas matmul merge) ranks through :func:`rank_topk`. Known
+# query vectors are scored by :func:`score_queries`, a DataFrame of
+# queries by :func:`score_pairs`. The ranking rule is the reference's:
+# direction from METRICS (src/vec.rs:92-98), NaN scores dropped
+# (src/vec_compute.rs:236-239) — NULL with them — and ties broken on id
 # ascending so results are reproducible.
+#
+# No filter on the score sits between the scoring projection and the
+# limit or window: Catalyst pushes such a filter below the projection
+# (and into a join condition), where each reference to the score
+# re-evaluates the kernel. Invalid scores rank last instead and are
+# dropped after the limit — exact, because an invalid row reaches the
+# top k only when fewer than k valid rows exist.
 
 
 def ranks_ascending(metric: str, direction: str | None = None) -> bool:
@@ -288,9 +332,47 @@ def ranks_ascending(metric: str, direction: str | None = None) -> bool:
     return d == "min"
 
 
-def _valid_score(score_col: str) -> Column:
-    # isnan(NULL) is false, so NULL needs its own test
-    return F.col(score_col).isNotNull() & ~F.isnan(F.col(score_col))
+def _nan_to_null(score: Column) -> Column:
+    return F.nanvl(score, F.lit(None).cast("double"))
+
+
+def valid_score(score_col: str) -> Column:
+    """True for a real score: not NULL, not NaN (±∞ are real scores).
+    Reads the score once, so a pushed-down copy re-runs its kernel once."""
+    return _nan_to_null(F.col(score_col)).isNotNull()
+
+
+def score_queries(
+    candidates: DataFrame,
+    queries: Sequence[Sequence[float] | None],
+    metric: str,
+    vec_col: str,
+    query_ids: Sequence[Column] | None = None,
+    query_col: str = "query_id",
+) -> DataFrame:
+    """Every candidate row scored against each of ``queries``, given as
+    vectors: the candidates' columns plus ``score`` (replacing any
+    candidate column of that name) and ``query_col`` (``query_ids``,
+    typed literal Columns, default 0..n-1). One query is inlined as a
+    literal in one projection: no join, no query relation, one kernel
+    evaluation per row; it gets ``query_col`` only when ``query_ids``
+    is given. Several are a :func:`queries_df` LocalRelation crossed
+    with the candidates by :func:`score_pairs` (which also carries
+    ``qvec`` and ``q_inv_norm``). Inverse norms are the candidates'
+    stored :data:`INV_NORM_COL` when present and each query's, hoisted
+    on the driver. Invalid scores are kept; :func:`rank_topk` ranks
+    them last and drops them."""
+    candidates = candidates.drop("score")
+    if len(queries) != 1:
+        scored = score_pairs(
+            candidates, queries_df(candidates.sparkSession, queries, query_ids),
+            metric, vec_col,
+        )
+        return scored.withColumnRenamed("query_id", query_col)
+    inv = INV_NORM_COL if INV_NORM_COL in candidates.columns else None
+    cols = {} if query_ids is None else {query_col: query_ids[0]}
+    cols["score"] = score_expr(vec_col, queries[0], metric, inv_norm_col=inv)
+    return candidates.withColumns(cols)
 
 
 def score_pairs(
@@ -302,21 +384,23 @@ def score_pairs(
 ) -> DataFrame:
     """Every candidate row crossed with every query row (the query
     batch broadcasts — it is the small side) plus a ``score`` column
-    from :func:`score_expr`. Inverse norms are the stored ones: the
+    from :func:`score_expr`: the form for queries that are themselves a
+    DataFrame (a stream, or rows of a table); known vectors go through
+    :func:`score_queries`. Inverse norms are the stored ones: the
     candidates' :data:`INV_NORM_COL` when present, the queries'
     ``q_inv_norm`` column (as :func:`queries_df` builds it), each
-    computed in place when absent. NULL/NaN scores are dropped here,
-    so score filters and survivor counts downstream see valid scores
-    only. All columns of both sides are carried through."""
+    computed in place when absent. Invalid (NULL/NaN) scores are kept:
+    :func:`rank_topk` drops them, and a caller that does not rank
+    filters on :func:`valid_score`. All columns of both sides are
+    carried through."""
     if "q_inv_norm" not in queries.columns:
         queries = queries.withColumn("q_inv_norm", inv_norm_expr(qvec_col))
     inv = INV_NORM_COL if INV_NORM_COL in candidates.columns else None
-    scored = candidates.crossJoin(F.broadcast(queries)).withColumn(
+    return candidates.crossJoin(F.broadcast(queries)).withColumn(
         "score",
         score_expr(vec_col, qvec_col, metric, inv_norm_col=inv,
                    q_inv_norm=F.col("q_inv_norm")),
     )
-    return scored.filter(_valid_score("score"))
 
 
 def rank_topk(
@@ -329,21 +413,28 @@ def rank_topk(
     direction: str | None = None,
 ) -> DataFrame:
     """Top-``k`` of an already-scored frame by the engine's one ranking
-    rule: NULL/NaN scores dropped, direction from :func:`ranks_ascending`,
-    ties on ``id_col`` ascending. With ``query_col=None`` the ranking is
-    global — ``ORDER BY … LIMIT k``, planned as TakeOrderedAndProject
-    (per-partition bounded heaps + a driver merge, the distributed
-    TopKCollector of src/vec_compute.rs:77-294); ``k=None`` keeps every
-    row, sorted. Otherwise each ``query_col`` group keeps its own top-k
-    through :func:`per_query_topk`. All input columns are carried
-    through."""
+    rule: direction from :func:`ranks_ascending`, ties on ``id_col``
+    ascending, NULL/NaN scores ranked last and dropped after the limit
+    (so fewer than ``k`` rows come back when fewer are valid). With
+    ``query_col=None`` the ranking is global — ``ORDER BY … LIMIT k``,
+    planned as TakeOrderedAndProject (per-partition bounded heaps + a
+    merge, the distributed TopKCollector of src/vec_compute.rs:77-294);
+    ``k=None`` keeps every valid row, sorted. Otherwise each
+    ``query_col`` group keeps its own top-k through a row-number window
+    planned as WindowGroupLimit (see :func:`per_query_topk`). All input
+    columns are carried through."""
     ascending = ranks_ascending(metric, direction)
-    valid = scored.filter(_valid_score(score_col))
+    key = _nan_to_null(F.col(score_col))
+    order = [key.asc_nulls_last() if ascending else key.desc_nulls_last(),
+             F.col(id_col).asc()]
     if query_col is not None:
-        return per_query_topk(valid, k, query_col, score_col, id_col, ascending)
-    first = F.col(score_col).asc_nulls_last() if ascending else F.col(score_col).desc()
-    out = valid.orderBy(first, F.col(id_col).asc())
-    return out if k is None else out.limit(k)
+        check_per_query_k(scored.sparkSession, k)
+        ranked = _limit_per_group(scored, k, query_col, order)
+    else:
+        ranked = scored.orderBy(*order)
+        if k is not None:
+            ranked = ranked.limit(k)
+    return ranked.filter(valid_score(score_col))
 
 
 def per_query_topk(
@@ -371,14 +462,18 @@ def per_query_topk(
     query key is its own group, NaN sorts as the largest double, NULL
     scores sort last under DESC / first under ASC — identical to the
     naive window, asserted in tests/test_similarity.py. Callers that
-    rank vector scores go through :func:`rank_topk`, which drops
-    NULL/NaN scores first.
+    rank vector scores go through :func:`rank_topk`, which ranks
+    NULL/NaN scores last and drops them.
 
     Ordering: ``score_col`` desc (asc when ``ascending``), then
     ``id_col`` asc. All input columns are carried through."""
     check_per_query_k(scored.sparkSession, k)
     direction = F.col(score_col).asc() if ascending else F.col(score_col).desc()
-    w = Window.partitionBy(query_col).orderBy(direction, F.col(id_col).asc())
+    return _limit_per_group(scored, k, query_col, [direction, F.col(id_col).asc()])
+
+
+def _limit_per_group(scored: DataFrame, k: int, group_col: str, order: list) -> DataFrame:
+    w = Window.partitionBy(group_col).orderBy(*order)
     return (
         scored.withColumn("__pqk_rn", F.row_number().over(w))
         .filter(F.col("__pqk_rn") <= k)

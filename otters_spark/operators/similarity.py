@@ -3,7 +3,8 @@
 Three tiers, trading exactness for scale:
 
 * **brute-force** (exact, the reference's own semantics) — the fluent
-  plan in ``otters_spark.plan``; scoring is codegen'd JVM expressions.
+  plan in ``otters_spark.plan``; scoring is JVM higher-order-function
+  expressions with the query inlined as a literal.
   Exact and embarrassingly parallel: at 100 TB it is one scan, no
   shuffle, top-k via per-partition bounded heaps.
 * **pandas/Arrow matmul** — same exact math through ``mapInPandas`` +
@@ -345,12 +346,11 @@ def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> np.ndarray:
 
 
 def lsh_bucket_expr(vec_col: str, planes: np.ndarray) -> F.Column:
-    """Signature bucket id: bit p = sign(dot(v, plane_p)). Pure
-    codegen — each plane is a literal array folded with zip_with."""
+    """Signature bucket id: bit p = sign(dot(v, plane_p)). JVM-only —
+    each plane is a literal array folded with zip_with."""
     bucket = F.lit(0).cast("long")
     for p, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(dot_expr(vec_col, lit_plane) >= 0, F.lit(1 << p)).otherwise(
+        bit = F.when(dot_expr(vec_col, plane) >= 0, F.lit(1 << p)).otherwise(
             F.lit(0)
         )
         bucket = bucket + bit
@@ -421,16 +421,9 @@ def lsh_search(
 
     q = np.asarray(list(map(float, query)), dtype=np.float64)
     buckets = _query_buckets(q, planes, multiprobe)
-    qlit = F.array(*[F.lit(float(x)) for x in q])
-    inv_norm = (
-        F.col(INV_NORM_COL)
-        if INV_NORM_COL in indexed.columns
-        else None
-    )
+    inv_norm = INV_NORM_COL if INV_NORM_COL in indexed.columns else None
     cand = indexed.filter(F.col("lsh_bucket").isin(buckets))
-    score = score_expr(
-        vec_col, qlit, metric, inv_norm_col=inv_norm, q_inv_norm=inv_norm_of(q)
-    )
+    score = score_expr(vec_col, q, metric, inv_norm_col=inv_norm)
     if round_to is not None:
         score = F.round(score, round_to)
     return rank_topk(cand.withColumn("score", score), k, metric, id_col).select(
@@ -636,17 +629,7 @@ def ivf_assign(
     principle land differently — irrelevant for recall (either cell is
     equally good) and unobserved on real data, but don't build logic
     on bit-identical parity with MLlib at ties."""
-    def d2(c: np.ndarray):
-        clit = F.array(*[F.lit(float(x)) for x in c])
-        return F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                clit,
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
+    from ..functions.vector import euclidean_sq_expr
 
     # distances materialized as ONE array column before the argmin —
     # array_position(min) references the array twice, and HOF
@@ -654,7 +637,9 @@ def ivf_assign(
     # an inlined form would score every centroid twice per row.
     # Ties resolve to the LOWEST cell id (array_position finds the
     # first match) — deterministic.
-    with_d = df.withColumn("__ivf_d", F.array(*[d2(c) for c in centroids]))
+    with_d = df.withColumn(
+        "__ivf_d", F.array(*[euclidean_sq_expr(vec_col, c) for c in centroids])
+    )
     return with_d.withColumn(
         "ivf_cell",
         (
@@ -683,11 +668,8 @@ def ivf_search(
     # same tie-break the SQL twin's ORDER BY (distance, cell) applies
     # (numpy's default introsort is NOT stable)
     cells = [int(c) for c in np.argsort(d2, kind="stable")[:nprobe]]
-    qlit = F.array(*[F.lit(float(x)) for x in q])
     cand = assigned.filter(F.col("ivf_cell").isin(cells))
-    scored = cand.withColumn(
-        "score", score_expr(vec_col, qlit, metric, q_inv_norm=inv_norm_of(q))
-    )
+    scored = cand.withColumn("score", score_expr(vec_col, q, metric))
     return rank_topk(scored, k, metric, id_col).select(id_col, "score", "ivf_cell")
 
 
@@ -980,10 +962,8 @@ def pq_search(
         scored, max(rerank, k), metric, id_col, score_col="approx_score"
     ).select(id_col, "approx_score")
     qflat = [float(x) for x in np.asarray(query, dtype=np.float64).ravel()]
-    qlit = F.array(*[F.lit(x) for x in qflat])
     exact = store.join(F.broadcast(cand), id_col).withColumn(
-        "score",
-        score_expr(vec_col, qlit, metric, q_inv_norm=inv_norm_of(np.asarray(qflat))),
+        "score", score_expr(vec_col, qflat, metric)
     )
     return rank_topk(exact, k, metric, id_col).select(id_col, "score", "approx_score")
 
@@ -1095,8 +1075,7 @@ def binary_search(
     )
     from ..functions.vector import cosine_expr, inv_norm_expr
 
-    qlit = F.array(*[F.lit(x) for x in q])
-    score = cosine_expr(vec_col, qlit, inv_norm_expr(vec_col), inv_norm_of(q))
+    score = cosine_expr(vec_col, q, inv_norm_expr(vec_col), inv_norm_of(q))
     if round_to is not None:
         score = F.round(score, round_to)
     return rank_topk(cand.withColumn("score", score), k, "cosine", id_col).drop(bits_col)

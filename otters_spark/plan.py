@@ -6,14 +6,16 @@ Reference lifecycle (SURVEY.md §3):
 
 Spark realization is a single declarative pipeline::
 
-    store.filter(meta_pred)                  # ← Catalyst pushes into scan
-         .crossJoin(broadcast(query_batch))  # ┐ functions.vector.score_pairs:
-         .withColumn('score', <codegen expr>)# │ tiny broadcast side,
-         .filter(~isnan(score))              # ┘ NULL/NaN scores dropped
-         .filter(score CMP t)
-         .orderBy(score).limit(k)            # ← rank_topk: TakeOrderedAndProject
+    store.filter(meta_pred)                          # ← pushed into the scan
+         .withColumn('score', kernel(vec, array(…D)))    # ← score_queries
+         .withColumn('score', when(score CMP t, score))  # ← vec_filter
+         .orderBy(score NULLS LAST, id).limit(k)     # ┐ rank_topk: NaN ranks as
+         .filter(score is not NULL/NaN)              # ┘ NULL, dropped after limit
 
-so the reference's hand-built machinery maps 1:1 onto planner features:
+The query is a literal, so there is no join and no query relation, and
+the kernel runs once per row; several queries are a ``VALUES``
+LocalRelation crossed with the rows (broadcast, no Python RDD). The
+reference's hand-built machinery maps 1:1 onto planner features:
 chunk pruning = row-group pruning (src/meta.rs:646-660), rayon chunk
 parallelism = task parallelism (src/meta.rs:678-709), TopKCollector's
 adaptive threshold = per-partition bounded priority queue in
@@ -31,6 +33,7 @@ are reproducible and oracle-comparable.
 
 from __future__ import annotations
 
+import functools
 import time
 from dataclasses import dataclass
 from typing import Any
@@ -45,7 +48,7 @@ from .errors import (
     PlanError,
 )
 from .expr import Expr, compile_expr
-from .functions.vector import METRICS, queries_df, rank_topk, score_pairs
+from .functions.vector import METRICS, rank_topk, score_queries, valid_score
 from .store import MetaStore, VecStore
 
 __all__ = ["VecQueryPlan", "MetaQueryPlan", "QueryStats"]
@@ -56,7 +59,8 @@ class QueryStats:
     """Analog of the reference's ``MetaQueryStats`` (src/meta.rs:832-842),
     re-expressed for Spark's execution model. ``vectors_compared`` maps
     to candidate rows entering scoring × queries; ``rows_after_filters``
-    to post-score-filter survivors.
+    to pairs with a valid (non-NULL, non-NaN) score that pass the score
+    filter.
 
     The reference counts pruned vs evaluated CHUNKS; Spark's chunk
     analog for a saved store is the Parquet ROW GROUP. When the store's
@@ -381,24 +385,25 @@ class VecQueryPlan:
         self._validate()
         store = self._store
         base = store.df
-        cond = self._meta_condition()
-        if cond is not None:
-            base = base.filter(cond)
-        for mask in self._row_masks:
-            base = base.filter(mask)
+        conds = [c for c in (self._meta_condition(), *self._row_masks) if c is not None]
+        if conds:
+            base = base.filter(functools.reduce(lambda a, b: a & b, conds))
         if obs_candidates is not None:
             base = base.observe(obs_candidates, F.count(F.lit(1)).alias("n"))
-        qdf = queries_df(base.sparkSession, self._queries)
-        scored = score_pairs(base, qdf, self._metric, store.vec_col)
+        scored = score_queries(base, self._queries, self._metric, store.vec_col)
         if self._vec_filter is not None:
+            # a failing score becomes NULL, which ranks last and is
+            # dropped after the limit: a filter here would be pushed
+            # below the scoring projection and re-run the kernel
             thr, cmp = self._vec_filter
             c = F.col("score")
             t = F.lit(thr)
-            scored = scored.filter(
-                {"lt": c < t, "lte": c <= t, "gt": c > t, "gte": c >= t, "eq": c == t}[cmp]
-            )
+            keep = {"lt": c < t, "lte": c <= t, "gt": c > t, "gte": c >= t, "eq": c == t}[cmp]
+            scored = scored.withColumn("score", F.when(keep, c))
         if obs_survivors is not None:
-            scored = scored.observe(obs_survivors, F.count(F.lit(1)).alias("n"))
+            scored = scored.observe(
+                obs_survivors, F.count_if(valid_score("score")).alias("n")
+            )
         out = rank_topk(
             scored, self._k, self._metric, store.id_col, direction=self._take_dir
         )

@@ -5,7 +5,7 @@ ON explicitly — Spark 4 defaults to it, but operators like
 behavior.py:funnel_counts contract on loud overflow casts, so the
 engine does not rely on the runtime's default; reference behaviors
 that differ, like the silent NaN score drop, are implemented as
-explicit plan steps, see plan.py:_build) and for scale (AQE on with skew handling, parquet
+explicit plan steps, see functions/vector.py:rank_topk) and for scale (AQE on with skew handling, parquet
 pushdown + bloom filters, Arrow for the few pandas-UDF paths). On a
 real cluster the same configs apply; the master URL is the only
 local[...] artifact.

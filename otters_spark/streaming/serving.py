@@ -9,13 +9,17 @@ serving deployment needs. Two Spark-native shapes:
   aggregation), so any sink works; an optional score threshold
   pre-filters in the stream.
 * :func:`serve_query_stream` — micro-batch top-k via ``foreachBatch``:
-  every micro-batch of queries runs ONE batched scoring job (broadcast
-  query batch + per-query top-k) and hands results to a callback.
+  every micro-batch collects its few query rows and scores them as
+  known vectors (one query as a literal, several as a LocalRelation),
+  then hands results to a callback.
 
-Both score through ``functions.vector.score_pairs`` and rank (or
-threshold) by ``functions.vector``'s one direction rule, so for every
-metric a served query returns the rows the batch plan API returns —
-asserted metric by metric in tests/test_streaming_serving.py.
+The stream-static form scores through ``functions.vector.score_pairs``
+(its queries are a stream), the serving loop through
+``functions.vector.score_queries`` (its queries are known per batch);
+both use the same kernels and ``functions.vector``'s one direction
+rule, so for every metric a served query returns the rows the batch
+plan API returns — asserted metric by metric in
+tests/test_streaming_serving.py.
 """
 
 from __future__ import annotations
@@ -24,7 +28,9 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.vector import check_per_query_k, rank_topk, ranks_ascending, score_pairs
+from ..functions.vector import (
+    check_per_query_k, rank_topk, ranks_ascending, score_pairs, score_queries, valid_score,
+)
 from ..store import VecStore
 
 __all__ = ["stream_static_scores", "serve_query_stream"]
@@ -46,6 +52,7 @@ def stream_static_scores(
     keeps the rows at least that good: ``score >= threshold`` for
     similarity metrics, ``score <= threshold`` for distance metrics."""
     scored = score_pairs(store.df, queries, metric, store.vec_col, qvec_col)
+    scored = scored.filter(valid_score("score"))
     if threshold is not None:
         c = F.col("score")
         scored = scored.filter(c <= threshold if ranks_ascending(metric) else c >= threshold)
@@ -62,28 +69,33 @@ def serve_query_stream(
     qvec_col: str = "qvec",
     query_id_col: str = "query_id",
 ):
-    """Micro-batch top-k serving loop: for each arriving micro-batch of
-    queries, run ONE batched scoring job (broadcast queries × store,
-    per-query top-k planned as WindowGroupLimit, so each map task
-    pre-limits to k rows per query before the exchange) and pass the
-    result DataFrame to ``on_batch(results, batch_id)``. ``metric`` and
-    ``k`` are checked before the stream starts. Returns the started
+    """Micro-batch top-k serving loop: each arriving micro-batch's query
+    rows are collected (one small job; an empty batch stops there) and
+    scored by :func:`~otters_spark.functions.vector.score_queries`. One
+    query is a literal, scored and ranked with a global top-k in ONE job
+    with no join and no broadcast; several are a LocalRelation crossed
+    with the store and ranked per query, planned as WindowGroupLimit, so
+    each map task pre-limits to k rows per query before the exchange.
+    The result DataFrame (``query_id_col``, the store's id, ``score``)
+    goes to ``on_batch(results, batch_id)``. ``metric`` and ``k`` are
+    checked before the stream starts. Returns the started
     ``StreamingQuery`` (caller awaits/stops)."""
     ranks_ascending(metric)
     check_per_query_k(queries.sparkSession, k)
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        rows = batch_df.select(query_id_col, qvec_col).collect()
+        if not rows:
             return
-        # only the query columns cross the join, so a stream column
-        # cannot collide with a store column
-        scored = score_pairs(
-            store.df, batch_df.select(query_id_col, qvec_col), metric,
-            store.vec_col, qvec_col,
+        id_type = batch_df.schema[query_id_col].dataType
+        scored = score_queries(
+            store.df, [r[qvec_col] for r in rows], metric, store.vec_col,
+            query_ids=[F.lit(r[query_id_col]).cast(id_type) for r in rows],
+            query_col=query_id_col,
         )
         topk = rank_topk(
-            scored.select(query_id_col, store.id_col, "score"),
-            k, metric, store.id_col, query_col=query_id_col,
+            scored.select(query_id_col, store.id_col, "score"), k, metric,
+            store.id_col, query_col=query_id_col if len(rows) > 1 else None,
         )
         on_batch(topk, batch_id)
 

@@ -7785,9 +7785,8 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.vector import cosine_expr, inv_norm_expr, inv_norm_of
 
     emb = load(spark, sf_dir, "embeddings")
-    qlit = F.array(*[F.lit(float(x)) for x in Q7])
     rel = F.round(
-        cosine_expr("embedding", qlit, inv_norm_expr("embedding"), inv_norm_of(Q7)),
+        cosine_expr("embedding", Q7, inv_norm_expr("embedding"), inv_norm_of(Q7)),
         6,
     )
     shortlist = rank_topk(emb.withColumn("score", rel), 50, "cosine", "vec_id")
@@ -8675,13 +8674,12 @@ def eval_quant_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lanes = []
     for qid, q in enumerate([Q7, Q11, Q13]):
-        qlit = F.array(*[F.lit(float(x)) for x in q])
         lanes.append(
             base.select(
                 F.lit(qid).alias("query_id"),
                 "vec_id",
-                F.round(score_expr("__v", qlit, "cosine"), 6).alias("s_exact"),
-                F.round(score_expr("__recon", qlit, "cosine"), 6).alias("s_quant"),
+                F.round(score_expr("__v", q, "cosine"), 6).alias("s_exact"),
+                F.round(score_expr("__recon", q, "cosine"), 6).alias("s_quant"),
             )
         )
     scored = lanes[0].unionByName(lanes[1]).unionByName(lanes[2])

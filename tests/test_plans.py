@@ -35,6 +35,68 @@ def test_meta_filter_pushed_to_scan(store):
     assert "EqualTo(label,3)" in plan.replace(" ", "")
 
 
+@pytest.mark.parametrize("metric", ["cosine", "dot"])
+def test_point_plan_scores_each_row_once(spark, store, metric):
+    """A point query is one job over one scan: the query vector is a
+    literal, so there is no join, broadcast or Python RDD, the kernel
+    appears once in the executed plan (no copy pushed into a filter or
+    join condition), and the metadata predicate still reaches the
+    Parquet scan."""
+    df = store.query(Q7, metric).meta_filter(col("label").eq(3)).take(5).df()
+    sc = spark.sparkContext
+    group = f"point-plan-{metric}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows and {r["label"] for r in rows} == {3}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    plan = plan_of(df)
+    assert plan.count("aggregate(") == 1, plan
+    assert "BroadcastNestedLoopJoin" not in plan and "ExistingRDD" not in plan
+    assert "EqualTo(label,3)" in plan.replace(" ", "")
+
+
+def test_queries_df_is_a_local_relation(spark):
+    """A query batch is an inline VALUES table: no Python RDD to
+    broadcast, same schema and values as before."""
+    from otters_spark.functions.vector import inv_norm_of, queries_df
+
+    qs = [[1.0, 0.5], [0.0, -2.0]]
+    qdf = queries_df(spark, qs)
+    analyzed = qdf._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in analyzed
+    assert "LogicalRDD" not in analyzed and "ExistingRDD" not in analyzed
+    assert qdf.schema.simpleString() == (
+        "struct<query_id:int,qvec:array<double>,q_inv_norm:double>"
+    )
+    assert [tuple(r) for r in qdf.collect()] == [
+        (0, qs[0], inv_norm_of(qs[0])), (1, qs[1], 0.5)
+    ]
+
+
+def test_vector_literal_is_bit_exact(spark):
+    """NaN and ±∞ render as string casts (Spark has no literal for
+    them), every finite double as its repr, which round-trips."""
+    import math
+
+    from otters_spark.functions.vector import vector_literal_sql
+
+    nan, inf = float("nan"), float("inf")
+    vals = [nan, inf, -inf, -0.0, 0.1, 1 / 3, 5e-324, 1e300, None]
+    sql = vector_literal_sql(vals)
+    assert sql == (
+        "CAST(array(CAST('NaN' AS DOUBLE), CAST('Infinity' AS DOUBLE), "
+        "CAST('-Infinity' AS DOUBLE), -0.0D, 0.1D, 0.3333333333333333D, "
+        "5e-324D, 1e+300D, CAST(NULL AS DOUBLE)) AS ARRAY<DOUBLE>)"
+    )
+    got = spark.sql(f"SELECT {sql} AS v").first()["v"]
+    assert math.isnan(got[0]) and got[-1] is None
+    for a, b in zip(got[1:-1], vals[1:-1]):
+        assert a == b and math.copysign(1.0, a) == math.copysign(1.0, b)
+
+
 def test_dim_join_broadcasts(spark, sf_dir):
     plan = plan_of(rel_brand_revenue(spark, sf_dir))
     assert "BroadcastHashJoin" in plan

@@ -87,9 +87,11 @@ def test_serve_query_stream_topk(spark, sf_dir, tmp_path):
 
 # --- every metric × every entry point against one exact NumPy top-k ---
 
-_NAN = float("nan")
+_NAN, _INF = float("nan"), float("inf")
 # id 8 is a NULL vector, ids 9 and 10 partly and wholly NaN vectors:
-# no entry point may return them, whatever the metric
+# no entry point may return them, whatever the metric. Id 11 scores a
+# real ±∞ (dot -∞ against query 0, euclidean/manhattan +∞): it ranks
+# last, and comes back whenever k reaches it
 _ROWS = [
     [0.0, 0.0, 0.0, 0.0],
     [1.0, 0.0, 0.0, 0.0],
@@ -102,6 +104,7 @@ _ROWS = [
     None,
     [_NAN, 0.0, 0.0, 0.0],
     [_NAN] * 4,
+    [-_INF, 0.0, 0.0, 0.0],
 ]
 _BAD_IDS = {8, 9, 10}
 _MATRIX_QUERIES = [[1.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 1.0]]
@@ -115,8 +118,15 @@ def _np_score(metric, v, q):
     if v is None:
         return None
     v, q = np.asarray(v, dtype=np.float64), np.asarray(q, dtype=np.float64)
-    if np.isnan(v).any():  # the reference drops NaN scores
+    if np.isnan(v).any() or np.isnan(q).any():  # the reference drops NaN scores
         return None
+    with np.errstate(invalid="ignore", over="ignore"):  # inf * 0 is a NaN score
+        return _np_metric(metric, v, q)
+
+
+def _np_metric(metric, v, q):
+    import numpy as np
+
     if metric == "dot":
         return float(v @ q)
     if metric == "cosine":
@@ -144,11 +154,12 @@ def _np_scored(metric, q):
     return out
 
 
-def _np_topk(metric, q, k):
+def _np_topk(metric, q, k, scored=None):
     from otters_spark.functions.vector import METRICS
 
     sign = 1.0 if METRICS[metric] == "min" else -1.0
-    return sorted(_np_scored(metric, q), key=lambda r: (sign * r[1], r[0]))[:k]
+    rows = _np_scored(metric, q) if scored is None else scored
+    return sorted(rows, key=lambda r: (sign * r[1], r[0]))[:k]
 
 
 def _assert_rows(got, want):
@@ -173,14 +184,20 @@ def test_every_entry_point_matches_numpy_topk(spark, matrix_store, metric, tmp_p
     """Plan API, serving, stream-static threshold, LSH and IVF (single
     and batch, every bucket/cell probed) all return the exact float64
     top-k: direction from METRICS, id tie-break, NULL/NaN rows never
-    returned."""
+    returned, real ±∞ scores ranked last but returned, and fewer than k
+    rows when fewer are valid."""
+    import math
+
     import numpy as np
 
-    from otters_spark.functions.vector import METRICS
+    from pyspark.sql import functions as F
+
+    from otters_spark.functions.vector import METRICS, queries_df, score_pairs
     from otters_spark.operators.similarity import (
         hyperplanes, ivf_search, ivf_search_batch, lsh_index, lsh_search,
         lsh_search_batch,
     )
+    from otters_spark.store import VecStore
 
     assert sorted(METRICS) == sorted(_THRESHOLDS)
     k, qs = 3, _MATRIX_QUERIES
@@ -202,11 +219,50 @@ def test_every_entry_point_matches_numpy_topk(spark, matrix_store, metric, tmp_p
         sign = 1.0 if METRICS[metric] == "min" else -1.0
         return sorted(pairs(rows), key=lambda r: (sign * r[1], r[0]))
 
-    # plan API; with k = every row, only the valid rows come back
+    # plan API; with k = every row, only the valid rows come back, and
+    # the survivor count is the valid scores only
+    n_all = len(_ROWS)
+    t = _THRESHOLDS[metric]
+    keep = (lambda s: s <= t) if METRICS[metric] == "min" else (lambda s: s >= t)
     for qid, q in enumerate(qs):
         _assert_rows(pairs(matrix_store.query(q, metric).take(k).collect()), want[qid])
-        got = matrix_store.query(q, metric).take(len(_ROWS)).collect()
-        _assert_rows(pairs(got), _np_topk(metric, q, len(_ROWS)))
+        got, stats = matrix_store.query(q, metric).take(n_all).collect_with_stats()
+        _assert_rows(pairs(got), _np_topk(metric, q, n_all))
+        assert stats.candidate_rows == n_all
+        assert stats.rows_after_filters == len(_np_scored(metric, q))
+        passing = [(i, s) for i, s in _np_scored(metric, q) if keep(s)]
+        cmp = "lte" if METRICS[metric] == "min" else "gte"
+        plan = matrix_store.query(q, metric).vec_filter(t, cmp).take(n_all)
+        got, stats = plan.collect_with_stats()
+        _assert_rows(pairs(got), _np_topk(metric, q, n_all, passing))
+        assert stats.rows_after_filters == len(passing)
+    # one plan over both queries ranks every valid (row, query) pair
+    both = [pair for q in qs for pair in _np_scored(metric, q)]
+    got = matrix_store.query(qs, metric).take(2 * n_all).collect()
+    _assert_rows(pairs(got), _np_topk(metric, None, 2 * n_all, both))
+    # a store whose own columns include `score` and `query_id` answers
+    # the same: the kernel's score replaces its `score`
+    shadow = VecStore.from_df(
+        matrix_store.df.withColumns({"score": F.lit(-1.0), "query_id": F.lit(9)}),
+        dim=4, validate=False,
+    )
+    for q in qs:
+        passing = [(i, s) for i, s in _np_scored(metric, q) if keep(s)]
+        got = shadow.query(q, metric).vec_filter(t, cmp).take(n_all).collect()
+        _assert_rows(pairs(got), _np_topk(metric, q, n_all, passing))
+    got = shadow.query(qs, metric).take(2 * n_all).collect()
+    _assert_rows(pairs(got), _np_topk(metric, None, 2 * n_all, both))
+    # a NaN or ∞ query coordinate is a valid literal
+    for q in ([_NAN, 0.0, 0.0, 0.0], [_INF, 0.0, 1.0, 0.0]):
+        got = matrix_store.query(q, metric).take(n_all).collect()
+        _assert_rows(pairs(got), _np_topk(metric, q, n_all))
+    # a literal query scores bit-identically to the same query as a column
+    odd = [0.1, 1 / 3, -2.5e-8, 7.0]
+    lit = dict(pairs(matrix_store.query(odd, metric).take(n_all).collect()))
+    col_form = score_pairs(matrix_store.df, queries_df(spark, [odd]), metric, "embedding")
+    assert lit == {
+        i: s for i, s in pairs(col_form.collect()) if s is not None and not math.isnan(s)
+    }
 
     # ANN entry points over the unvalidated index, every bucket/cell probed
     raw = matrix_store.df.drop("__inv_norm")
@@ -219,19 +275,18 @@ def test_every_entry_point_matches_numpy_topk(spark, matrix_store, metric, tmp_p
         _assert_rows(pairs(got), want[qid])
         got = ivf_search(assigned, centroids, q, k, nprobe=2, metric=metric).collect()
         _assert_rows(pairs(got), want[qid])
-    for got in (
-        lsh_search_batch(indexed, qs, planes, k, metric=metric, multiprobe=1),
-        ivf_search_batch(assigned, centroids, qs, k, nprobe=2, metric=metric),
-    ):
-        by_q = per_query(got.collect())
-        assert sorted(by_q) == [0, 1]
-        for qid, rows in by_q.items():
-            _assert_rows(ranked(rows), want[qid])
+    for kk in (k, n_all):
+        for got in (
+            lsh_search_batch(indexed, qs, planes, kk, metric=metric, multiprobe=1),
+            ivf_search_batch(assigned, centroids, qs, kk, nprobe=2, metric=metric),
+        ):
+            by_q = per_query(got.collect())
+            assert sorted(by_q) == [0, 1]
+            for qid, rows in by_q.items():
+                _assert_rows(ranked(rows), _np_topk(metric, qs[qid], kk))
 
     # stream-static scores with a threshold (batch input; the stream
     # twin is asserted equal in test_stream_static_matches_batch)
-    t = _THRESHOLDS[metric]
-    keep = (lambda s: s <= t) if METRICS[metric] == "min" else (lambda s: s >= t)
     qdf = spark.createDataFrame(list(enumerate(qs)), QUERY_SCHEMA)
     got = stream_static_scores(qdf, matrix_store, metric=metric, threshold=t).collect()
     by_q = per_query(got)
@@ -257,6 +312,47 @@ def test_every_entry_point_matches_numpy_topk(spark, matrix_store, metric, tmp_p
     assert sorted(by_q) == [0, 1]
     for qid, rows in by_q.items():
         _assert_rows(ranked(rows), want[qid])
+
+
+def test_serving_micro_batch_jobs(spark, matrix_store, tmp_path):
+    """A one-query micro-batch runs at most two jobs (collect the query
+    rows, then the literal-scored top-k: no broadcast job, no isEmpty
+    job) and returns every valid row when k exceeds them, the real -∞
+    score last; an empty micro-batch runs at most one job and never
+    reaches the callback."""
+    q = _MATRIX_QUERIES[0]
+    tracker = spark.sparkContext.statusTracker()
+
+    def serve(name, queries):
+        qdir = str(tmp_path / name)
+        _write_queries(spark, qdir, queries)
+        got, batches = [], []
+
+        def on_batch(df, bid):
+            batches.append(bid)
+            got.extend(df.collect())
+
+        sq = serve_query_stream(
+            spark.readStream.schema(QUERY_SCHEMA).json(qdir), matrix_store,
+            on_batch=on_batch, checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
+            metric="dot", k=len(_ROWS),
+        )
+        try:
+            sq.processAllAvailable()
+        finally:
+            sq.stop()
+        return got, batches, len(tracker.getJobIdsForGroup(str(sq.runId)))
+
+    got, batches, jobs = serve("one", [(7, q)])
+    assert batches == [0] and jobs <= 2, jobs
+    assert {r["query_id"] for r in got} == {7}
+    want = _np_topk("dot", q, len(_ROWS))
+    assert want[-1] == (11, float("-inf"))
+    _assert_rows(sorted(((r["vec_id"], r["score"]) for r in got),
+                        key=lambda r: (-r[1], r[0])), want)
+
+    got, batches, jobs = serve("empty", [])
+    assert batches == [] and jobs <= 1, (batches, jobs)
 
 
 def test_per_query_k_bounded_by_window_group_limit(spark, matrix_store, tmp_path):
