@@ -712,9 +712,9 @@ def main() -> int:
         # batched serving (the engine's documented throughput path):
         # all queries in ONE job, per-query top-10 through the library's
         # scoring and ranking path
-        from otters_spark.functions.vector import queries_df, rank_topk, score_pairs
+        from otters_spark.functions.vector import rank_topk, score_queries
 
-        scored = score_pairs(store.df, queries_df(spark, qs), "cosine", "embedding")
+        scored = score_queries(store.df, qs, "cosine", "embedding")
         batched = rank_topk(
             scored.select("query_id", "vec_id", "score"), 10, "cosine", "vec_id",
             query_col="query_id",

@@ -19,9 +19,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 import otters_spark as ot
-from otters_spark.functions.vector import score_expr
+from otters_spark.functions.vector import rank_topk, score_queries
 from otters_spark.operators.evaluation import retrieval_metrics, with_rank
-from otters_spark.operators.similarity import ivf_assign, ivf_build, ivf_search
+from otters_spark.operators.similarity import ivf_assign, ivf_build, ivf_search_batch
 from otters_spark.suite import Q7, Q11
 
 
@@ -52,25 +52,16 @@ def main() -> int:
     )
     print(f"removed {len(doomed)} -> {grown.count()} vectors")
 
-    # 4. evaluate the approximate tier: nprobe-pruned IVF vs exact
-    ann_lanes, exact_lanes = [], []
-    for qid, q in enumerate([Q7, Q11]):
-        ann_lanes.append(
-            ivf_search(grown, centroids, q, k=10, nprobe=2).select(
-                F.lit(qid).alias("query_id"), "vec_id", "score"
-            )
-        )
-        exact_lanes.append(
-            grown.select(
-                F.lit(qid).alias("query_id"),
-                "vec_id",
-                score_expr("embedding", q, "cosine").alias("score"),
-            )
-            .orderBy(F.col("score").desc(), "vec_id")
-            .limit(10)
-        )
-    ann = ann_lanes[0].unionByName(ann_lanes[1])
-    exact = exact_lanes[0].unionByName(exact_lanes[1])
+    # 4. evaluate the approximate tier: nprobe-pruned IVF vs exact,
+    # both lanes one batch over the two queries
+    qs = [Q7, Q11]
+    ann = ivf_search_batch(grown, centroids, qs, k=10, nprobe=2).select(
+        "query_id", "vec_id", "score"
+    )
+    exact = rank_topk(
+        score_queries(grown, qs, "cosine", "embedding").select("query_id", "vec_id", "score"),
+        10, "cosine", "vec_id", query_col="query_id",
+    )
     report = retrieval_metrics(with_rank(ann), with_rank(exact)).orderBy("query_id")
     report.show(truncate=False)
     mean_recall = report.agg(F.avg("recall")).collect()[0][0]

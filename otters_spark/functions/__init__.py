@@ -5,7 +5,6 @@ from .vector import (
     euclidean_sq_expr,
     inv_norm_expr,
     inv_norm_of,
-    queries_df,
     score_expr,
 )
 
@@ -16,6 +15,5 @@ __all__ = [
     "euclidean_sq_expr",
     "inv_norm_expr",
     "inv_norm_of",
-    "queries_df",
     "score_expr",
 ]

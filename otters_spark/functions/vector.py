@@ -24,9 +24,9 @@ as a Python sequence, which is inlined as one ``array(…D)`` literal
 (:func:`vector_literal_sql`): a known query is a constant in the plan,
 never a relation to join. Every vector search entry point scores and
 ranks through the functions at the end of this module:
-:func:`score_queries` (known queries: one as a literal, several as a
-LocalRelation), :func:`score_pairs` (queries that are themselves a
-DataFrame) and :func:`rank_topk`.
+:func:`score_queries` (known queries: one as a literal, several as one
+literal array exploded with ``inline``), :func:`score_pairs` (queries
+that are themselves a DataFrame) and :func:`rank_topk`.
 
 Scale note: an Arrow/pandas-UDF matmul path for very wide vectors lives
 in ``otters_spark.operators.similarity``.
@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import math
 import numbers
-from typing import Iterable, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
@@ -53,7 +53,6 @@ __all__ = [
     "inv_norm_of",
     "score_expr",
     "vector_literal_sql",
-    "queries_df",
     "ranks_ascending",
     "valid_score",
     "score_queries",
@@ -64,7 +63,8 @@ __all__ = [
 ]
 
 #: the store's precomputed inverse-norm column (written at build by
-#: ``otters_spark.store``; read here by :func:`score_pairs`)
+#: ``otters_spark.store``; read here by :func:`score_queries` and
+#: :func:`score_pairs`)
 INV_NORM_COL = "__inv_norm"
 
 #: the session conf below which Spark plans ``row_number() <= k`` as
@@ -254,6 +254,11 @@ def jaccard_expr(a, b) -> Column:
     return F.expr(_kernel_sql("jaccard", _sql(a), _sql(b)))
 
 
+def _literal_inv_norm(vec: Sequence[float] | None) -> float:
+    # a NULL vector or element makes every score NULL whatever this is
+    return 0.0 if vec is None or any(x is None for x in vec) else inv_norm_of(vec)
+
+
 def score_expr(vec_col, q_col, metric: str, inv_norm_col=None, q_inv_norm=None) -> Column:
     """Score expression for one (store-vector, query-vector) pair.
 
@@ -266,41 +271,12 @@ def score_expr(vec_col, q_col, metric: str, inv_norm_col=None, q_inv_norm=None) 
     precompute (src/vec.rs:365-368).
     """
     if q_inv_norm is None and metric == "cosine" and not isinstance(q_col, (str, Column)):
-        # a NULL vector or element makes every score NULL whatever this is
-        nulls = q_col is None or any(x is None for x in q_col)
-        q_inv_norm = 0.0 if nulls else inv_norm_of(q_col)
+        q_inv_norm = _literal_inv_norm(q_col)
     return F.expr(_kernel_sql(
         metric, _sql(vec_col), _sql(q_col),
         None if inv_norm_col is None else _sql(inv_norm_col),
         None if q_inv_norm is None else _sql(q_inv_norm),
     ))
-
-
-def queries_df(
-    spark: SparkSession,
-    queries: Iterable[Sequence[float]],
-    ids: Sequence[Column] | None = None,
-) -> DataFrame:
-    """Materialize a query batch as a tiny DataFrame
-    (``query_id, qvec array<double>, q_inv_norm double``) for
-    callers that join queries to rows. Mirrors ``QueryBatch``
-    (src/vec.rs:320-336) with per-query inverse norms hoisted
-    driver-side. ``query_id`` is 0..n-1 (int), or ``ids`` — one typed
-    literal Column per query — when given. The batch is an inline
-    ``VALUES`` table, so it plans as a LocalRelation, not a Python RDD:
-    building it starts no Python worker."""
-    rows = [
-        f"({i}, {vector_literal_sql(q)}, {_double_sql(inv_norm_of(q))})"
-        for i, q in enumerate(queries)
-    ]
-    if not rows:
-        raise ValueError("queries_df needs at least one query")
-    qdf = spark.sql(
-        f"SELECT * FROM VALUES {', '.join(rows)} AS t(query_id, qvec, q_inv_norm)"
-    )
-    if ids is not None:
-        qdf = qdf.withColumn("query_id", F.element_at(F.array(*ids), F.col("query_id") + 1))
-    return qdf
 
 
 # --- the one scoring-and-ranking path ----------------------------------
@@ -351,28 +327,39 @@ def score_queries(
     query_col: str = "query_id",
 ) -> DataFrame:
     """Every candidate row scored against each of ``queries``, given as
-    vectors: the candidates' columns plus ``score`` (replacing any
-    candidate column of that name) and ``query_col`` (``query_ids``,
-    typed literal Columns, default 0..n-1). One query is inlined as a
-    literal in one projection: no join, no query relation, one kernel
-    evaluation per row; it gets ``query_col`` only when ``query_ids``
-    is given. Several are a :func:`queries_df` LocalRelation crossed
-    with the candidates by :func:`score_pairs` (which also carries
-    ``qvec`` and ``q_inv_norm``). Inverse norms are the candidates'
-    stored :data:`INV_NORM_COL` when present and each query's, hoisted
-    on the driver. Invalid scores are kept; :func:`rank_topk` ranks
-    them last and drops them."""
+    vectors: the candidates' columns plus ``score`` and ``query_col``
+    (``query_ids``, typed literal Columns, default 0..n-1), each
+    replacing any candidate column of that name. A known query is
+    always a literal, never a relation to join. One query is inlined in
+    one projection, one kernel evaluation per row; it gets
+    ``query_col`` only when ``query_ids`` is given. Several are one
+    literal array of (id, vector, inverse norm) structs exploded by
+    ``inline`` (the reference's ``QueryBatch``, src/vec.rs:320-336), with
+    the kernel evaluated once per pair in the projection above it; a
+    filter on ``query_col`` placed on the result lands between the two,
+    so only the pairs it keeps are scored. Inverse norms are the
+    candidates' stored :data:`INV_NORM_COL` when present and each
+    query's, hoisted on the driver. Invalid scores are kept;
+    :func:`rank_topk` ranks them last and drops them."""
     candidates = candidates.drop("score")
-    if len(queries) != 1:
-        scored = score_pairs(
-            candidates, queries_df(candidates.sparkSession, queries, query_ids),
-            metric, vec_col,
-        )
-        return scored.withColumnRenamed("query_id", query_col)
     inv = INV_NORM_COL if INV_NORM_COL in candidates.columns else None
-    cols = {} if query_ids is None else {query_col: query_ids[0]}
-    cols["score"] = score_expr(vec_col, queries[0], metric, inv_norm_col=inv)
-    return candidates.withColumns(cols)
+    if len(queries) == 1:
+        cols = {} if query_ids is None else {query_col: query_ids[0]}
+        cols["score"] = score_expr(vec_col, queries[0], metric, inv_norm_col=inv)
+        return candidates.withColumns(cols)
+    if not queries:
+        raise ValueError("score_queries needs at least one query")
+    ids = query_ids or [F.lit(i) for i in range(len(queries))]
+    batch = F.array(*[
+        F.struct(qid.alias(query_col), F.expr(vector_literal_sql(q)).alias("__qvec"),
+                 F.lit(_literal_inv_norm(q)).alias("__q_inv_norm"))
+        for qid, q in zip(ids, queries)
+    ])
+    score = score_expr(vec_col, "__qvec", metric, inv_norm_col=inv, q_inv_norm="__q_inv_norm")
+    return (
+        candidates.drop(query_col).select("*", F.inline(batch))
+        .withColumn("score", score).drop("__qvec", "__q_inv_norm")
+    )
 
 
 def score_pairs(
@@ -387,12 +374,11 @@ def score_pairs(
     from :func:`score_expr`: the form for queries that are themselves a
     DataFrame (a stream, or rows of a table); known vectors go through
     :func:`score_queries`. Inverse norms are the stored ones: the
-    candidates' :data:`INV_NORM_COL` when present, the queries'
-    ``q_inv_norm`` column (as :func:`queries_df` builds it), each
-    computed in place when absent. Invalid (NULL/NaN) scores are kept:
-    :func:`rank_topk` drops them, and a caller that does not rank
-    filters on :func:`valid_score`. All columns of both sides are
-    carried through."""
+    candidates' :data:`INV_NORM_COL` and the queries' ``q_inv_norm``
+    column when present, each computed in place when absent. Invalid
+    (NULL/NaN) scores are kept: :func:`rank_topk` drops them, and a
+    caller that does not rank filters on :func:`valid_score`. All
+    columns of both sides are carried through."""
     if "q_inv_norm" not in queries.columns:
         queries = queries.withColumn("q_inv_norm", inv_norm_expr(qvec_col))
     inv = INV_NORM_COL if INV_NORM_COL in candidates.columns else None

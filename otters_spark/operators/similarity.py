@@ -19,7 +19,7 @@ Three tiers, trading exactness for scale:
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Callable, Iterable, Sequence
 
 import numpy as np
 
@@ -29,11 +29,10 @@ from pyspark.sql import types as T
 from ..functions.vector import (
     dot_expr,
     inv_norm_expr,
-    inv_norm_of,
     per_query_topk,
-    queries_df,
     rank_topk,
     ranks_ascending,
+    score_queries,
 )
 from ..store import INV_NORM_COL
 
@@ -236,31 +235,28 @@ def maxsim_topk(
     cos(q, t) — each query token recruits its best-matching document
     token (Khattab & Zaharia 2020).
 
-    Scale shape: the query side broadcasts (a query is a handful of
-    vectors); token inverse norms are computed ONCE in a projection
-    below the crossJoin (inside it they would re-evaluate per query
-    token); the two-level max-then-sum lowers to two partial-aggregated
-    groupBys whose shuffle rows are (group, qid, double) — the raw
-    vectors never shuffle — and the final top-k is a
-    TakeOrderedAndProject. One corpus scan, |corpus|·|q| codegen'd
-    dot products, no Python. Zero-norm tokens score 0.0 (inverse norm
-    stored as 0.0), matching the engine's cosine convention."""
+    Scale shape: the query tokens are literals scored by
+    ``score_queries`` (no query relation, no join); token inverse
+    norms are computed ONCE in a projection below the query explode
+    (above it they would re-evaluate per query token); the two-level
+    max-then-sum lowers to two partial-aggregated groupBys whose
+    shuffle rows are (group, qid, double) — the raw vectors never
+    shuffle — and the final top-k is a TakeOrderedAndProject. One
+    corpus scan, |corpus|·|q| dot products, no Python. Zero-norm tokens
+    score 0.0 (inverse norm stored as 0.0), matching the engine's
+    cosine convention."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    qdf = queries_df(vectors.sparkSession, queries)
+    queries = list(queries)
     toks = vectors.select(
         F.col(group_col),
         F.col(vec_col).alias("__v"),
-        inv_norm_expr(vec_col).alias("__inv"),
+        inv_norm_expr(vec_col).alias(INV_NORM_COL),
     )
-    scored = toks.crossJoin(F.broadcast(qdf)).select(
-        group_col,
-        "query_id",
-        (dot_expr("__v", "qvec") * F.col("__inv") * F.col("q_inv_norm")).alias(
-            "__cos"
-        ),
+    scored = score_queries(
+        toks, queries, "cosine", "__v", query_ids=[F.lit(i) for i in range(len(queries))]
     )
-    per_q = scored.groupBy(group_col, "query_id").agg(F.max("__cos").alias("__m"))
+    per_q = scored.groupBy(group_col, "query_id").agg(F.max("score").alias("__m"))
     return (
         per_q.groupBy(group_col)
         .agg(F.sum("__m").alias("score"))
@@ -394,6 +390,50 @@ def _query_buckets(q: np.ndarray, planes: np.ndarray, multiprobe: int) -> list[i
     return buckets
 
 
+def _probe_search(
+    df: DataFrame,
+    key_col: str,
+    queries: Iterable[Sequence[float]],
+    probe_keys: Callable[[np.ndarray], list[int]],
+    k: int,
+    metric: str,
+    vec_col: str,
+    id_col: str,
+    round_to: int | None,
+    batch: bool,
+) -> DataFrame:
+    """The one body of LSH and IVF search, single and batch: prune to
+    the union of every query's probed ``key_col`` values
+    (``probe_keys(q)``, computed driver-side), score the known queries
+    as literals (:func:`score_queries`), keep each (row, query) pair
+    whose key that query probes — a filter on a literal
+    ``map(query_id → keys)`` that Catalyst places between the query
+    explode and the kernel projection, so only probed pairs are scored
+    — and rank: one global top-k, or with ``batch`` a per-query one.
+    Batch and single paths score the same pairs with the same
+    expression and the same driver-computed inverse norms, so they rank
+    identical floats."""
+    qlist = [[float(x) for x in q] for q in queries]
+    if not qlist or k < 1:
+        raise ValueError("search needs >= 1 query and k >= 1")
+    probes = [probe_keys(np.asarray(q, dtype=np.float64)) for q in qlist]
+    cand = df.filter(F.col(key_col).isin(sorted({key for p in probes for key in p})))
+    scored = score_queries(
+        cand, qlist, metric, vec_col, query_ids=[F.lit(i) for i in range(len(qlist))]
+    )
+    if len(qlist) > 1:
+        probed = ", ".join(f"{i}, array({', '.join(map(str, p))})" for i, p in enumerate(probes))
+        scored = scored.filter(F.expr(f"array_contains(map({probed})[query_id], `{key_col}`)"))
+    if round_to is not None:
+        # round BEFORE the top-k ordering (the text_bm25 k-boundary
+        # discipline) so cross-engine evaluations rank the same floats
+        scored = scored.withColumn("score", F.round("score", round_to))
+    query_col = "query_id" if batch else None
+    return rank_topk(scored, k, metric, id_col, query_col=query_col).select(
+        *([query_col] if batch else []), id_col, "score", key_col
+    )
+
+
 def lsh_search(
     indexed: DataFrame,
     query: Sequence[float],
@@ -417,63 +457,10 @@ def lsh_search(
     an ULP difference at the k-boundary could otherwise flip which
     candidate makes the cut — the text_bm25_topk lesson. Default None
     keeps full-precision ordering for single-engine serving."""
-    from ..functions.vector import score_expr
-
-    q = np.asarray(list(map(float, query)), dtype=np.float64)
-    buckets = _query_buckets(q, planes, multiprobe)
-    inv_norm = INV_NORM_COL if INV_NORM_COL in indexed.columns else None
-    cand = indexed.filter(F.col("lsh_bucket").isin(buckets))
-    score = score_expr(vec_col, q, metric, inv_norm_col=inv_norm)
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return rank_topk(cand.withColumn("score", score), k, metric, id_col).select(
-        id_col, "score", "lsh_bucket"
+    return _probe_search(
+        indexed, "lsh_bucket", [query], lambda q: _query_buckets(q, planes, multiprobe),
+        k, metric, vec_col, id_col, round_to, batch=False,
     )
-
-
-def _search_batch(
-    df: DataFrame,
-    probe: list,
-    partition_col: str,
-    part_type: str,
-    qlist: list,
-    k: int,
-    metric: str,
-    vec_col: str,
-    id_col: str,
-    round_to: int | None = None,
-) -> DataFrame:
-    """Shared body of the batch search paths: broadcast the
-    (query_id, partition-key) probe table + query batch onto the
-    pruned index, exact re-score, per-query bounded top-k."""
-    from ..functions.vector import score_expr
-
-    if not qlist or k < 1:
-        raise ValueError("batch search needs >= 1 query and k >= 1")
-    spark = df.sparkSession
-    qd = queries_df(spark, qlist)
-    probe_df = spark.createDataFrame(
-        probe, f"query_id int, {partition_col} {part_type}"
-    )
-    all_keys = sorted({key for _, key in probe})
-    inv = F.col(INV_NORM_COL) if INV_NORM_COL in df.columns else None
-    cand = (
-        df.filter(F.col(partition_col).isin(all_keys))
-        .join(F.broadcast(probe_df), partition_col)
-        .join(F.broadcast(qd), "query_id")
-    )
-    score = score_expr(
-        vec_col, F.col("qvec"), metric,
-        inv_norm_col=inv, q_inv_norm=F.col("q_inv_norm"),
-    )
-    if round_to is not None:
-        # round BEFORE the top-k ordering (the lsh_search/text_bm25
-        # k-boundary discipline) so cross-engine evaluations rank the
-        # same floats
-        score = F.round(score, round_to)
-    return rank_topk(
-        cand.withColumn("score", score), k, metric, id_col, query_col="query_id"
-    ).select("query_id", id_col, "score", partition_col)
 
 
 def lsh_search_batch(
@@ -488,25 +475,17 @@ def lsh_search_batch(
     round_to: int | None = None,
 ) -> DataFrame:
     """N queries through the LSH index in ONE job (the batch twin of
-    :func:`lsh_search`, same shape as :func:`ivf_search_batch`):
-    per-query probe buckets computed driver-side against the literal
-    planes, broadcast (query_id, bucket) probe table + query batch,
-    exact re-score, per-query bounded top-k window. On a store saved
-    partitioned by bucket, the `lsh_bucket IN (...)` filter over the
-    union of all probed buckets still prunes partitions. ``round_to``
-    rounds scores before the top-k ordering, exactly as in
-    :func:`lsh_search` (the cross-engine k-boundary discipline); the
-    per-pair score arithmetic is the same expression with the same
-    driver-computed inverse norms, so batch and single-query paths
+    :func:`lsh_search`, one shared body): per-query probe buckets
+    computed driver-side against the literal planes, exact re-score of
+    each query's probed pairs only, per-query bounded top-k window. On
+    a store saved partitioned by bucket, the `lsh_bucket IN (...)`
+    filter over the union of all probed buckets still prunes
+    partitions. ``round_to`` rounds scores before the top-k ordering,
+    exactly as in :func:`lsh_search`; batch and single-query paths
     rank identical floats."""
-    qlist = [list(map(float, q)) for q in queries]
-    probe = []
-    for qid, q in enumerate(qlist):
-        for b in _query_buckets(np.asarray(q, dtype=np.float64), planes, multiprobe):
-            probe.append((qid, int(b)))
-    return _search_batch(
-        indexed, probe, "lsh_bucket", "long", qlist, k, metric, vec_col,
-        id_col, round_to=round_to,
+    return _probe_search(
+        indexed, "lsh_bucket", queries, lambda q: _query_buckets(q, planes, multiprobe),
+        k, metric, vec_col, id_col, round_to, batch=True,
     )
 
 
@@ -648,6 +627,14 @@ def ivf_assign(
     ).drop("__ivf_d")
 
 
+def _ivf_cells(centroids: np.ndarray, q: np.ndarray, nprobe: int) -> list[int]:
+    d2 = ((centroids - q[None, :]) ** 2).sum(1)
+    # stable: equidistant cells resolve to the lowest cell id, the
+    # same tie-break the SQL twin's ORDER BY (distance, cell) applies
+    # (numpy's default introsort is NOT stable)
+    return [int(c) for c in np.argsort(d2, kind="stable")[:nprobe]]
+
+
 def ivf_search(
     assigned: DataFrame,
     centroids: np.ndarray,
@@ -660,17 +647,10 @@ def ivf_search(
 ) -> DataFrame:
     """Search the nprobe nearest cells (chosen driver-side against the
     tiny centroid table), exact re-score inside."""
-    from ..functions.vector import score_expr
-
-    q = np.asarray(list(map(float, query)), dtype=np.float64)
-    d2 = ((centroids - q[None, :]) ** 2).sum(1)
-    # stable: equidistant cells resolve to the lowest cell id, the
-    # same tie-break the SQL twin's ORDER BY (distance, cell) applies
-    # (numpy's default introsort is NOT stable)
-    cells = [int(c) for c in np.argsort(d2, kind="stable")[:nprobe]]
-    cand = assigned.filter(F.col("ivf_cell").isin(cells))
-    scored = cand.withColumn("score", score_expr(vec_col, q, metric))
-    return rank_topk(scored, k, metric, id_col).select(id_col, "score", "ivf_cell")
+    return _probe_search(
+        assigned, "ivf_cell", [query], lambda q: _ivf_cells(centroids, q, nprobe),
+        k, metric, vec_col, id_col, None, batch=False,
+    )
 
 
 def ivf_search_batch(
@@ -687,17 +667,12 @@ def ivf_search_batch(
     batch path (the sequential :func:`ivf_search` loop pays one Spark
     job per query; batching amortizes that into a single scan, the
     same lesson as ``vector_batch_qps`` in SCALE.md). Probe cells are
-    chosen driver-side against the tiny centroid table; the
-    (query_id, cell) probe table and the query batch broadcast; the
-    per-query top-k window partitions over one query's candidates
-    (bounded by its nprobe cells), never the corpus."""
-    qlist = [list(map(float, q)) for q in queries]
-    probe = []
-    for qid, q in enumerate(qlist):
-        d2 = ((centroids - np.asarray(q)[None, :]) ** 2).sum(1)
-        probe += [(qid, int(c)) for c in np.argsort(d2, kind="stable")[:nprobe]]
-    return _search_batch(
-        assigned, probe, "ivf_cell", "int", qlist, k, metric, vec_col, id_col
+    chosen driver-side against the tiny centroid table; each query
+    scores only its own nprobe cells' rows, and the per-query top-k
+    window partitions over one query's candidates, never the corpus."""
+    return _probe_search(
+        assigned, "ivf_cell", queries, lambda q: _ivf_cells(centroids, q, nprobe),
+        k, metric, vec_col, id_col, None, batch=True,
     )
 
 
@@ -933,8 +908,6 @@ def pq_search(
     candidates, which join back to raw vectors for an exact re-score
     (one broadcast-sized join — rerank rows), the standard
     recall-restoring tail."""
-    from ..functions.vector import score_expr
-
     M, K, dsub = codebooks.shape
     q = np.asarray(list(map(float, query)), dtype=np.float64).reshape(M, dsub)
     if metric == "euclidean":
@@ -962,9 +935,7 @@ def pq_search(
         scored, max(rerank, k), metric, id_col, score_col="approx_score"
     ).select(id_col, "approx_score")
     qflat = [float(x) for x in np.asarray(query, dtype=np.float64).ravel()]
-    exact = store.join(F.broadcast(cand), id_col).withColumn(
-        "score", score_expr(vec_col, qflat, metric)
-    )
+    exact = score_queries(store.join(F.broadcast(cand), id_col), [qflat], metric, vec_col)
     return rank_topk(exact, k, metric, id_col).select(id_col, "score", "approx_score")
 
 
@@ -1073,12 +1044,10 @@ def binary_search(
         indexed.withColumn("hamming", ham), shortlist, "hamming", id_col,
         score_col="hamming",
     )
-    from ..functions.vector import cosine_expr, inv_norm_expr
-
-    score = cosine_expr(vec_col, q, inv_norm_expr(vec_col), inv_norm_of(q))
+    scored = score_queries(cand, [q], "cosine", vec_col)
     if round_to is not None:
-        score = F.round(score, round_to)
-    return rank_topk(cand.withColumn("score", score), k, "cosine", id_col).drop(bits_col)
+        scored = scored.withColumn("score", F.round("score", round_to))
+    return rank_topk(scored, k, "cosine", id_col).drop(bits_col)
 
 
 def mmr_rerank(

@@ -13,8 +13,8 @@ Spark realization is a single declarative pipeline::
          .filter(score is not NULL/NaN)              # ┘ NULL, dropped after limit
 
 The query is a literal, so there is no join and no query relation, and
-the kernel runs once per row; several queries are a ``VALUES``
-LocalRelation crossed with the rows (broadcast, no Python RDD). The
+the kernel runs once per row; several queries are one literal array
+exploded over the rows (``inline``), the kernel once per pair. The
 reference's hand-built machinery maps 1:1 onto planner features:
 chunk pruning = row-group pruning (src/meta.rs:646-660), rayon chunk
 parallelism = task parallelism (src/meta.rs:678-709), TopKCollector's

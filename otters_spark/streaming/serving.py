@@ -10,8 +10,8 @@ serving deployment needs. Two Spark-native shapes:
   pre-filters in the stream.
 * :func:`serve_query_stream` — micro-batch top-k via ``foreachBatch``:
   every micro-batch collects its few query rows and scores them as
-  known vectors (one query as a literal, several as a LocalRelation),
-  then hands results to a callback.
+  known vectors (one query as a literal, several as one literal array
+  exploded over the store), then hands results to a callback.
 
 The stream-static form scores through ``functions.vector.score_pairs``
 (its queries are a stream), the serving loop through
@@ -73,9 +73,10 @@ def serve_query_stream(
     rows are collected (one small job; an empty batch stops there) and
     scored by :func:`~otters_spark.functions.vector.score_queries`. One
     query is a literal, scored and ranked with a global top-k in ONE job
-    with no join and no broadcast; several are a LocalRelation crossed
-    with the store and ranked per query, planned as WindowGroupLimit, so
-    each map task pre-limits to k rows per query before the exchange.
+    with no join and no broadcast; several are one literal array
+    exploded over the store (no broadcast job either) and ranked per
+    query, planned as WindowGroupLimit, so each map task pre-limits to
+    k rows per query before the exchange.
     The result DataFrame (``query_id_col``, the store's id, ``score``)
     goes to ``on_batch(results, batch_id)``. ``metric`` and ``k`` are
     checked before the stream starts. Returns the started

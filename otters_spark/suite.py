@@ -29,7 +29,7 @@ from pyspark.sql.window import Window
 
 from .expr import col
 from .functions.scan import spread_small_scan
-from .functions.vector import queries_df, rank_topk, score_expr, score_pairs
+from .functions.vector import rank_topk, score_expr, score_pairs, score_queries
 from .sources import TABLES
 from .store import INV_NORM_COL, MetaStore
 
@@ -358,8 +358,7 @@ def vs_per_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange only ever carries k rows per query per map task — never
     the full scored store (plan shape locked in tests/test_plans.py)."""
     store = emb_store(spark, sf_dir)
-    qdf = queries_df(spark, [Q7, Q11, Q13])
-    scored = score_pairs(store.df, qdf, "cosine", "embedding").select(
+    scored = score_queries(store.df, [Q7, Q11, Q13], "cosine", "embedding").select(
         "query_id", "vec_id", "score", "label"
     )
     return rank_topk(scored, 5, "cosine", "vec_id", query_col="query_id").select(
@@ -3874,31 +3873,16 @@ def eval_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark lane scores dot x precomputed inverse norms while the DuckDB
     # twin divides (list_cosine_similarity) — a ULP difference at the
     # k=10 boundary could otherwise flip which candidate makes the cut.
-    # Round 12 (VERDICT item 7): both lanes BATCHED — the per-query
-    # loop ran 6 separate corpus subtrees (3 bucket-filtered ann scans
-    # + 3 full exact scans); one probe-table join and one broadcast
-    # query batch now score all 3 queries in one scan each. Scores are
-    # the same expressions with the same driver-computed inverse norms
-    # (lsh_search_batch docstring), and the per-query top-10 window
+    # Both lanes are batched: the 3 queries are literals exploded over
+    # one scan each (score_queries), and the per-query top-10 window
     # (score desc, vec_id) selects exactly the rows each per-query
     # orderBy().limit(10) selected — oracle-verified at all 3 SFs.
     qs = [Q7, Q11, Q13]
     ann = lsh_search_batch(
         indexed, qs, planes, k=10, multiprobe=3, round_to=6
     ).select("query_id", "vec_id", "score")
-    qd = spark.createDataFrame(
-        [(qid, [float(x) for x in q]) for qid, q in enumerate(qs)],
-        "query_id int, qvec array<double>",
-    )
-    # exact lane keeps the original arithmetic: inv norms as column
-    # EXPRESSIONS on both sides (score_expr defaults), not the hoisted
-    # q_inv_norm — bit-identical to the former per-query literal form
-    exact_scored = emb.crossJoin(F.broadcast(qd)).select(
-        "query_id",
-        "vec_id",
-        F.round(score_expr("embedding", F.col("qvec"), "cosine"), 6).alias(
-            "score"
-        ),
+    exact_scored = score_queries(emb, qs, "cosine", "embedding").select(
+        "query_id", "vec_id", F.round("score", 6).alias("score")
     )
     exact = rank_topk(exact_scored, 10, "cosine", "vec_id", query_col="query_id")
     metrics = retrieval_metrics(with_rank(ann), with_rank(exact))

@@ -3,7 +3,11 @@
 run every suite query on Spark AND its DuckDB oracle, compare
 row-count + schema + order-insensitive values. Usage:
 
-    python scripts/check_oracle.py [sf_dir] [query ...]
+    python scripts/check_oracle.py [sf_dir] [pattern ...]
+
+Each pattern is a query name or an fnmatch pattern (``'vs_*'``); with
+none, every query runs. A pattern that matches no query is an error
+(exit 2) before anything runs.
 """
 
 from __future__ import annotations
@@ -11,6 +15,7 @@ from __future__ import annotations
 import os
 import sys
 import time
+from fnmatch import fnmatchcase
 
 import numpy as np
 import pandas as pd
@@ -55,14 +60,18 @@ def main() -> int:
     from otters_spark.session import get_spark
     from otters_spark.suite import QUERIES, oracle_connection, oracles_for
 
+    patterns = sys.argv[2:]
+    unmatched = [p for p in patterns if not any(fnmatchcase(n, p) for n in QUERIES)]
+    if unmatched:
+        print(f"no query matches {unmatched}")
+        return 2
     oracles = oracles_for(sf_dir)
-    only = set(sys.argv[2:])
     spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=16)
     con = oracle_connection(sf_dir)
 
     failures = 0
     for name, fn in QUERIES.items():
-        if only and name not in only:
+        if patterns and not any(fnmatchcase(name, p) for p in patterns):
             continue
         t0 = time.time()
         try:

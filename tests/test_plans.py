@@ -58,22 +58,39 @@ def test_point_plan_scores_each_row_once(spark, store, metric):
     assert "EqualTo(label,3)" in plan.replace(" ", "")
 
 
-def test_queries_df_is_a_local_relation(spark):
-    """A query batch is an inline VALUES table: no Python RDD to
-    broadcast, same schema and values as before."""
-    from otters_spark.functions.vector import inv_norm_of, queries_df
+def test_several_queries_are_one_literal_array(spark, store):
+    """Several known queries are one literal array exploded over the
+    rows: the global-merge plan and an IVF batch plan each evaluate the
+    kernel once (no join, broadcast or query relation), the IVF probe
+    filter sits between the explode and the kernel projection, so only
+    probed pairs are scored, and the global merge runs one job."""
+    import numpy as np
 
-    qs = [[1.0, 0.5], [0.0, -2.0]]
-    qdf = queries_df(spark, qs)
-    analyzed = qdf._jdf.queryExecution().analyzed().toString()
-    assert "LocalRelation" in analyzed
-    assert "LogicalRDD" not in analyzed and "ExistingRDD" not in analyzed
-    assert qdf.schema.simpleString() == (
-        "struct<query_id:int,qvec:array<double>,q_inv_norm:double>"
-    )
-    assert [tuple(r) for r in qdf.collect()] == [
-        (0, qs[0], inv_norm_of(qs[0])), (1, qs[1], 0.5)
-    ]
+    from otters_spark.operators.similarity import ivf_search_batch
+    from otters_spark.suite import Q11, Q13
+
+    qs = [Q7, Q11, Q13]
+    df = store.query(qs, "cosine").take(10).df()
+    assigned = store.df.withColumn("ivf_cell", (F.col("vec_id") % 4).cast("int"))
+    batch = ivf_search_batch(assigned, np.eye(4, 64), qs, k=5, nprobe=2)
+    for plan in (plan_of(df), plan_of(batch)):
+        assert plan.count("aggregate(") == 1, plan
+        for node in ("BroadcastNestedLoopJoin", "BroadcastExchange", "LocalTableScan"):
+            assert node not in plan, (node, plan)
+    nodes = [line.strip() for line in plan_of(batch).splitlines()]
+    kernel = next(i for i, n in enumerate(nodes) if "aggregate(" in n)
+    probe = next(i for i, n in enumerate(nodes) if "array_contains(" in n)
+    generate = next(i for i, n in enumerate(nodes) if "Generate inline(" in n)
+    assert kernel < probe < generate, nodes
+
+    sc = spark.sparkContext
+    sc.setJobGroup("several-queries", "several-queries")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 10
+    assert len(sc.statusTracker().getJobIdsForGroup("several-queries")) == 1
 
 
 def test_vector_literal_is_bit_exact(spark):

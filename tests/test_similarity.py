@@ -103,10 +103,10 @@ def test_ivf_search_batch_matches_sequential(emb):
     rows = batch.collect()
     by_q = {}
     for r in sorted(rows, key=lambda r: (r["query_id"], -r["score"], r["vec_id"])):
-        by_q.setdefault(r["query_id"], []).append((r["vec_id"], round(r["score"], 9)))
+        by_q.setdefault(r["query_id"], []).append((r["vec_id"], r["score"]))
     for qid, q in enumerate([Q7, Q11]):
         seq = [
-            (r["vec_id"], round(r["score"], 9))
+            (r["vec_id"], r["score"])
             for r in ivf_search(assigned, centroids, q, k=5, nprobe=3).collect()
         ]
         assert by_q[qid] == seq, f"query {qid} diverged"
@@ -122,10 +122,10 @@ def test_lsh_search_batch_matches_sequential(emb):
     for r in sorted(
         batch.collect(), key=lambda r: (r["query_id"], -r["score"], r["vec_id"])
     ):
-        by_q.setdefault(r["query_id"], []).append((r["vec_id"], round(r["score"], 9)))
+        by_q.setdefault(r["query_id"], []).append((r["vec_id"], r["score"]))
     for qid, q in enumerate([Q7, Q11]):
         seq = [
-            (r["vec_id"], round(r["score"], 9))
+            (r["vec_id"], r["score"])
             for r in lsh_search(indexed, q, planes, k=5, multiprobe=3).collect()
         ]
         assert by_q[qid] == seq, f"query {qid} diverged"
@@ -801,19 +801,15 @@ def test_per_query_topk_matches_naive_window(emb, spark):
     approximation."""
     from pyspark.sql.window import Window
 
-    from otters_spark.functions.vector import queries_df, score_expr
+    from otters_spark.functions.vector import score_queries
     from otters_spark.operators.similarity import per_query_topk
-    from otters_spark.store import INV_NORM_COL, VecStore
+    from otters_spark.store import VecStore
 
     store = VecStore.from_df(emb, vec_col="embedding", dim=64, validate=False)
-    qdf = queries_df(spark, [Q7, Q11])
     for metric, ascending in (("cosine", False), ("euclidean", True)):
-        scored = store.df.crossJoin(F.broadcast(qdf)).withColumn(
-            "score",
-            score_expr(
-                "embedding", "qvec", metric, INV_NORM_COL, F.col("q_inv_norm")
-            ),
-        ).select("query_id", "vec_id", "score", "label")
+        scored = score_queries(store.df, [Q7, Q11], metric, "embedding").select(
+            "query_id", "vec_id", "score", "label"
+        )
         direction = (
             F.col("score").asc() if ascending else F.col("score").desc()
         )

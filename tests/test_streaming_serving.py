@@ -192,7 +192,7 @@ def test_every_entry_point_matches_numpy_topk(spark, matrix_store, metric, tmp_p
 
     from pyspark.sql import functions as F
 
-    from otters_spark.functions.vector import METRICS, queries_df, score_pairs
+    from otters_spark.functions.vector import METRICS, inv_norm_of, score_pairs
     from otters_spark.operators.similarity import (
         hyperplanes, ivf_search, ivf_search_batch, lsh_index, lsh_search,
         lsh_search_batch,
@@ -259,7 +259,10 @@ def test_every_entry_point_matches_numpy_topk(spark, matrix_store, metric, tmp_p
     # a literal query scores bit-identically to the same query as a column
     odd = [0.1, 1 / 3, -2.5e-8, 7.0]
     lit = dict(pairs(matrix_store.query(odd, metric).take(n_all).collect()))
-    col_form = score_pairs(matrix_store.df, queries_df(spark, [odd]), metric, "embedding")
+    odd_df = spark.createDataFrame(
+        [(0, odd, inv_norm_of(odd))], "query_id int, qvec array<double>, q_inv_norm double"
+    )
+    col_form = score_pairs(matrix_store.df, odd_df, metric, "embedding")
     assert lit == {
         i: s for i, s in pairs(col_form.collect()) if s is not None and not math.isnan(s)
     }
@@ -318,8 +321,11 @@ def test_serving_micro_batch_jobs(spark, matrix_store, tmp_path):
     """A one-query micro-batch runs at most two jobs (collect the query
     rows, then the literal-scored top-k: no broadcast job, no isEmpty
     job) and returns every valid row when k exceeds them, the real -∞
-    score last; an empty micro-batch runs at most one job and never
-    reaches the callback."""
+    score last; a three-query micro-batch runs at most three (the query
+    collect, the per-query window's shuffle map stage, the result: the
+    queries are one literal array, so there is no broadcast job) and
+    answers each query exactly; an empty micro-batch runs at most one
+    job and never reaches the callback."""
     q = _MATRIX_QUERIES[0]
     tracker = spark.sparkContext.statusTracker()
 
@@ -351,6 +357,13 @@ def test_serving_micro_batch_jobs(spark, matrix_store, tmp_path):
     _assert_rows(sorted(((r["vec_id"], r["score"]) for r in got),
                         key=lambda r: (-r[1], r[0])), want)
 
+    qs = {3: _MATRIX_QUERIES[0], 5: _MATRIX_QUERIES[1], 6: [1.0, 0.0, 2.0, 0.5]}
+    got, batches, jobs = serve("three", list(qs.items()))
+    assert batches == [0] and jobs <= 3, jobs
+    for qid, qv in qs.items():
+        rows = [(r["vec_id"], r["score"]) for r in got if r["query_id"] == qid]
+        _assert_rows(sorted(rows, key=lambda r: (-r[1], r[0])), _np_topk("dot", qv, len(_ROWS)))
+
     got, batches, jobs = serve("empty", [])
     assert batches == [] and jobs <= 1, (batches, jobs)
 
@@ -361,12 +374,10 @@ def test_per_query_k_bounded_by_window_group_limit(spark, matrix_store, tmp_path
     naming the conf, and serving rejects a bad k before any stream
     starts."""
     from otters_spark.functions.vector import (
-        WINDOW_GROUP_LIMIT_CONF, per_query_topk, queries_df, rank_topk, score_pairs,
+        WINDOW_GROUP_LIMIT_CONF, per_query_topk, rank_topk, score_queries,
     )
 
-    scored = score_pairs(
-        matrix_store.df, queries_df(spark, _MATRIX_QUERIES), "cosine", "embedding"
-    )
+    scored = score_queries(matrix_store.df, _MATRIX_QUERIES, "cosine", "embedding")
     old = spark.conf.get(WINDOW_GROUP_LIMIT_CONF)
     spark.conf.set(WINDOW_GROUP_LIMIT_CONF, "3")
     try:
