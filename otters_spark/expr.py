@@ -1,12 +1,13 @@
-"""Strict-typed expression DSL compiled to PySpark ``Column`` predicates.
+"""Strict-typed expression DSL compiled to SQL predicate text.
 
 Re-expresses the reference's expression layer (otters ``src/expr.rs``) on
 top of Catalyst. The *shape* of the DSL is identical —
 ``col("price").lt(lit(50.0)) & col("version").gte(lit(2))`` — but the
-execution is pure Spark: the compiled output is a ``pyspark.sql.Column``
-that Catalyst will push into the Parquet scan (zonemap/row-group pruning,
-bloom-filter pruning and row-level filtering all come from the scan
-pushdown, replacing src/meta.rs:405-544 and src/meta_compute.rs:194-318).
+execution is pure Spark: the compiled output is SQL text (and the same
+text as a ``pyspark.sql.Column``) that Catalyst will push into the
+Parquet scan (zonemap/row-group pruning, bloom-filter pruning and
+row-level filtering all come from the scan pushdown, replacing
+src/meta.rs:405-544 and src/meta_compute.rs:194-318).
 
 What we deliberately re-implement (Catalyst would silently coerce):
 the reference's strict, non-coercive typing rules (src/expr.rs:385-466):
@@ -55,7 +56,10 @@ from .errors import (
     UnsupportedStringOpError,
 )
 
-__all__ = ["col", "lit", "Expr", "CompiledFilter", "compile_expr", "SchemaLike"]
+__all__ = [
+    "col", "lit", "Expr", "CompiledFilter", "compile_expr", "SchemaLike", "sql_literal",
+    "quote_ident",
+]
 
 _CMP_OPS = ("eq", "neq", "lt", "lte", "gt", "gte")
 _STR_OPS = ("contains", "starts_with", "ends_with", "fuzzy")
@@ -270,24 +274,23 @@ class ColumnFilter:
 class CompiledFilter:
     """Result of compiling an :class:`Expr` against a schema.
 
-    ``condition`` is the Spark predicate to pass to ``df.filter`` —
-    Catalyst handles pushdown/pruning. It is built lazily because
-    ``pyspark.sql.Column`` construction needs an active SparkContext;
-    type checking and CNF lowering are eager and session-free. ``plan``
-    is the reference-parity CNF: a list of AND-clauses, each a list of
-    OR'd leaves (src/expr.rs:220-226). ``dropped_tautologies`` counts
-    clauses the reference would have removed (src/expr.rs:300-343).
+    ``sql`` is the predicate as SQL text, each literal typed to its
+    column; the plan API puts it in its one SQL statement, and Catalyst
+    handles pushdown/pruning. ``condition`` is the same text as a Spark
+    Column (``F.expr``), for ``df.filter``; type checking, CNF lowering
+    and the text are session-free. ``plan`` is the reference-parity
+    CNF: a list of AND-clauses, each a list of OR'd leaves
+    (src/expr.rs:220-226). ``dropped_tautologies`` counts clauses the
+    reference would have removed (src/expr.rs:300-343).
     """
 
     plan: list[list[ColumnFilter]]
     dropped_tautologies: int
-    _expr: Expr
-    _dtypes: dict
-    _fmts: dict
+    sql: str
 
     @property
     def condition(self) -> Column:
-        return _to_spark_condition(self._expr, self._dtypes, self._fmts)
+        return F.expr(self.sql)
 
 
 def compile_expr(
@@ -295,7 +298,7 @@ def compile_expr(
     schema: SchemaLike,
     datetime_fmt: dict[str, str] | None = None,
 ) -> CompiledFilter:
-    """Type-check + lower to CNF + build the Spark predicate.
+    """Type-check + lower to CNF + render the predicate as SQL text.
 
     Mirrors ``Expr::compile`` (src/expr.rs:285-343): leaves are
     type-checked against the schema with the strict rules of SURVEY §2.3,
@@ -310,16 +313,11 @@ def compile_expr(
         )
     dtypes = _schema_dtypes(schema)
     fmts = datetime_fmt or {}
-    # eager type-check + CNF lowering (raises ExprError on violations);
-    # the Spark Column itself is built lazily by CompiledFilter.condition
+    # eager type-check + CNF lowering (raises ExprError on violations)
     plan = _lower_to_plan(expr, dtypes, fmts)
     normalized, dropped = _normalize_plan(plan)
     return CompiledFilter(
-        plan=normalized,
-        dropped_tautologies=dropped,
-        _expr=expr,
-        _dtypes=dtypes,
-        _fmts=fmts,
+        plan=normalized, dropped_tautologies=dropped, sql=_to_sql(expr, dtypes, fmts)
     )
 
 
@@ -388,43 +386,76 @@ def _compile_leaf(node: Expr, dtypes: dict[str, str], fmts: dict[str, str]) -> C
     raise TypeMismatchError(f"column {name!r} has unsupported dtype for predicates")
 
 
-def _leaf_to_spark(leaf: ColumnFilter) -> Column:
-    c = F.col(leaf.column)
-    # fuzzy carries a (literal, max_edits) tuple — F.lit on it would
-    # build a bogus mixed-type array literal; its branch below builds
-    # its own literals
-    v = F.lit(leaf.value) if leaf.op != "fuzzy" else None
-    # lazy dispatch: branches must not be built eagerly — Column method
-    # calls like startswith(<double>) raise immediately for non-string
-    # values, so a dict of pre-built Columns would crash numeric leaves
-    return {
-        "eq": lambda: c == v,
-        "neq": lambda: c != v,
-        "lt": lambda: c < v,
-        "lte": lambda: c <= v,
-        "gt": lambda: c > v,
-        "gte": lambda: c >= v,
-        # Catalyst lowers these to StringContains/StartsWith/EndsWith,
-        # all pushable to the Parquet scan
-        "contains": lambda: c.contains(leaf.value),
-        "starts_with": lambda: c.startswith(leaf.value),
-        "ends_with": lambda: c.endswith(leaf.value),
-        # not scan-pushable (see Expr.fuzzy_eq) but pure JVM codegen
-        "fuzzy": lambda: F.levenshtein(c, F.lit(leaf.value[0])) <= F.lit(leaf.value[1]),
-    }[leaf.op]()
+def sql_literal(v: Any, dtype: str | None = None) -> str:
+    """SQL text of one literal, typed as ``F.lit(v)`` would type it (so
+    a predicate analyses to the same expression and pushes the same
+    filters), or as ``dtype`` says: ``"int64"`` gives a BIGINT
+    (``…L``) literal, ``"float32"``/``"float64"`` a DOUBLE. Doubles are
+    bit-exact (NaN and ±∞ as string casts); datetimes are naive UTC
+    TIMESTAMP literals (the session zone is UTC); strings escape quotes
+    and backslashes, and braces as ``\\u007B``/``\\u007D`` so no literal
+    can hold a statement's ``{base}`` placeholder."""
+    if v is None:
+        return "CAST(NULL AS DOUBLE)" if dtype in ("float32", "float64") else "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if dtype in ("float32", "float64") or isinstance(v, float):
+        x = float(v)
+        if math.isnan(x):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(x):
+            return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+        return f"{x!r}D"
+    if isinstance(v, int):
+        return f"{v}L" if dtype == "int64" else str(v)
+    if isinstance(v, _dt.datetime):
+        return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
+    if isinstance(v, _dt.date):
+        return f"DATE '{v.isoformat()}'"
+    if isinstance(v, str):
+        body = v.replace("\\", "\\\\").replace("'", "\\'")
+        return "'" + body.replace("{", "\\u007B").replace("}", "\\u007D") + "'"
+    raise InvalidExpressionError(f"unsupported literal type {type(v).__name__}")
 
 
-def _to_spark_condition(node: Expr, dtypes: dict[str, str], fmts: dict[str, str]) -> Column:
+def quote_ident(name: str) -> str:
+    """A column name as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+# ``col OP lit`` as SQL; Catalyst lowers contains/startswith/endswith
+# to StringContains/StartsWith/EndsWith, all pushable to the Parquet
+# scan; fuzzy (levenshtein) is not scan-pushable (see Expr.fuzzy_eq)
+_LEAF_SQL = {
+    "eq": "({c} = {v})",
+    "neq": "({c} != {v})",
+    "lt": "({c} < {v})",
+    "lte": "({c} <= {v})",
+    "gt": "({c} > {v})",
+    "gte": "({c} >= {v})",
+    "contains": "contains({c}, {v})",
+    "starts_with": "startswith({c}, {v})",
+    "ends_with": "endswith({c}, {v})",
+    "fuzzy": "(levenshtein({c}, {v}) <= {k})",
+}
+
+
+def _leaf_sql(leaf: ColumnFilter) -> str:
+    c = quote_ident(leaf.column)
+    if leaf.op == "fuzzy":
+        s, k = leaf.value
+        return _LEAF_SQL["fuzzy"].format(c=c, v=sql_literal(s), k=int(k))
+    return _LEAF_SQL[leaf.op].format(c=c, v=sql_literal(leaf.value, leaf.dtype))
+
+
+def _to_sql(node: Expr, dtypes: dict[str, str], fmts: dict[str, str]) -> str:
+    """The predicate as SQL text, in the tree's own AND/OR shape (the
+    CNF in ``plan`` is for introspection only)."""
     if node.kind == "cmp":
-        return _leaf_to_spark(_compile_leaf(node, dtypes, fmts))
-    if node.kind == "and":
-        return _to_spark_condition(node.left, dtypes, fmts) & _to_spark_condition(
-            node.right, dtypes, fmts
-        )
-    if node.kind == "or":
-        return _to_spark_condition(node.left, dtypes, fmts) | _to_spark_condition(
-            node.right, dtypes, fmts
-        )
+        return _leaf_sql(_compile_leaf(node, dtypes, fmts))
+    if node.kind in ("and", "or"):
+        op = " AND " if node.kind == "and" else " OR "
+        return "(" + _to_sql(node.left, dtypes, fmts) + op + _to_sql(node.right, dtypes, fmts) + ")"
     raise InvalidExpressionError(
         "bare column/literal is not a boolean expression (src/expr.rs:370)"
     )

@@ -23,10 +23,13 @@ A kernel's query operand is a column name, a Column, or a vector given
 as a Python sequence, which is inlined as one ``array(…D)`` literal
 (:func:`vector_literal_sql`): a known query is a constant in the plan,
 never a relation to join. Every vector search entry point scores and
-ranks through the functions at the end of this module:
-:func:`score_queries` (known queries: one as a literal, several as one
-literal array exploded with ``inline``), :func:`score_pairs` (queries
-that are themselves a DataFrame) and :func:`rank_topk`.
+ranks through the functions at the end of this module: the plan API
+and the serving loop through one SQL statement per query batch
+(:func:`scored_sql`, :func:`topk_sql`, run by :func:`run_sql`), the
+DataFrame entry points through :func:`score_queries` (known queries:
+one as a literal, several as one literal array exploded with
+``inline``), :func:`score_pairs` (queries that are themselves a
+DataFrame) and :func:`rank_topk`.
 
 Scale note: an Arrow/pandas-UDF matmul path for very wide vectors lives
 in ``otters_spark.operators.similarity``.
@@ -36,10 +39,13 @@ from __future__ import annotations
 
 import math
 import numbers
+import uuid
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
+
+from ..expr import quote_ident, sql_literal
 
 __all__ = [
     "METRICS",
@@ -58,6 +64,10 @@ __all__ = [
     "score_queries",
     "score_pairs",
     "rank_topk",
+    "SCORE_CMPS",
+    "scored_sql",
+    "topk_sql",
+    "run_sql",
     "per_query_topk",
     "check_per_query_k",
 ]
@@ -99,27 +109,15 @@ def _sql(x) -> str:
     if isinstance(x, str):
         return x if "`" in x else "`" + x.replace(".", "`.`") + "`"
     if isinstance(x, numbers.Real):
-        return _double_sql(x)
+        return sql_literal(x, "float64")
     return vector_literal_sql(x)
-
-
-def _double_sql(x) -> str:
-    # repr round-trips every finite double (-0.0 included); NaN and
-    # ±∞ have no literal syntax, so they go through a string cast
-    if x is None:
-        return "CAST(NULL AS DOUBLE)"
-    x = float(x)
-    if math.isnan(x):
-        return "CAST('NaN' AS DOUBLE)"
-    if math.isinf(x):
-        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
-    return f"{x!r}D"
 
 
 def vector_literal_sql(vec: Sequence[float] | None) -> str:
     """SQL text of a vector as an ``array<double>`` literal, bit-exact
     for every element (NULL, NaN and ±∞ included)."""
-    body = "NULL" if vec is None else "array(" + ", ".join(map(_double_sql, vec)) + ")"
+    body = "NULL" if vec is None else "array(" + ", ".join(
+        sql_literal(x, "float64") for x in vec) + ")"
     return f"CAST({body} AS ARRAY<DOUBLE>)"
 
 
@@ -282,19 +280,28 @@ def score_expr(vec_col, q_col, metric: str, inv_norm_col=None, q_inv_norm=None) 
 # --- the one scoring-and-ranking path ----------------------------------
 #
 # Every vector search entry point (plan API, serving, LSH/IVF/PQ/binary
-# ANN, the pandas matmul merge) ranks through :func:`rank_topk`. Known
-# query vectors are scored by :func:`score_queries`, a DataFrame of
-# queries by :func:`score_pairs`. The ranking rule is the reference's:
-# direction from METRICS (src/vec.rs:92-98), NaN scores dropped
-# (src/vec_compute.rs:236-239) — NULL with them — and ties broken on id
-# ascending so results are reproducible.
+# ANN, the pandas matmul merge) ranks by one rule: direction from
+# METRICS (src/vec.rs:92-98), NaN scores dropped (src/vec_compute.rs:
+# 236-239) — NULL with them — and ties broken on id ascending so results
+# are reproducible. The rank key and the validity test are rendered once
+# (_rank_key_sql, _valid_sql) for both forms of the path:
 #
-# No filter on the score sits between the scoring projection and the
-# limit or window: Catalyst pushes such a filter below the projection
-# (and into a join condition), where each reference to the score
-# re-evaluates the kernel. Invalid scores rank last instead and are
-# dropped after the limit — exact, because an invalid row reaches the
-# top k only when fewer than k valid rows exist.
+# * the statement form (:func:`scored_sql`, :func:`topk_sql`, run by
+#   :func:`run_sql`): the plan API and the serving loop build one SQL
+#   statement per query batch, parsed and analysed once. Its kernel is
+#   evaluated inside a one-element ``inline``, so the validity filter
+#   above it cannot be pushed into a second copy of the kernel; the
+#   filter then sits before the top-k, and ``ORDER BY … LIMIT k`` is the
+#   plan root (one stage) when the statement is collected.
+# * the DataFrame form (:func:`score_queries`, :func:`score_pairs`,
+#   :func:`rank_topk`) for the DataFrame entry points (ANN, PQ, binary,
+#   the suite). There no filter on the score sits between the scoring
+#   projection and the limit or window: Catalyst pushes such a filter
+#   below the projection (and into a join condition), where each
+#   reference to the score re-evaluates the kernel. Invalid scores rank
+#   last instead and are dropped after the limit — exact, because an
+#   invalid row reaches the top k only when fewer than k valid rows
+#   exist.
 
 
 def ranks_ascending(metric: str, direction: str | None = None) -> bool:
@@ -308,14 +315,136 @@ def ranks_ascending(metric: str, direction: str | None = None) -> bool:
     return d == "min"
 
 
-def _nan_to_null(score: Column) -> Column:
-    return F.nanvl(score, F.lit(None).cast("double"))
+def _rank_key_sql(score: str) -> str:
+    # NaN ranks as NULL: last in either direction
+    return f"nanvl({score}, CAST(NULL AS DOUBLE))"
+
+
+def _valid_sql(score: str) -> str:
+    return f"({_rank_key_sql(score)} IS NOT NULL)"
 
 
 def valid_score(score_col: str) -> Column:
     """True for a real score: not NULL, not NaN (±∞ are real scores).
     Reads the score once, so a pushed-down copy re-runs its kernel once."""
-    return _nan_to_null(F.col(score_col)).isNotNull()
+    return F.expr(_valid_sql(quote_ident(score_col)))
+
+
+#: score-filter comparisons (the plan's ``vec_filter`` cmp names) as SQL
+SCORE_CMPS = {"lt": "<", "lte": "<=", "gt": ">", "gte": ">=", "eq": "="}
+
+#: the relation placeholder of the statement texts, bound by :func:`run_sql`
+BASE = "{base}"
+
+
+def _batch_sql(queries: Sequence[Sequence[float] | None], ids: Sequence[str],
+               query_col: str) -> str:
+    """Several known queries as one literal array of (id, vector,
+    inverse norm) structs exploded by ``inline`` (the reference's
+    ``QueryBatch``, src/vec.rs:320-336): ``ids`` are SQL literal texts,
+    inverse norms are hoisted on the driver."""
+    structs = ", ".join(
+        f"named_struct({sql_literal(query_col)}, {qid}, '__qvec', {vector_literal_sql(q)}, "
+        f"'__q_inv_norm', {sql_literal(_literal_inv_norm(q), 'float64')})"
+        for qid, q in zip(ids, queries)
+    )
+    return f"inline(array({structs}))"
+
+
+def scored_sql(
+    queries: Sequence[Sequence[float] | None],
+    metric: str,
+    vec_col: str,
+    columns: Sequence[str],
+    inv_norm_col: str | None = None,
+    where: str | None = None,
+    score_filter: tuple[float, str] | None = None,
+    query_ids: Sequence[str] | None = None,
+    query_col: str = "query_id",
+) -> str:
+    """SQL text of the rows of :data:`BASE` that satisfy ``where`` (SQL
+    text over its columns), scored against each of ``queries``:
+    ``columns`` of the row, then ``query_col`` and ``score``. One query
+    is a literal and gets ``query_col`` only when ``query_ids`` (SQL
+    literal texts) is given; several are one literal array exploded by
+    ``inline``, ids 0..n-1 by default. The kernel runs once per (row,
+    query) pair, inside a one-element ``inline`` (see the comment
+    above). ``score_filter`` (threshold, cmp) NULLs a score that fails
+    it, so ranking drops it. Invalid scores are kept: :func:`topk_sql`
+    drops them."""
+    vec = "b." + quote_ident(vec_col)
+    inv = None if inv_norm_col is None else "b." + quote_ident(inv_norm_col)
+    cols = ["b." + quote_ident(c) for c in columns]
+    views = ""
+    if len(queries) == 1:
+        q = queries[0]
+        q_inv = _literal_inv_norm(q) if metric == "cosine" else None
+        kernel = _kernel_sql(metric, vec, vector_literal_sql(q), inv,
+                             None if q_inv is None else sql_literal(q_inv, "float64"))
+        if query_ids is not None:
+            cols.append(f"{query_ids[0]} AS {quote_ident(query_col)}")
+    else:
+        ids = query_ids or [str(i) for i in range(len(queries))]
+        views = f" LATERAL VIEW {_batch_sql(queries, ids, query_col)} q"
+        kernel = _kernel_sql(metric, vec, "q.__qvec", inv, "q.__q_inv_norm")
+        cols.append("q." + quote_ident(query_col))
+    score = "s.score"
+    if score_filter is not None:
+        thr, cmp = score_filter
+        score = (f"CASE WHEN s.score {SCORE_CMPS[cmp]} {sql_literal(float(thr), 'float64')} "
+                 "THEN s.score END")
+    rows = BASE if where is None else f"(SELECT * FROM {BASE} WHERE {where})"
+    return (
+        f"SELECT {', '.join(cols)}, {score} AS score FROM {rows} b{views} "
+        f"LATERAL VIEW inline(array(named_struct('score', {kernel}))) s"
+    )
+
+
+def topk_sql(
+    scored: str,
+    k: int | None,
+    metric: str,
+    id_col: str,
+    columns: Sequence[str],
+    direction: str | None = None,
+    query_col: str | None = None,
+) -> str:
+    """SQL text of the top-``k`` rows of the ``scored`` text by the one
+    ranking rule, as ``columns``: rows with an invalid score are dropped
+    first, then ``ORDER BY … LIMIT k`` (``k=None`` keeps every valid row,
+    sorted), or with ``query_col`` each query's own top-k through a
+    row-number window, planned as WindowGroupLimit."""
+    asc = "ASC" if ranks_ascending(metric, direction) else "DESC"
+    order = f"{_rank_key_sql('score')} {asc} NULLS LAST, {quote_ident(id_col)} ASC"
+    out = ", ".join(map(quote_ident, columns))
+    valid = f"({scored}) WHERE {_valid_sql('score')}"
+    if query_col is None:
+        return f"SELECT {out} FROM {valid} ORDER BY {order}" + (
+            "" if k is None else f" LIMIT {int(k)}")
+    return (
+        f"SELECT {out} FROM (SELECT *, row_number() OVER (PARTITION BY "
+        f"{quote_ident(query_col)} ORDER BY {order}) AS __pqk_rn FROM {valid}) "
+        f"WHERE __pqk_rn <= {int(k)}"
+    )
+
+
+def run_sql(base: DataFrame, text: str) -> DataFrame:
+    """The statement ``text`` over ``base`` (the relation :data:`BASE`
+    names), on ``base``'s own session: parsed and analysed once, with
+    ``base`` bound as a temporary view for that one analysis. Not
+    ``spark.sql(text, base=df)``: its formatter drops the view through
+    ``Catalog.dropTempView``, which also uncaches every cached plan equal
+    to the view's, so a cached store would lose its cache on every
+    query; the session catalog's own drop leaves caches alone. Literals
+    never hold a raw brace (:func:`~otters_spark.expr.sql_literal`), so
+    only the placeholder is replaced."""
+    spark = base.sparkSession
+    name = f"__otters_base_{uuid.uuid4().hex}"
+    base.createOrReplaceTempView(name)
+    try:
+        return spark.sql(text.replace(BASE, name))
+    finally:
+        spark._jsparkSession.sessionState().catalog().dropTempView(name)
 
 
 def score_queries(
@@ -323,18 +452,17 @@ def score_queries(
     queries: Sequence[Sequence[float] | None],
     metric: str,
     vec_col: str,
-    query_ids: Sequence[Column] | None = None,
+    query_ids: Sequence | None = None,
     query_col: str = "query_id",
 ) -> DataFrame:
     """Every candidate row scored against each of ``queries``, given as
     vectors: the candidates' columns plus ``score`` and ``query_col``
-    (``query_ids``, typed literal Columns, default 0..n-1), each
-    replacing any candidate column of that name. A known query is
-    always a literal, never a relation to join. One query is inlined in
-    one projection, one kernel evaluation per row; it gets
-    ``query_col`` only when ``query_ids`` is given. Several are one
-    literal array of (id, vector, inverse norm) structs exploded by
-    ``inline`` (the reference's ``QueryBatch``, src/vec.rs:320-336), with
+    (``query_ids``, literal values, default 0..n-1), each replacing any
+    candidate column of that name. A known query is always a literal,
+    never a relation to join. One query is inlined in one projection,
+    one kernel evaluation per row; it gets ``query_col`` only when
+    ``query_ids`` is given. Several are the statement form's literal
+    query array (see :func:`scored_sql`) exploded by ``inline``, with
     the kernel evaluated once per pair in the projection above it; a
     filter on ``query_col`` placed on the result lands between the two,
     so only the pairs it keeps are scored. Inverse norms are the
@@ -344,20 +472,15 @@ def score_queries(
     candidates = candidates.drop("score")
     inv = INV_NORM_COL if INV_NORM_COL in candidates.columns else None
     if len(queries) == 1:
-        cols = {} if query_ids is None else {query_col: query_ids[0]}
+        cols = {} if query_ids is None else {query_col: F.lit(query_ids[0])}
         cols["score"] = score_expr(vec_col, queries[0], metric, inv_norm_col=inv)
         return candidates.withColumns(cols)
     if not queries:
         raise ValueError("score_queries needs at least one query")
-    ids = query_ids or [F.lit(i) for i in range(len(queries))]
-    batch = F.array(*[
-        F.struct(qid.alias(query_col), F.expr(vector_literal_sql(q)).alias("__qvec"),
-                 F.lit(_literal_inv_norm(q)).alias("__q_inv_norm"))
-        for qid, q in zip(ids, queries)
-    ])
+    ids = [sql_literal(i) for i in (query_ids or range(len(queries)))]
     score = score_expr(vec_col, "__qvec", metric, inv_norm_col=inv, q_inv_norm="__q_inv_norm")
     return (
-        candidates.drop(query_col).select("*", F.inline(batch))
+        candidates.drop(query_col).select("*", F.expr(_batch_sql(queries, ids, query_col)))
         .withColumn("score", score).drop("__qvec", "__q_inv_norm")
     )
 
@@ -410,7 +533,7 @@ def rank_topk(
     planned as WindowGroupLimit (see :func:`per_query_topk`). All input
     columns are carried through."""
     ascending = ranks_ascending(metric, direction)
-    key = _nan_to_null(F.col(score_col))
+    key = F.expr(_rank_key_sql(quote_ident(score_col)))
     order = [key.asc_nulls_last() if ascending else key.desc_nulls_last(),
              F.col(id_col).asc()]
     if query_col is not None:

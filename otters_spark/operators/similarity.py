@@ -253,9 +253,7 @@ def maxsim_topk(
         F.col(vec_col).alias("__v"),
         inv_norm_expr(vec_col).alias(INV_NORM_COL),
     )
-    scored = score_queries(
-        toks, queries, "cosine", "__v", query_ids=[F.lit(i) for i in range(len(queries))]
-    )
+    scored = score_queries(toks, queries, "cosine", "__v", query_ids=range(len(queries)))
     per_q = scored.groupBy(group_col, "query_id").agg(F.max("score").alias("__m"))
     return (
         per_q.groupBy(group_col)
@@ -418,9 +416,7 @@ def _probe_search(
         raise ValueError("search needs >= 1 query and k >= 1")
     probes = [probe_keys(np.asarray(q, dtype=np.float64)) for q in qlist]
     cand = df.filter(F.col(key_col).isin(sorted({key for p in probes for key in p})))
-    scored = score_queries(
-        cand, qlist, metric, vec_col, query_ids=[F.lit(i) for i in range(len(qlist))]
-    )
+    scored = score_queries(cand, qlist, metric, vec_col, query_ids=range(len(qlist)))
     if len(qlist) > 1:
         probed = ", ".join(f"{i}, array({', '.join(map(str, p))})" for i, p in enumerate(probes))
         scored = scored.filter(F.expr(f"array_contains(map({probed})[query_id], `{key_col}`)"))

@@ -4,17 +4,31 @@ Reference lifecycle (SURVEY.md §3):
 ``store.query(qs, metric).meta_filter(expr).vec_filter(t, cmp).take(k).collect()``
 (otters src/vec.rs:56-311, src/meta.rs:569-829).
 
-Spark realization is a single declarative pipeline::
+Spark realization is ONE SQL statement over the store's DataFrame
+(``functions/vector.scored_sql`` + ``topk_sql``, run by ``run_sql`` with
+the DataFrame bound as ``{base}``), parsed and analysed once::
 
-    store.filter(meta_pred)                          # ← pushed into the scan
-         .withColumn('score', kernel(vec, array(…D)))    # ← score_queries
-         .withColumn('score', when(score CMP t, score))  # ← vec_filter
-         .orderBy(score NULLS LAST, id).limit(k)     # ┐ rank_topk: NaN ranks as
-         .filter(score is not NULL/NaN)              # ┘ NULL, dropped after limit
+    SELECT id, score, <meta cols>                         -- result columns
+    FROM (SELECT b.id, b.<meta>, CASE WHEN s.score CMP t  -- ← vec_filter
+                                      THEN s.score END AS score
+          FROM (SELECT * FROM {base} WHERE meta_pred) b   -- ← pushed into the scan
+          LATERAL VIEW inline(array(named_struct(         -- ← kernel once per row,
+            'score', kernel(vec, array(…D))))) s)          --   the query a literal
+    WHERE nanvl(score, NULL) IS NOT NULL                  -- ┐ NaN ranks as NULL and
+    ORDER BY nanvl(score, NULL) DESC NULLS LAST, id       -- │ is dropped first; the
+    LIMIT k                                               -- ┘ plan root: one stage
 
 The query is a literal, so there is no join and no query relation, and
 the kernel runs once per row; several queries are one literal array
 exploded over the rows (``inline``), the kernel once per pair. The
+kernel sits inside a one-element ``inline``, so Catalyst cannot push
+the validity filter into a second copy of it: the filter stays before
+the top-k, and collecting the statement runs ``TakeOrderedAndProject``
+as the plan root, in one stage with no shuffle. Row masks (arbitrary
+Columns) filter the store's DataFrame before it is bound.
+``collect_with_stats`` observes the statement's scored rows and ranks
+them with ``rank_topk`` (an Observation on a DataFrame bound into
+``spark.sql`` never completes on Spark 4.1). The
 reference's hand-built machinery maps 1:1 onto planner features:
 chunk pruning = row-group pruning (src/meta.rs:646-660), rayon chunk
 parallelism = task parallelism (src/meta.rs:678-709), TopKCollector's
@@ -48,8 +62,10 @@ from .errors import (
     PlanError,
 )
 from .expr import Expr, compile_expr
-from .functions.vector import METRICS, rank_topk, score_queries, valid_score
-from .store import MetaStore, VecStore
+from .functions.vector import (
+    METRICS, SCORE_CMPS, rank_topk, run_sql, scored_sql, topk_sql, valid_score,
+)
+from .store import INV_NORM_COL, MetaStore, VecStore
 
 __all__ = ["VecQueryPlan", "MetaQueryPlan", "QueryStats"]
 
@@ -93,8 +109,6 @@ class QueryStats:
     prune_sec: float | None = None
     score_sec: float | None = None
     merge_sec: float | None = None
-
-_CMPS = {"lt", "lte", "gt", "gte", "eq"}
 
 
 def _executed_plan_nodes(df: DataFrame):
@@ -292,8 +306,8 @@ class VecQueryPlan:
         (src/vec.rs:152 assigns ``filter_criteria = Some(...)``), not
         AND-accumulation."""
         if self._ok():
-            if cmp not in _CMPS:
-                self._error = PlanError(f"bad score cmp {cmp!r}; expected {sorted(_CMPS)}")
+            if cmp not in SCORE_CMPS:
+                self._error = PlanError(f"bad score cmp {cmp!r}; expected {sorted(SCORE_CMPS)}")
             else:
                 try:
                     self._vec_filter = (float(threshold), cmp)
@@ -367,47 +381,44 @@ class VecQueryPlan:
                         "(src/vec.rs:186-199)"
                     )
 
-    def _meta_condition(self):
+    def _meta_sql(self) -> str | None:
         return None
 
     def _result_columns(self) -> list[str]:
         return [self._store.id_col, "score"]
 
-    def df(self) -> DataFrame:
-        """Build the result DataFrame (lazy; the driver/action collects)."""
-        return self._build()
-
-    def _build(
-        self,
-        obs_candidates: Observation | None = None,
-        obs_survivors: Observation | None = None,
-    ) -> DataFrame:
+    def _scored(self) -> tuple[DataFrame, str]:
+        """The base relation (the store, row masks applied) and the SQL
+        text of its rows that pass the metadata predicate, scored
+        against every query with the score filter applied."""
         self._validate()
         store = self._store
         base = store.df
-        conds = [c for c in (self._meta_condition(), *self._row_masks) if c is not None]
-        if conds:
-            base = base.filter(functools.reduce(lambda a, b: a & b, conds))
-        if obs_candidates is not None:
-            base = base.observe(obs_candidates, F.count(F.lit(1)).alias("n"))
-        scored = score_queries(base, self._queries, self._metric, store.vec_col)
-        if self._vec_filter is not None:
-            # a failing score becomes NULL, which ranks last and is
-            # dropped after the limit: a filter here would be pushed
-            # below the scoring projection and re-run the kernel
-            thr, cmp = self._vec_filter
-            c = F.col("score")
-            t = F.lit(thr)
-            keep = {"lt": c < t, "lte": c <= t, "gt": c > t, "gte": c >= t, "eq": c == t}[cmp]
-            scored = scored.withColumn("score", F.when(keep, c))
-        if obs_survivors is not None:
-            scored = scored.observe(
-                obs_survivors, F.count_if(valid_score("score")).alias("n")
-            )
-        out = rank_topk(
-            scored, self._k, self._metric, store.id_col, direction=self._take_dir
+        if self._row_masks:
+            base = base.filter(functools.reduce(lambda a, b: a & b, self._row_masks))
+        several = len(self._queries) > 1
+        carried = [
+            c for c in dict.fromkeys(self._result_columns())
+            if c != "score" and not (several and c == "query_id")
+        ]
+        text = scored_sql(
+            self._queries, self._metric, store.vec_col, carried,
+            inv_norm_col=INV_NORM_COL if INV_NORM_COL in base.columns else None,
+            where=self._meta_sql(), score_filter=self._vec_filter,
         )
-        return out.select(*self._result_columns())
+        return base, text
+
+    def df(self) -> DataFrame:
+        """The result as one SQL statement over the store (lazy; parsed
+        and analysed once). Invalid scores are dropped before the top-k,
+        so the kernel runs once per (row, query) pair and, collected,
+        ``ORDER BY … LIMIT k`` is the plan root: one stage. ``k=None``
+        keeps every valid row, sorted, still scoring each row once."""
+        base, scored = self._scored()
+        return run_sql(base, topk_sql(
+            scored, self._k, self._metric, self._store.id_col,
+            self._result_columns(), direction=self._take_dir,
+        ))
 
     def collect(self) -> list:
         """Execute and materialize (reference ``collect``,
@@ -419,13 +430,22 @@ class VecQueryPlan:
         analog of the reference's per-query stats surface
         (src/meta.rs:710-721,832-842), gathered via Spark Observations
         so no extra job runs."""
-        obs_c, obs_s = Observation(), Observation()
-        df = self._build(obs_c, obs_s)
+        # the statement's scored rows, observed, then ranked as a
+        # DataFrame: an Observation on a DataFrame bound into spark.sql
+        # never completes (Spark 4.1), so the ranking stays outside it
+        base, scored = self._scored()
+        obs = Observation()
+        observed = run_sql(base, scored).observe(
+            obs, F.count(F.lit(1)).alias("pairs"), F.count_if(valid_score("score")).alias("valid")
+        )
+        df = rank_topk(
+            observed, self._k, self._metric, self._store.id_col, direction=self._take_dir
+        ).select(*self._result_columns())
         t0 = time.perf_counter()
         rows = df.collect()
         elapsed = time.perf_counter() - t0
-        candidates = int(obs_c.get["n"])
-        survivors = int(obs_s.get["n"])
+        candidates = int(obs.get["pairs"]) // len(self._queries)
+        survivors = int(obs.get["valid"])
         # chunk accounting at ROW-GROUP granularity when footers are
         # readable (reference chunk ≈ row group): evaluate this plan's
         # CNF against each row group's zonemaps — the same prune
@@ -502,11 +522,8 @@ class MetaQueryPlan(VecQueryPlan):
                 self._compiled.append(compiled)
         return self
 
-    def _meta_condition(self):
-        cond = None
-        for compiled in self._compiled:
-            cond = compiled.condition if cond is None else (cond & compiled.condition)
-        return cond
+    def _meta_sql(self) -> str | None:
+        return " AND ".join(c.sql for c in self._compiled) or None
 
     def _result_columns(self) -> list[str]:
         # result = index, score, then metadata columns in sorted-name

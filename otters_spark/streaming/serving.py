@@ -11,15 +11,16 @@ serving deployment needs. Two Spark-native shapes:
 * :func:`serve_query_stream` — micro-batch top-k via ``foreachBatch``:
   every micro-batch collects its few query rows and scores them as
   known vectors (one query as a literal, several as one literal array
-  exploded over the store), then hands results to a callback.
+  exploded over the store) in one SQL statement, then hands results to
+  a callback.
 
 The stream-static form scores through ``functions.vector.score_pairs``
-(its queries are a stream), the serving loop through
-``functions.vector.score_queries`` (its queries are known per batch);
-both use the same kernels and ``functions.vector``'s one direction
-rule, so for every metric a served query returns the rows the batch
-plan API returns — asserted metric by metric in
-tests/test_streaming_serving.py.
+(its queries are a stream), the serving loop through the statement
+renderer the plan API uses (``functions.vector.scored_sql`` and
+``topk_sql``: its queries are known per batch); both use the same
+kernels and ``functions.vector``'s one ranking rule, so for every
+metric a served query returns the rows the batch plan API returns —
+asserted metric by metric in tests/test_streaming_serving.py.
 """
 
 from __future__ import annotations
@@ -28,8 +29,10 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..expr import sql_literal
 from ..functions.vector import (
-    check_per_query_k, rank_topk, ranks_ascending, score_pairs, score_queries, valid_score,
+    INV_NORM_COL, check_per_query_k, ranks_ascending, run_sql, score_pairs, scored_sql,
+    topk_sql, valid_score,
 )
 from ..store import VecStore
 
@@ -70,34 +73,41 @@ def serve_query_stream(
     query_id_col: str = "query_id",
 ):
     """Micro-batch top-k serving loop: each arriving micro-batch's query
-    rows are collected (one small job; an empty batch stops there) and
-    scored by :func:`~otters_spark.functions.vector.score_queries`. One
-    query is a literal, scored and ranked with a global top-k in ONE job
-    with no join and no broadcast; several are one literal array
-    exploded over the store (no broadcast job either) and ranked per
-    query, planned as WindowGroupLimit, so each map task pre-limits to
-    k rows per query before the exchange.
+    rows are collected (one small job; an empty batch stops there), and
+    ``score_batch`` renders them into one SQL statement over the store
+    with the plan API's renderer
+    (:func:`~otters_spark.functions.vector.scored_sql`,
+    :func:`~otters_spark.functions.vector.topk_sql`), parsed and
+    analysed once. One query is a literal, scored and ranked with a
+    global top-k in ONE job with no join and no broadcast; several are
+    one literal array exploded over the store (no broadcast job either)
+    and ranked per query, planned as WindowGroupLimit, so each map task
+    pre-limits to k rows per query before the exchange. Either way the
+    kernel runs once per (row, query) pair and invalid scores are
+    dropped before the top-k.
     The result DataFrame (``query_id_col``, the store's id, ``score``)
     goes to ``on_batch(results, batch_id)``. ``metric`` and ``k`` are
     checked before the stream starts. Returns the started
     ``StreamingQuery`` (caller awaits/stops)."""
     ranks_ascending(metric)
     check_per_query_k(queries.sparkSession, k)
+    inv = INV_NORM_COL if INV_NORM_COL in store.df.columns else None
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.select(query_id_col, qvec_col).collect()
         if not rows:
             return
-        id_type = batch_df.schema[query_id_col].dataType
-        scored = score_queries(
-            store.df, [r[qvec_col] for r in rows], metric, store.vec_col,
-            query_ids=[F.lit(r[query_id_col]).cast(id_type) for r in rows],
+        id_type = batch_df.schema[query_id_col].dataType.simpleString()
+        scored = scored_sql(
+            [r[qvec_col] for r in rows], metric, store.vec_col, [store.id_col],
+            inv_norm_col=inv,
+            query_ids=[f"CAST({sql_literal(r[query_id_col])} AS {id_type})" for r in rows],
             query_col=query_id_col,
         )
-        topk = rank_topk(
-            scored.select(query_id_col, store.id_col, "score"), k, metric,
-            store.id_col, query_col=query_id_col if len(rows) > 1 else None,
-        )
+        topk = run_sql(store.df, topk_sql(
+            scored, k, metric, store.id_col, [query_id_col, store.id_col, "score"],
+            query_col=query_id_col if len(rows) > 1 else None,
+        ))
         on_batch(topk, batch_id)
 
     return (

@@ -29,7 +29,9 @@ from pyspark.sql.window import Window
 
 from .expr import col
 from .functions.scan import spread_small_scan
-from .functions.vector import rank_topk, score_expr, score_pairs, score_queries
+from .functions.vector import (
+    inv_norm_expr, rank_topk, score_pairs, score_queries,
+)
 from .sources import TABLES
 from .store import INV_NORM_COL, MetaStore
 
@@ -8496,27 +8498,19 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a vec_id tiebreak (the eval_ann_recall boundary discipline),
     so the k=10 cut is engine-stable; the vote breaks ties toward the
     smaller label. One broadcast crossJoin of 5 queries against the
-    store, one window, one vote aggregate."""
-    from .functions.vector import cosine_expr, inv_norm_expr
-
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
+    store (``score_pairs`` over ``emb_store``: both sides' inverse norms
+    are the stored ones, so the kernel is the only per-pair work), one
+    window, one vote aggregate."""
+    store = emb_store(spark, sf_dir)
+    queries = store.df.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
-        inv_norm_expr("embedding").alias("q_inv"),
+        F.col(INV_NORM_COL).alias("q_inv_norm"),
     )
     cand = (
-        emb.crossJoin(F.broadcast(queries))
+        score_pairs(store.df, queries, "cosine", "embedding")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "score",
-            F.round(
-                cosine_expr(
-                    "embedding", "qvec", inv_norm_expr("embedding"), F.col("q_inv")
-                ),
-                6,
-            ),
-        )
+        .withColumn("score", F.round("score", 6))
     )
     top = rank_topk(cand, 10, "cosine", "vec_id", query_col="query_id")
     votes = top.groupBy("query_id", "label").agg(
@@ -8636,9 +8630,12 @@ def eval_quant_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve rather than one operating point. Both lanes rank on
     6-dp-rounded scores with vec_id tiebreaks (the suite's boundary
     discipline), and the quantization arithmetic is deterministic
-    per-element math, so the whole curve is DuckDB-checkable. One
-    crossJoin + two windows over k-bounded lists; the per-k expansion
-    explodes a 3-element literal array, never data."""
+    per-element math, so the whole curve is DuckDB-checkable. One scan:
+    each row's two lanes (0 = exact float vector, 1 = reconstructed) are
+    exploded into rows, each lane row's inverse norm is computed once,
+    and ``score_queries`` scores every (lane row, query) pair with one
+    kernel; one window ranks each (query, lane) to its top 10, and the
+    per-k expansion explodes a 3-element literal array, never data."""
     emb = load(spark, sf_dir, "embeddings")
     vd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     s = (F.array_max(F.transform(F.col("__v"), F.abs)) / 127.0)
@@ -8656,27 +8653,18 @@ def eval_quant_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.col("__v")),
         )
     )
-    lanes = []
-    for qid, q in enumerate([Q7, Q11, Q13]):
-        lanes.append(
-            base.select(
-                F.lit(qid).alias("query_id"),
-                "vec_id",
-                F.round(score_expr("__v", q, "cosine"), 6).alias("s_exact"),
-                F.round(score_expr("__recon", q, "cosine"), 6).alias("s_quant"),
-            )
-        )
-    scored = lanes[0].unionByName(lanes[1]).unionByName(lanes[2])
-    wt = Window.partitionBy("query_id").orderBy(
-        F.col("s_exact").desc(), F.col("vec_id")
+    lanes = base.select("vec_id", F.inline(F.array(
+        F.struct(F.lit(0).alias("lane"), F.col("__v").alias("__vec")),
+        F.struct(F.lit(1).alias("lane"), F.col("__recon").alias("__vec")),
+    ))).withColumn(INV_NORM_COL, inv_norm_expr("__vec"))
+    scored = score_queries(lanes, [Q7, Q11, Q13], "cosine", "__vec")
+    w = Window.partitionBy("query_id", "lane").orderBy(
+        F.round("score", 6).desc(), F.col("vec_id")
     )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("s_quant").desc(), F.col("vec_id")
-    )
-    ranked = (
-        scored.withColumn("rt", F.row_number().over(wt))
-        .withColumn("ra", F.row_number().over(wa))
-        .filter((F.col("rt") <= 10) | (F.col("ra") <= 10))
+    top = scored.withColumn("r", F.row_number().over(w)).filter(F.col("r") <= 10)
+    ranked = top.groupBy("query_id", "vec_id").agg(
+        F.max(F.when(F.col("lane") == 0, F.col("r"))).alias("rt"),
+        F.max(F.when(F.col("lane") == 1, F.col("r"))).alias("ra"),
     )
     ks = F.explode(F.array(F.lit(1), F.lit(5), F.lit(10))).alias("k")
     per_k = ranked.select("query_id", "rt", "ra", ks)

@@ -231,3 +231,125 @@ class TestStringPredicates:
         )
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "StringStartsWith(tag,t1)" in plan.replace(" ", "").replace("[", "(").replace("]", ")") or "StartsWith" in plan
+
+
+# --- the predicate as SQL text: every leaf op × dtype, adversarial literals ---
+
+_INF = float("inf")
+_ADV_SCHEMA = (
+    "vec_id long, embedding array<float>, i32 int, i64 long, f32 float, f64 double, "
+    "s string, ts timestamp, d date"
+)
+_ADV_ROWS = [
+    (0, [1.0], -2**31, -2**63, -_INF, -_INF, "it's", dt.datetime(1969, 7, 20, 20, 17, 40, 123456),
+     dt.date(1969, 12, 31)),
+    (1, [1.0], 2**31 - 1, 2**63 - 1, _INF, _INF, "back\\slash", dt.datetime(1970, 1, 1),
+     dt.date(1970, 1, 1)),
+    (2, [1.0], 0, 0, 0.0, 0.0, "{}", dt.datetime(2024, 1, 2, 3, 4, 5, 6), dt.date(2024, 1, 2)),
+    (3, [1.0], 7, 7, 1.5, 0.1, "über 漢字 😀", dt.datetime(1900, 1, 1), dt.date(1900, 1, 1)),
+    (4, [1.0], None, None, None, None, None, None, None),
+    (5, [1.0], -1, -1, -0.5, 2.5, "", dt.datetime(1969, 12, 31, 23, 59, 59, 999999),
+     dt.date(2000, 2, 29)),
+    (6, [1.0], 1, 1, 0.1, 1e300, "{base}", dt.datetime(2038, 1, 19, 3, 14, 8), dt.date(1969, 7, 20)),
+    (7, [1.0], 2, 2, 2.0, -0.0, "a\nb'\\}{", dt.datetime(1969, 7, 20, 20, 17, 40, 123457),
+     dt.date(2038, 1, 19)),
+]
+_ADV_LITERALS = {
+    "i32": [-2**31, 2**31 - 1, 0, 7, 3_000_000_000],
+    "i64": [-2**63, 2**63 - 1, 7, -1],
+    "f32": [-_INF, _INF, 1.5, 0.1, 2],
+    "f64": [-_INF, _INF, 0.1, -0.0, 2.5],
+    "s": ["it's", "'", "\\", "back\\slash", "{}", "}{", "{base}", "über 漢字 😀", "",
+          "a\nb'\\}{", "漢"],
+    "ts": ["1969-07-20 20:17:40.123456", "1970-01-01", "2024-01-02T03:04:05.000006Z"],
+    "d": ["1969-12-31", "2024-01-02 00:00:00"],
+}
+_STRING_OPS = {
+    "eq": lambda v, x: v == x,
+    "neq": lambda v, x: v != x,
+    "contains": lambda v, x: x in v,
+    "starts_with": lambda v, x: v.startswith(x),
+    "ends_with": lambda v, x: v.endswith(x),
+}
+_ORDER_OPS = {
+    "eq": lambda v, x: v == x,
+    "neq": lambda v, x: v != x,
+    "lt": lambda v, x: v < x,
+    "lte": lambda v, x: v <= x,
+    "gt": lambda v, x: v > x,
+    "gte": lambda v, x: v >= x,
+}
+
+
+def _levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def _adversarial_leaves():
+    """(expr, python predicate over a row dict) for every leaf op ×
+    dtype × adversarial literal."""
+    out = []
+    for name, lits in _ADV_LITERALS.items():
+        for x in lits:
+            if name == "s":
+                ops = dict(_STRING_OPS, fuzzy=lambda v, x: _levenshtein(v, x) <= 1)
+            else:
+                ops = _ORDER_OPS
+            for op, fn in ops.items():
+                if op == "fuzzy":
+                    expr = col(name).fuzzy_eq(x, 1)
+                else:
+                    expr = col(name)._cmp(op, x)
+                want = x
+                if name in ("ts", "d"):
+                    want = parse_datetime_literal(x)
+                out.append((expr, name, fn, want))
+    return out
+
+
+def _py_leaf(row, name, fn, want) -> bool:
+    v = row[name]
+    if v is None:
+        return False
+    if name == "d":  # a date compares as its midnight timestamp
+        v = dt.datetime(v.year, v.month, v.day)
+    return bool(fn(v, want))
+
+
+def test_predicate_sql_matches_python_on_adversarial_literals(spark):
+    """The predicate text (``CompiledFilter.sql``) selects exactly the
+    rows a Python evaluation selects, for every leaf op and column type:
+    quotes, backslashes, braces, newlines and unicode in strings, ±∞ on
+    float columns, int32/int64 extremes and out-of-range literals,
+    pre-1970 timestamps with microseconds. One action evaluates all the
+    predicates; the brace and quote literals also run through the plan
+    API's statement, whose ``{base}`` placeholder no literal may hold."""
+    from otters_spark import MetaStore
+
+    df = spark.createDataFrame(_ADV_ROWS, _ADV_SCHEMA)
+    store = MetaStore.from_df(df, vec_col="embedding", id_col="vec_id")
+    leaves = _adversarial_leaves()
+    compiled = [compile_expr(expr, store.schema) for expr, *_ in leaves]
+    sel = [F.coalesce(c.condition, F.lit(False)).alias(f"p{i}") for i, c in enumerate(compiled)]
+    got = {r["vec_id"]: r for r in df.select("vec_id", *sel).collect()}
+    rows = [r.asDict() for r in df.collect()]
+    mismatches = []
+    for i, (expr, name, fn, want) in enumerate(leaves):
+        for row in rows:
+            if bool(got[row["vec_id"]][f"p{i}"]) != _py_leaf(row, name, fn, want):
+                mismatches.append((repr(expr), row["vec_id"], compiled[i].sql))
+    assert not mismatches, mismatches[:5]
+
+    for expr, name, fn, want in leaves:
+        if expr.op in ("eq", "contains") and name == "s" and any(ch in want for ch in "{}'\\"):
+            ids = sorted(
+                r["vec_id"]
+                for r in store.query([1.0], "dot").meta_filter(expr).take(None).collect()
+            )
+            assert ids == [r["vec_id"] for r in rows if _py_leaf(r, name, fn, want)], expr

@@ -3,10 +3,12 @@ top-k must be TakeOrderedAndProject (bounded heaps, no full sort),
 metadata predicates must reach the Parquet scan (row-group pruning),
 dimension joins must broadcast (no shuffle of the fact table)."""
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
 
-from otters_spark import MetaStore, col
+from otters_spark import MetaStore, col, compile_expr
 from otters_spark.suite import Q7, rel_brand_revenue
 
 
@@ -35,27 +37,149 @@ def test_meta_filter_pushed_to_scan(store):
     assert "EqualTo(label,3)" in plan.replace(" ", "")
 
 
-@pytest.mark.parametrize("metric", ["cosine", "dot"])
-def test_point_plan_scores_each_row_once(spark, store, metric):
-    """A point query is one job over one scan: the query vector is a
-    literal, so there is no join, broadcast or Python RDD, the kernel
-    appears once in the executed plan (no copy pushed into a filter or
-    join condition), and the metadata predicate still reaches the
-    Parquet scan."""
-    df = store.query(Q7, metric).meta_filter(col("label").eq(3)).take(5).df()
+def final_plan_of(df) -> str:
+    """The executed plan without AQE's initial-plan copy."""
+    return plan_of(df).split("== Initial Plan ==")[0]
+
+
+def jobs_and_stages(spark, group, action):
     sc = spark.sparkContext
-    group = f"point-plan-{metric}"
     sc.setJobGroup(group, group)
     try:
-        rows = df.collect()
+        out = action()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert rows and {r["label"] for r in rows} == {3}
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    plan = plan_of(df)
-    assert plan.count("aggregate(") == 1, plan
-    assert "BroadcastNestedLoopJoin" not in plan and "ExistingRDD" not in plan
-    assert "EqualTo(label,3)" in plan.replace(" ", "")
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    return out, len(jobs), sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot"])
+def test_point_plan_scores_each_row_once(spark, store, metric):
+    """A point query is one job of ONE stage over one scan, whether run
+    by ``collect()`` or by collecting ``df()``: the query vector is a
+    literal, so there is no join, broadcast or Python RDD; invalid
+    scores are dropped before the top-k, so ``TakeOrderedAndProject``
+    is the plan root (no shuffle); the kernel appears once in the
+    executed plan (no copy pushed into a filter or join condition); and
+    the metadata predicate still reaches the Parquet scan."""
+    plan = store.query(Q7, metric).meta_filter(col("label").eq(3)).take(5)
+    want, jobs, stages = jobs_and_stages(spark, f"point-collect-{metric}", plan.collect)
+    assert want and {r["label"] for r in want} == {3}
+    assert (jobs, stages) == (1, 1)
+    df = plan.df()
+    rows, jobs, stages = jobs_and_stages(spark, f"point-df-{metric}", df.collect)
+    assert rows == want and (jobs, stages) == (1, 1)
+    plan_text = plan_of(df)
+    assert plan_text.startswith("TakeOrderedAndProject"), plan_text
+    assert plan_text.count("aggregate(") == 1, plan_text
+    assert "BroadcastNestedLoopJoin" not in plan_text and "ExistingRDD" not in plan_text
+    assert "Exchange" not in plan_text
+    assert "EqualTo(label,3)" in plan_text.replace(" ", "")
+
+
+def test_take_none_scores_each_row_once(spark, store):
+    """``take(None)`` (every valid row, sorted) evaluates the kernel
+    once per row: the validity filter sits above the kernel's
+    ``inline``, so Catalyst cannot push a copy of the kernel into it."""
+    df = store.query(Q7, "cosine").vec_filter(0.0, "gt").take(None).df()
+    rows = df.collect()
+    assert rows and all(r["score"] > 0.0 for r in rows)
+    scores = [r["score"] for r in rows]
+    assert scores == sorted(scores, reverse=True)
+    assert final_plan_of(df).count("aggregate(") == 1, final_plan_of(df)
+
+
+def test_df_is_one_sql_statement(store, monkeypatch):
+    """Without a row mask, ``df()`` is built by ``spark.sql`` alone: no
+    DataFrame transformation runs (each one is an eager analysis)."""
+    cls = type(store.df)
+
+    def forbidden(name):
+        def call(*args, **kwargs):
+            raise AssertionError(f"DataFrame.{name} called while building df()")
+        return call
+
+    for name in ("filter", "where", "select", "selectExpr", "withColumn", "withColumns",
+                 "drop", "orderBy", "sort", "limit", "observe", "join", "crossJoin",
+                 "unionByName", "alias"):
+        monkeypatch.setattr(cls, name, forbidden(name))
+    df = (
+        store.query([Q7, Q7], "euclidean").meta_filter(col("label").gte(2))
+        .vec_filter(50.0, "lt").take(3).df()
+    )
+    monkeypatch.undo()
+    assert len(df.collect()) == 3
+
+
+_DTYPE_ROWS = [
+    (0, [1.0], 1, 1, 0.5, 0.5, "a", dt.datetime(2024, 1, 2, 3, 4, 5), dt.date(2024, 1, 2)),
+    (1, [1.0], 7, 2**40, 2.5, -1.5, "b", dt.datetime(1969, 7, 20, 20, 17, 40), dt.date(1960, 5, 1)),
+]
+_DTYPE_SCHEMA = (
+    "vec_id long, embedding array<float>, i32 int, i64 long, f32 float, f64 double, "
+    "s string, ts timestamp, d date"
+)
+_DTYPE_LEAVES = [
+    ("i32", 7), ("i32", 3_000_000_000), ("i64", 7), ("i64", 2**40), ("f32", 0.5), ("f32", 2),
+    ("f64", -1.5), ("f64", float("inf")), ("s", "b"), ("s", "it's {x}\\"),
+    ("ts", "2024-01-02 03:04:05"), ("ts", "1969-07-20T20:17:40.000001"), ("d", "2024-01-02"),
+]
+
+
+@pytest.mark.parametrize("op", ["eq", "neq", "lt", "gte", "contains", "starts_with",
+                                "ends_with"])
+def test_pushed_filters_match_column_predicates(spark, tmp_path_factory, op):
+    """Each literal of the SQL predicate is typed as ``F.lit`` types it,
+    so for every column type the scan's PushedFilters are those of the
+    Column predicate ``F.col(c) OP F.lit(value)``."""
+    import re
+
+    path = str(tmp_path_factory.mktemp("dtypes") / "store")
+    spark.createDataFrame(_DTYPE_ROWS, _DTYPE_SCHEMA).write.parquet(path)
+    store = MetaStore.from_df(spark.read.parquet(path), vec_col="embedding", id_col="vec_id")
+    cmp = {"eq": lambda c, v: c == v, "neq": lambda c, v: c != v,
+           "lt": lambda c, v: c < v, "gte": lambda c, v: c >= v,
+           "contains": lambda c, v: c.contains(v), "starts_with": lambda c, v: c.startswith(v),
+           "ends_with": lambda c, v: c.endswith(v)}[op]
+
+    def pushed(df):
+        # a predicate no row can satisfy plans as an empty relation
+        text = plan_of(df)
+        m = re.search(r"PushedFilters: \[[^\]]*\]", text)
+        return m.group(0) if m else ("<empty>" if "LocalTableScan <empty>" in text else text)
+
+    leaves = _DTYPE_LEAVES
+    if op not in ("eq", "neq"):  # strings take the string ops, the rest orderings
+        leaves = [(n, v) for n, v in leaves if (n == "s") == (op not in ("lt", "gte"))]
+    for name, value in leaves:
+        expr = col(name)._cmp(op, value)
+        leaf = compile_expr(expr, store.schema).plan[0][0]
+        want = pushed(store.df.filter(cmp(F.col(name), F.lit(leaf.value))))
+        got = pushed(store.query([1.0], "dot").meta_filter(expr).take(None).df())
+        assert got == want, (name, value)
+
+
+def test_statement_keeps_a_cached_store_cached(spark):
+    """Binding the store into the statement neither uncaches a cached
+    store (the plan reads the in-memory relation, query after query)
+    nor leaves a temporary view behind."""
+    from otters_spark import VecStore
+
+    df = spark.createDataFrame([(i, [float(i), 1.0]) for i in range(20)],
+                               "vec_id long, embedding array<double>")
+    store = VecStore.from_df(df, dim=2)
+    store.df.cache()
+    try:
+        store.df.count()
+        for _ in range(2):
+            df = store.query([1.0, 0.0], "dot").take(3).df()
+            assert [r["vec_id"] for r in df.collect()] == [19, 18, 17]
+            assert store.df.storageLevel.useMemory
+            assert "InMemoryTableScan" in plan_of(df)
+        assert not [t for t in spark.catalog.listTables() if t.name.startswith("__otters")]
+    finally:
+        store.df.unpersist()
 
 
 def test_several_queries_are_one_literal_array(spark, store):
@@ -83,14 +207,8 @@ def test_several_queries_are_one_literal_array(spark, store):
     generate = next(i for i, n in enumerate(nodes) if "Generate inline(" in n)
     assert kernel < probe < generate, nodes
 
-    sc = spark.sparkContext
-    sc.setJobGroup("several-queries", "several-queries")
-    try:
-        rows = df.collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(rows) == 10
-    assert len(sc.statusTracker().getJobIdsForGroup("several-queries")) == 1
+    rows, jobs, _ = jobs_and_stages(spark, "several-queries", df.collect)
+    assert len(rows) == 10 and jobs == 1
 
 
 def test_vector_literal_is_bit_exact(spark):

@@ -181,8 +181,10 @@ def matrix_store(spark):
 @pytest.mark.parametrize("metric", ["dot", "cosine", "euclidean", "manhattan",
                                     "hamming", "jaccard"])
 def test_every_entry_point_matches_numpy_topk(spark, matrix_store, metric, tmp_path):
-    """Plan API, serving, stream-static threshold, LSH and IVF (single
-    and batch, every bucket/cell probed) all return the exact float64
+    """Plan API (``collect()``, ``df().collect()`` and
+    ``collect_with_stats()``, with and without a score filter), serving,
+    stream-static threshold, LSH and IVF (single and batch, every
+    bucket/cell probed) all return the exact float64
     top-k: direction from METRICS, id tie-break, NULL/NaN rows never
     returned, real ±∞ scores ranked last but returned, and fewer than k
     rows when fewer are valid."""
@@ -236,10 +238,20 @@ def test_every_entry_point_matches_numpy_topk(spark, matrix_store, metric, tmp_p
         got, stats = plan.collect_with_stats()
         _assert_rows(pairs(got), _np_topk(metric, q, n_all, passing))
         assert stats.rows_after_filters == len(passing)
+        # collect(), df().collect() and collect_with_stats() are three
+        # entry points (one statement; the stats path ranks a DataFrame)
+        for kk in (k, n_all):
+            plan = matrix_store.query(q, metric).vec_filter(t, cmp).take(kk)
+            for got in (plan.collect(), plan.df().collect(), plan.collect_with_stats()[0]):
+                _assert_rows(pairs(got), _np_topk(metric, q, kk, passing))
     # one plan over both queries ranks every valid (row, query) pair
     both = [pair for q in qs for pair in _np_scored(metric, q)]
     got = matrix_store.query(qs, metric).take(2 * n_all).collect()
     _assert_rows(pairs(got), _np_topk(metric, None, 2 * n_all, both))
+    both_passing = [(i, s) for i, s in both if keep(s)]
+    plan = matrix_store.query(qs, metric).vec_filter(t, cmp).take(k)
+    for got in (plan.collect(), plan.df().collect(), plan.collect_with_stats()[0]):
+        _assert_rows(pairs(got), _np_topk(metric, None, k, both_passing))
     # a store whose own columns include `score` and `query_id` answers
     # the same: the kernel's score replaces its `score`
     shadow = VecStore.from_df(
