@@ -731,8 +731,13 @@ def main() -> int:
         #    its own file-source micro-batch (maxFilesPerTrigger=1).
         #    Round 6 showed this reads BELOW the cold-job QPS — the
         #    callback's scoring job is fast, but every trigger pays
-        #    file-source listing + offset-log + commit-log writes. The
-        #    breakdown (`vector_serving_breakdown`) records scoring
+        #    file-source listing + source/offset/commit-log writes.
+        #    Under Spark's default FileContext checkpoint manager each
+        #    log write forked a `chmod` and a `readlink` process from
+        #    the driver JVM (pip PySpark has no libhadoop); the
+        #    engine session's FileSystem manager leaves one `chmod`
+        #    per log file (session.py). The breakdown
+        #    (`vector_serving_breakdown`) records scoring
         #    seconds vs trigger-machinery seconds per query so the
         #    artifact itself says why the number is what it is.
         #  * batched tier (`vector_serving_batched_qps`): the same 20

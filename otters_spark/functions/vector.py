@@ -366,8 +366,11 @@ def scored_sql(
     text over its columns), scored against each of ``queries``:
     ``columns`` of the row, then ``query_col`` and ``score``. One query
     is a literal and gets ``query_col`` only when ``query_ids`` (SQL
-    literal texts) is given; several are one literal array exploded by
-    ``inline``, ids 0..n-1 by default. The kernel runs once per (row,
+    literal texts) is given, carried in the score's struct: that
+    ``inline`` is interpreted (the kernel is not code-generated), so a
+    new id compiles no new class, where a projected id literal is
+    inlined into generated Java. Several are one literal array exploded
+    by ``inline``, ids 0..n-1 by default. The kernel runs once per (row,
     query) pair, inside a one-element ``inline`` (see the comment
     above). ``score_filter`` (threshold, cmp) NULLs a score that fails
     it, so ranking drops it. Invalid scores are kept: :func:`topk_sql`
@@ -375,14 +378,15 @@ def scored_sql(
     vec = "b." + quote_ident(vec_col)
     inv = None if inv_norm_col is None else "b." + quote_ident(inv_norm_col)
     cols = ["b." + quote_ident(c) for c in columns]
-    views = ""
+    views, carried = "", ""
     if len(queries) == 1:
         q = queries[0]
         q_inv = _literal_inv_norm(q) if metric == "cosine" else None
         kernel = _kernel_sql(metric, vec, vector_literal_sql(q), inv,
                              None if q_inv is None else sql_literal(q_inv, "float64"))
         if query_ids is not None:
-            cols.append(f"{query_ids[0]} AS {quote_ident(query_col)}")
+            carried = f", {sql_literal(query_col)}, {query_ids[0]}"
+            cols.append("s." + quote_ident(query_col))
     else:
         ids = query_ids or [str(i) for i in range(len(queries))]
         views = f" LATERAL VIEW {_batch_sql(queries, ids, query_col)} q"
@@ -396,7 +400,7 @@ def scored_sql(
     rows = BASE if where is None else f"(SELECT * FROM {BASE} WHERE {where})"
     return (
         f"SELECT {', '.join(cols)}, {score} AS score FROM {rows} b{views} "
-        f"LATERAL VIEW inline(array(named_struct('score', {kernel}))) s"
+        f"LATERAL VIEW inline(array(named_struct('score', {kernel}{carried}))) s"
     )
 
 

@@ -79,6 +79,25 @@ def get_spark(
         # Arrow transport for pandas-UDF scoring paths
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # streaming checkpoint logs (source, offset, commit and state
+        # files) through FileSystem.create + rename instead of Spark's
+        # default FileContext manager. pip-installed PySpark ships no
+        # libhadoop, so local FileContext writes fork a `chmod` and
+        # `readlink` child of the driver JVM per log file, three files
+        # per micro-batch: this manager leaves one `chmod` per file
+        # (traced vector_serve trigger: offset phase 22 -> 12 ms,
+        # commit phase 32 -> 8 ms).
+        # It writes a temp file and renames it into place, atomic on
+        # local disk and HDFS; the trade-off is that an OVERWRITING
+        # write becomes delete + rename, and only state-store retries
+        # overwrite. Restore Spark's default (or name a cloud-store
+        # manager) via extra_conf={"spark.sql.streaming.
+        # checkpointFileManagerClass": ...}.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         # local mode hosts every executor thread in the driver JVM — an

@@ -21,6 +21,17 @@ renderer the plan API uses (``functions.vector.scored_sql`` and
 kernels and ``functions.vector``'s one ranking rule, so for every
 metric a served query returns the rows the batch plan API returns —
 asserted metric by metric in tests/test_streaming_serving.py.
+
+What a serving trigger costs beyond scoring: listing the query
+directory (``latestOffset``), collecting the batch's query rows, and
+three checkpoint-log writes (``sources/0/N``, ``offsets/N``,
+``commits/N``). The engine session writes those logs with Spark's
+FileSystem-based checkpoint manager (see ``session.py``): pip-installed
+PySpark has no native Hadoop library, and the default FileContext
+manager forks a ``chmod`` and a ``readlink`` process from the driver
+JVM per log file; the FileSystem manager leaves one ``chmod``. A
+one-query batch carries its id inside the score struct, outside
+generated code, so steady batches compile no Java class.
 """
 
 from __future__ import annotations

@@ -3,6 +3,7 @@ exactly the batch scoring results (batch-as-oracle, like the events
 streams)."""
 
 import json
+import os
 
 import pytest
 
@@ -418,3 +419,62 @@ def test_per_query_k_bounded_by_window_group_limit(spark, matrix_store, tmp_path
         )
     assert len(spark.streams.active) == active
     assert not (tmp_path / "ckpt0").exists()
+
+
+
+def _send(qdir, qid, vec):
+    """One query file, renamed into place so a trigger never reads it
+    half written."""
+    tmp = os.path.join(qdir, f".{qid}.json.tmp")
+    with open(tmp, "w") as f:
+        f.write(json.dumps({"query_id": qid, "qvec": vec}) + "\n")
+    os.rename(tmp, os.path.join(qdir, f"{qid}.json"))
+
+
+def _serve_each(spark, store, qdir, ckpt, queries, on_batch):
+    """Serve ``queries`` (id -> vector), one file and one trigger each."""
+    os.makedirs(qdir, exist_ok=True)
+    sq = serve_query_stream(
+        spark.readStream.schema(QUERY_SCHEMA).json(qdir), store,
+        on_batch=on_batch, checkpoint_dir=ckpt, metric="dot", k=3,
+    )
+    try:
+        for qid, vec in queries.items():
+            _send(qdir, qid, vec)
+            sq.processAllAvailable()
+    finally:
+        sq.stop()
+
+
+def test_serving_restart_answers_each_query_once(spark, matrix_store, tmp_path):
+    """Restarted on its checkpoint (written by the session's checkpoint
+    file manager), the serving loop neither replays nor skips: queries 0
+    and 1 before the stop and 2 after are answered by batches 0, 1 and 2,
+    each exactly once."""
+    qdir, ckpt = str(tmp_path / "queries"), str(tmp_path / "ckpt")
+    batches = []
+
+    def on_batch(df, bid):
+        batches.append((bid, sorted({r["query_id"] for r in df.collect()})))
+
+    _serve_each(spark, matrix_store, qdir, ckpt, dict(enumerate(_MATRIX_QUERIES)), on_batch)
+    _serve_each(spark, matrix_store, qdir, ckpt, {2: [1.0, 0.0, 2.0, 0.5]}, on_batch)
+    assert batches == [(0, [0]), (1, [1]), (2, [2])]
+
+
+def test_served_query_ids_compile_no_code(spark, matrix_store, tmp_path):
+    """A one-query batch's id rides in the score struct, outside
+    generated code: after a warm-up batch, five batches with new ids
+    compile no Java class."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    counts = []
+
+    def on_batch(df, bid):
+        df.collect()
+        counts.append((bid, compiles.getCount()))
+
+    queries = {100 + i: _MATRIX_QUERIES[i % 2] for i in range(6)}
+    _serve_each(spark, matrix_store, str(tmp_path / "queries"), str(tmp_path / "ckpt"),
+                queries, on_batch)
+    assert [bid for bid, _ in counts] == list(range(6))
+    assert counts[-1][1] - counts[0][1] == 0
