@@ -4,9 +4,10 @@ Replaces the reference's SIMD scoring kernels (otters
 src/vec_compute.rs:9-54) with JVM-side higher-order functions
 (``zip_with`` + ``aggregate``), so the hot loop never crosses into
 Python. They are not compiled by whole-stage codegen: Spark evaluates
-higher-order functions through ``CodegenFallback``, at about 20 µs per
-64-d pair (perfbench/README.md), so the number of kernel evaluations per
-(row, query) pair is what a plan shape costs. All accumulation is in
+higher-order functions through ``CodegenFallback``, at about 4.7
+core-µs per 64-d pair on a cached 200k-row store (a 1.1 µs scan floor
+included), so the number of kernel evaluations per (row, query) pair
+is what a plan shape costs. All accumulation is in
 float64 (the reference accumulates f32; we compare against the DuckDB
 oracle at 1e-5, the reference's own test tolerance,
 tests/vec_store_tests.rs:158,586).
@@ -23,13 +24,12 @@ A kernel's query operand is a column name, a Column, or a vector given
 as a Python sequence, which is inlined as one ``array(…D)`` literal
 (:func:`vector_literal_sql`): a known query is a constant in the plan,
 never a relation to join. Every vector search entry point scores and
-ranks through the functions at the end of this module: the plan API
-and the serving loop through one SQL statement per query batch
-(:func:`scored_sql`, :func:`topk_sql`, run by :func:`run_sql`), the
-DataFrame entry points through :func:`score_queries` (known queries:
-one as a literal, several as one literal array exploded with
-``inline``), :func:`score_pairs` (queries that are themselves a
-DataFrame) and :func:`rank_topk`.
+ranks through the one statement form at the end of this module
+(:func:`scored_sql`, :func:`topk_sql`, run by :func:`run_sql`): the
+plan API and the serving loop render one statement per query batch,
+and the DataFrame entry points wrap the same texts
+(:func:`score_queries`, :func:`rank_topk`); :func:`score_pairs` scores
+queries that are themselves a DataFrame with the same kernel.
 
 Scale note: an Arrow/pandas-UDF matmul path for very wide vectors lives
 in ``otters_spark.operators.similarity``.
@@ -43,7 +43,6 @@ import uuid
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 from ..expr import quote_ident, sql_literal
 
@@ -68,7 +67,6 @@ __all__ = [
     "scored_sql",
     "topk_sql",
     "run_sql",
-    "per_query_topk",
     "check_per_query_k",
 ]
 
@@ -280,28 +278,20 @@ def score_expr(vec_col, q_col, metric: str, inv_norm_col=None, q_inv_norm=None) 
 # --- the one scoring-and-ranking path ----------------------------------
 #
 # Every vector search entry point (plan API, serving, LSH/IVF/PQ/binary
-# ANN, the pandas matmul merge) ranks by one rule: direction from
-# METRICS (src/vec.rs:92-98), NaN scores dropped (src/vec_compute.rs:
+# ANN, the pandas matmul merge, the suite) ranks by one rule: direction
+# from METRICS (src/vec.rs:92-98), NaN scores dropped (src/vec_compute.rs:
 # 236-239) — NULL with them — and ties broken on id ascending so results
-# are reproducible. The rank key and the validity test are rendered once
-# (_rank_key_sql, _valid_sql) for both forms of the path:
-#
-# * the statement form (:func:`scored_sql`, :func:`topk_sql`, run by
-#   :func:`run_sql`): the plan API and the serving loop build one SQL
-#   statement per query batch, parsed and analysed once. Its kernel is
-#   evaluated inside a one-element ``inline``, so the validity filter
-#   above it cannot be pushed into a second copy of the kernel; the
-#   filter then sits before the top-k, and ``ORDER BY … LIMIT k`` is the
-#   plan root (one stage) when the statement is collected.
-# * the DataFrame form (:func:`score_queries`, :func:`score_pairs`,
-#   :func:`rank_topk`) for the DataFrame entry points (ANN, PQ, binary,
-#   the suite). There no filter on the score sits between the scoring
-#   projection and the limit or window: Catalyst pushes such a filter
-#   below the projection (and into a join condition), where each
-#   reference to the score re-evaluates the kernel. Invalid scores rank
-#   last instead and are dropped after the limit — exact, because an
-#   invalid row reaches the top k only when fewer than k valid rows
-#   exist.
+# are reproducible. The rule exists as one SQL text, :func:`topk_sql`,
+# over the scored rows of :func:`scored_sql`, both run by :func:`run_sql`
+# (the reference's one TopKCollector, src/vec_compute.rs:77-294). The
+# plan API and the serving loop render one statement per query batch;
+# :func:`score_queries` and :func:`rank_topk` run the same texts over a
+# DataFrame. A kernel is evaluated inside a one-element ``inline`` (here
+# and in :func:`score_pairs`), so the validity filter above it cannot be
+# pushed into a second copy of the kernel: invalid scores are dropped
+# before the top-k, the kernel runs once per (row, query) pair, and
+# ``ORDER BY … LIMIT k`` is the plan root (one stage) when a statement
+# is collected.
 
 
 def ranks_ascending(metric: str, direction: str | None = None) -> bool:
@@ -325,8 +315,7 @@ def _valid_sql(score: str) -> str:
 
 
 def valid_score(score_col: str) -> Column:
-    """True for a real score: not NULL, not NaN (±∞ are real scores).
-    Reads the score once, so a pushed-down copy re-runs its kernel once."""
+    """True for a real score: not NULL, not NaN (±∞ are real scores)."""
     return F.expr(_valid_sql(quote_ident(score_col)))
 
 
@@ -460,33 +449,24 @@ def score_queries(
     query_col: str = "query_id",
 ) -> DataFrame:
     """Every candidate row scored against each of ``queries``, given as
-    vectors: the candidates' columns plus ``score`` and ``query_col``
-    (``query_ids``, literal values, default 0..n-1), each replacing any
-    candidate column of that name. A known query is always a literal,
-    never a relation to join. One query is inlined in one projection,
-    one kernel evaluation per row; it gets ``query_col`` only when
-    ``query_ids`` is given. Several are the statement form's literal
-    query array (see :func:`scored_sql`) exploded by ``inline``, with
-    the kernel evaluated once per pair in the projection above it; a
-    filter on ``query_col`` placed on the result lands between the two,
-    so only the pairs it keeps are scored. Inverse norms are the
-    candidates' stored :data:`INV_NORM_COL` when present and each
-    query's, hoisted on the driver. Invalid scores are kept;
-    :func:`rank_topk` ranks them last and drops them."""
-    candidates = candidates.drop("score")
-    inv = INV_NORM_COL if INV_NORM_COL in candidates.columns else None
-    if len(queries) == 1:
-        cols = {} if query_ids is None else {query_col: F.lit(query_ids[0])}
-        cols["score"] = score_expr(vec_col, queries[0], metric, inv_norm_col=inv)
-        return candidates.withColumns(cols)
+    vectors: :func:`scored_sql` over ``candidates``, so the candidates'
+    columns plus ``query_col`` (``query_ids``, literal values, default
+    0..n-1) and ``score``, each replacing any candidate column of that
+    name. One query gets ``query_col`` only when ``query_ids`` is given.
+    The kernel runs once per (row, query) pair, and a filter on
+    ``query_col`` placed on the result lands below it, so only the pairs
+    it keeps are scored. Inverse norms are the candidates' stored
+    :data:`INV_NORM_COL` when present and each query's, hoisted on the
+    driver. Invalid scores are kept; :func:`rank_topk` drops them."""
     if not queries:
         raise ValueError("score_queries needs at least one query")
-    ids = [sql_literal(i) for i in (query_ids or range(len(queries)))]
-    score = score_expr(vec_col, "__qvec", metric, inv_norm_col=inv, q_inv_norm="__q_inv_norm")
-    return (
-        candidates.drop(query_col).select("*", F.expr(_batch_sql(queries, ids, query_col)))
-        .withColumn("score", score).drop("__qvec", "__q_inv_norm")
-    )
+    replaced = {"score", query_col} if len(queries) > 1 or query_ids is not None else {"score"}
+    return run_sql(candidates, scored_sql(
+        queries, metric, vec_col, [c for c in candidates.columns if c not in replaced],
+        inv_norm_col=INV_NORM_COL if INV_NORM_COL in candidates.columns else None,
+        query_ids=None if query_ids is None else [sql_literal(i) for i in query_ids],
+        query_col=query_col,
+    ))
 
 
 def score_pairs(
@@ -498,10 +478,11 @@ def score_pairs(
 ) -> DataFrame:
     """Every candidate row crossed with every query row (the query
     batch broadcasts — it is the small side) plus a ``score`` column
-    from :func:`score_expr`: the form for queries that are themselves a
-    DataFrame (a stream, or rows of a table); known vectors go through
-    :func:`score_queries`. Inverse norms are the stored ones: the
-    candidates' :data:`INV_NORM_COL` and the queries' ``q_inv_norm``
+    from :func:`score_expr`, evaluated inside a one-element ``inline``
+    like :func:`scored_sql`'s kernel: the form for queries that are
+    themselves a DataFrame (a stream, or rows of a table); known vectors
+    go through :func:`score_queries`. Inverse norms are the stored ones:
+    the candidates' :data:`INV_NORM_COL` and the queries' ``q_inv_norm``
     column when present, each computed in place when absent. Invalid
     (NULL/NaN) scores are kept: :func:`rank_topk` drops them, and a
     caller that does not rank filters on :func:`valid_score`. All
@@ -509,11 +490,10 @@ def score_pairs(
     if "q_inv_norm" not in queries.columns:
         queries = queries.withColumn("q_inv_norm", inv_norm_expr(qvec_col))
     inv = INV_NORM_COL if INV_NORM_COL in candidates.columns else None
-    return candidates.crossJoin(F.broadcast(queries)).withColumn(
-        "score",
-        score_expr(vec_col, qvec_col, metric, inv_norm_col=inv,
-                   q_inv_norm=F.col("q_inv_norm")),
-    )
+    score = score_expr(vec_col, qvec_col, metric, inv_norm_col=inv,
+                       q_inv_norm=F.col("q_inv_norm"))
+    return candidates.crossJoin(F.broadcast(queries)).drop("score").select(
+        "*", F.inline(F.array(F.struct(score.alias("score")))))
 
 
 def rank_topk(
@@ -522,76 +502,27 @@ def rank_topk(
     metric: str,
     id_col: str,
     query_col: str | None = None,
-    score_col: str = "score",
-    direction: str | None = None,
 ) -> DataFrame:
-    """Top-``k`` of an already-scored frame by the engine's one ranking
-    rule: direction from :func:`ranks_ascending`, ties on ``id_col``
-    ascending, NULL/NaN scores ranked last and dropped after the limit
-    (so fewer than ``k`` rows come back when fewer are valid). With
-    ``query_col=None`` the ranking is global — ``ORDER BY … LIMIT k``,
-    planned as TakeOrderedAndProject (per-partition bounded heaps + a
-    merge, the distributed TopKCollector of src/vec_compute.rs:77-294);
-    ``k=None`` keeps every valid row, sorted. Otherwise each
-    ``query_col`` group keeps its own top-k through a row-number window
-    planned as WindowGroupLimit (see :func:`per_query_topk`). All input
-    columns are carried through."""
-    ascending = ranks_ascending(metric, direction)
-    key = F.expr(_rank_key_sql(quote_ident(score_col)))
-    order = [key.asc_nulls_last() if ascending else key.desc_nulls_last(),
-             F.col(id_col).asc()]
+    """Top-``k`` of an already-scored frame (its ``score`` column) by the
+    one ranking rule: :func:`topk_sql` over ``scored``, so invalid
+    scores are dropped first and fewer than ``k`` rows come back when
+    fewer are valid. With ``query_col=None`` the ranking is global —
+    ``ORDER BY … LIMIT k``, planned as TakeOrderedAndProject
+    (per-partition bounded heaps + a merge, the distributed
+    TopKCollector of src/vec_compute.rs:77-294); ``k=None`` keeps every
+    valid row, sorted. Otherwise each ``query_col`` group (a NULL key
+    is a group too) keeps its own top-k through a row-number window,
+    planned as WindowGroupLimit Partial/Final (SPARK-37099): each map
+    task pre-limits its partition to k rows per query before the
+    exchange, so the shuffle sees at most partitions × |queries| × k
+    rows, never the scored corpus — for ``k`` up to
+    :data:`WINDOW_GROUP_LIMIT_CONF`, above which it raises (locked by
+    tests/test_plans.py::test_per_query_topk_shuffle_input_is_bounded).
+    All input columns are carried through."""
     if query_col is not None:
         check_per_query_k(scored.sparkSession, k)
-        ranked = _limit_per_group(scored, k, query_col, order)
-    else:
-        ranked = scored.orderBy(*order)
-        if k is not None:
-            ranked = ranked.limit(k)
-    return ranked.filter(valid_score(score_col))
-
-
-def per_query_topk(
-    scored: DataFrame,
-    k: int,
-    query_col: str = "query_id",
-    score_col: str = "score",
-    id_col: str = "vec_id",
-    ascending: bool = False,
-) -> DataFrame:
-    """EXACT per-query top-k over an already-scored frame whose shuffle
-    input is BOUNDED — the scale-safe device for batch/serving search.
-
-    One plain rank window: Spark plans ``row_number() <= k`` as
-    **WindowGroupLimit Partial/Final** (SPARK-37099) for k up to
-    :data:`WINDOW_GROUP_LIMIT_CONF` (default 1000). Each map task
-    pre-limits its partition to k rows per query BEFORE the exchange,
-    so the shuffle and the final per-query window see at most
-    partitions × |queries| × k rows — never the scored corpus. Above
-    the threshold that bound is silently lost, so a larger ``k``
-    raises. The plan shape is locked by
-    tests/test_plans.py::test_per_query_topk_shuffle_input_is_bounded.
-
-    Spark's own NULL/NaN window semantics are kept as they are: a NULL
-    query key is its own group, NaN sorts as the largest double, NULL
-    scores sort last under DESC / first under ASC — identical to the
-    naive window, asserted in tests/test_similarity.py. Callers that
-    rank vector scores go through :func:`rank_topk`, which ranks
-    NULL/NaN scores last and drops them.
-
-    Ordering: ``score_col`` desc (asc when ``ascending``), then
-    ``id_col`` asc. All input columns are carried through."""
-    check_per_query_k(scored.sparkSession, k)
-    direction = F.col(score_col).asc() if ascending else F.col(score_col).desc()
-    return _limit_per_group(scored, k, query_col, [direction, F.col(id_col).asc()])
-
-
-def _limit_per_group(scored: DataFrame, k: int, group_col: str, order: list) -> DataFrame:
-    w = Window.partitionBy(group_col).orderBy(*order)
-    return (
-        scored.withColumn("__pqk_rn", F.row_number().over(w))
-        .filter(F.col("__pqk_rn") <= k)
-        .drop("__pqk_rn")
-    )
+    return run_sql(scored, topk_sql(
+        f"SELECT * FROM {BASE}", k, metric, id_col, scored.columns, query_col=query_col))
 
 
 def check_per_query_k(spark: SparkSession, k: int) -> None:

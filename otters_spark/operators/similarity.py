@@ -29,7 +29,6 @@ from pyspark.sql import types as T
 from ..functions.vector import (
     dot_expr,
     inv_norm_expr,
-    per_query_topk,
     rank_topk,
     ranks_ascending,
     score_queries,
@@ -39,7 +38,6 @@ from ..store import INV_NORM_COL
 __all__ = [
     "maxsim_topk",
     "pandas_matmul_topk",
-    "per_query_topk",
     "hyperplanes",
     "lsh_bucket_expr",
     "lsh_index",
@@ -406,7 +404,7 @@ def _probe_search(
     as literals (:func:`score_queries`), keep each (row, query) pair
     whose key that query probes — a filter on a literal
     ``map(query_id → keys)`` that Catalyst places between the query
-    explode and the kernel projection, so only probed pairs are scored
+    explode and the kernel's ``inline``, so only probed pairs are scored
     — and rank: one global top-k, or with ``batch`` a per-query one.
     Batch and single paths score the same pairs with the same
     expression and the same driver-computed inverse norms, so they rank
@@ -922,17 +920,17 @@ def pq_search(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    scored = encoded.withColumn("approx_score", approx)
-    if store is None or rerank is None:
-        return rank_topk(scored, k, metric, id_col, score_col="approx_score").select(
-            id_col, "approx_score"
-        )
-    cand = rank_topk(
-        scored, max(rerank, k), metric, id_col, score_col="approx_score"
-    ).select(id_col, "approx_score")
+    # inside a one-element inline, so ranking cannot copy the kernel
+    scored = encoded.select("*", F.inline(F.array(F.struct(approx.alias("score")))))
+    exact = store is not None and rerank is not None
+    cand = rank_topk(scored, max(rerank, k) if exact else k, metric, id_col).select(
+        id_col, F.col("score").alias("approx_score")
+    )
+    if not exact:
+        return cand
     qflat = [float(x) for x in np.asarray(query, dtype=np.float64).ravel()]
-    exact = score_queries(store.join(F.broadcast(cand), id_col), [qflat], metric, vec_col)
-    return rank_topk(exact, k, metric, id_col).select(id_col, "score", "approx_score")
+    rescored = score_queries(store.join(F.broadcast(cand), id_col), [qflat], metric, vec_col)
+    return rank_topk(rescored, k, metric, id_col).select(id_col, "score", "approx_score")
 
 
 # ---------------------------------------------------------------------
@@ -1037,9 +1035,8 @@ def binary_search(
     qwords = pack_sign_bits_py(q)
     ham = hamming_bits_expr(bits_col, qwords)
     cand = rank_topk(
-        indexed.withColumn("hamming", ham), shortlist, "hamming", id_col,
-        score_col="hamming",
-    )
+        indexed.withColumn("score", ham), shortlist, "hamming", id_col
+    ).withColumnRenamed("score", "hamming")
     scored = score_queries(cand, [q], "cosine", vec_col)
     if round_to is not None:
         scored = scored.withColumn("score", F.round("score", round_to))

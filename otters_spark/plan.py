@@ -26,10 +26,9 @@ the validity filter into a second copy of it: the filter stays before
 the top-k, and collecting the statement runs ``TakeOrderedAndProject``
 as the plan root, in one stage with no shuffle. Row masks (arbitrary
 Columns) filter the store's DataFrame before it is bound.
-``collect_with_stats`` observes the statement's scored rows and ranks
-them with ``rank_topk`` (an Observation on a DataFrame bound into
-``spark.sql`` never completes on Spark 4.1). The
-reference's hand-built machinery maps 1:1 onto planner features:
+``collect_with_stats`` collects the same statement and reads its
+counts from the executed plan's metrics. The reference's hand-built
+machinery maps 1:1 onto planner features:
 chunk pruning = row-group pruning (src/meta.rs:646-660), rayon chunk
 parallelism = task parallelism (src/meta.rs:678-709), TopKCollector's
 adaptive threshold = per-partition bounded priority queue in
@@ -52,7 +51,7 @@ import time
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame
 
 from .errors import (
     DimensionMismatchError,
@@ -63,7 +62,7 @@ from .errors import (
 )
 from .expr import Expr, compile_expr
 from .functions.vector import (
-    METRICS, SCORE_CMPS, rank_topk, run_sql, scored_sql, topk_sql, valid_score,
+    METRICS, SCORE_CMPS, run_sql, scored_sql, topk_sql,
 )
 from .store import INV_NORM_COL, MetaStore, VecStore
 
@@ -142,6 +141,22 @@ def _executed_plan_nodes(df: DataFrame):
     if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
         plan = plan.executedPlan()
     yield from walk(plan)
+
+
+def _scored_counts(df: DataFrame) -> tuple[int, int]:
+    """(pairs scored, pairs with a valid score) of an executed vector
+    statement, from its plan's SQLMetrics: the rows out of the kernel's
+    ``Generate inline(named_struct(score, …))`` and out of the
+    ``nanvl(…) IS NOT NULL`` filter. Nodes are matched by their own
+    one-line description (``toString`` prints the whole subtree)."""
+    pairs = valid = 0
+    for node in _executed_plan_nodes(df):
+        text = node.simpleString(0)
+        if text.startswith("Generate inline(array(named_struct(score,"):
+            pairs += int(node.metrics().apply("numOutputRows").value())
+        elif text.startswith("Filter ") and "isnotnull(nanvl(" in text:
+            valid += int(node.metrics().apply("numOutputRows").value())
+    return pairs, valid
 
 
 def _scan_files_read(df: DataFrame) -> int | None:
@@ -387,10 +402,15 @@ class VecQueryPlan:
     def _result_columns(self) -> list[str]:
         return [self._store.id_col, "score"]
 
-    def _scored(self) -> tuple[DataFrame, str]:
-        """The base relation (the store, row masks applied) and the SQL
-        text of its rows that pass the metadata predicate, scored
-        against every query with the score filter applied."""
+    def df(self) -> DataFrame:
+        """The result as one SQL statement over the store (lazy; parsed
+        and analysed once): the rows that pass the metadata predicate
+        (row masks filter the store before it is bound), scored against
+        every query with the score filter applied, then ranked. Invalid
+        scores are dropped before the top-k, so the kernel runs once per
+        (row, query) pair and, collected, ``ORDER BY … LIMIT k`` is the
+        plan root: one stage. ``k=None`` keeps every valid row, sorted,
+        still scoring each row once."""
         self._validate()
         store = self._store
         base = store.df
@@ -401,22 +421,13 @@ class VecQueryPlan:
             c for c in dict.fromkeys(self._result_columns())
             if c != "score" and not (several and c == "query_id")
         ]
-        text = scored_sql(
+        scored = scored_sql(
             self._queries, self._metric, store.vec_col, carried,
             inv_norm_col=INV_NORM_COL if INV_NORM_COL in base.columns else None,
             where=self._meta_sql(), score_filter=self._vec_filter,
         )
-        return base, text
-
-    def df(self) -> DataFrame:
-        """The result as one SQL statement over the store (lazy; parsed
-        and analysed once). Invalid scores are dropped before the top-k,
-        so the kernel runs once per (row, query) pair and, collected,
-        ``ORDER BY … LIMIT k`` is the plan root: one stage. ``k=None``
-        keeps every valid row, sorted, still scoring each row once."""
-        base, scored = self._scored()
         return run_sql(base, topk_sql(
-            scored, self._k, self._metric, self._store.id_col,
+            scored, self._k, self._metric, store.id_col,
             self._result_columns(), direction=self._take_dir,
         ))
 
@@ -428,24 +439,15 @@ class VecQueryPlan:
     def collect_with_stats(self) -> tuple[list, QueryStats]:
         """Execute and also report :class:`QueryStats` — the engine's
         analog of the reference's per-query stats surface
-        (src/meta.rs:710-721,832-842), gathered via Spark Observations
-        so no extra job runs."""
-        # the statement's scored rows, observed, then ranked as a
-        # DataFrame: an Observation on a DataFrame bound into spark.sql
-        # never completes (Spark 4.1), so the ranking stays outside it
-        base, scored = self._scored()
-        obs = Observation()
-        observed = run_sql(base, scored).observe(
-            obs, F.count(F.lit(1)).alias("pairs"), F.count_if(valid_score("score")).alias("valid")
-        )
-        df = rank_topk(
-            observed, self._k, self._metric, self._store.id_col, direction=self._take_dir
-        ).select(*self._result_columns())
+        (src/meta.rs:710-721,832-842). Runs the statement ``collect()``
+        runs, with the same jobs and stages; the counts come from its
+        executed plan's metrics."""
+        df = self.df()
         t0 = time.perf_counter()
         rows = df.collect()
         elapsed = time.perf_counter() - t0
-        candidates = int(obs.get["pairs"]) // len(self._queries)
-        survivors = int(obs.get["valid"])
+        pairs, survivors = _scored_counts(df)
+        candidates = pairs // len(self._queries)
         # chunk accounting at ROW-GROUP granularity when footers are
         # readable (reference chunk ≈ row group): evaluate this plan's
         # CNF against each row group's zonemaps — the same prune

@@ -7768,14 +7768,12 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     nature — the distributed stages are the search and shortlist
     before it)."""
     from .operators.similarity import mmr_rerank
-    from .functions.vector import cosine_expr, inv_norm_expr, inv_norm_of
 
     emb = load(spark, sf_dir, "embeddings")
-    rel = F.round(
-        cosine_expr("embedding", Q7, inv_norm_expr("embedding"), inv_norm_of(Q7)),
-        6,
+    rel = score_queries(emb, [Q7], "cosine", "embedding").withColumn(
+        "score", F.round("score", 6)
     )
-    shortlist = rank_topk(emb.withColumn("score", rel), 50, "cosine", "vec_id")
+    shortlist = rank_topk(rel, 50, "cosine", "vec_id")
     return mmr_rerank(shortlist, k=_MMR_K, lam=_MMR_LAM)
 
 

@@ -186,7 +186,7 @@ def test_several_queries_are_one_literal_array(spark, store):
     """Several known queries are one literal array exploded over the
     rows: the global-merge plan and an IVF batch plan each evaluate the
     kernel once (no join, broadcast or query relation), the IVF probe
-    filter sits between the explode and the kernel projection, so only
+    filter sits between the query explode and the kernel, so only
     probed pairs are scored, and the global merge runs one job."""
     import numpy as np
 
@@ -204,11 +204,97 @@ def test_several_queries_are_one_literal_array(spark, store):
     nodes = [line.strip() for line in plan_of(batch).splitlines()]
     kernel = next(i for i, n in enumerate(nodes) if "aggregate(" in n)
     probe = next(i for i, n in enumerate(nodes) if "array_contains(" in n)
-    generate = next(i for i, n in enumerate(nodes) if "Generate inline(" in n)
-    assert kernel < probe < generate, nodes
+    # the kernel's own one-element inline comes first; the query
+    # explode is the last Generate
+    explode = max(i for i, n in enumerate(nodes) if "Generate inline(" in n)
+    assert kernel < probe < explode, nodes
 
     rows, jobs, _ = jobs_and_stages(spark, "several-queries", df.collect)
     assert len(rows) == 10 and jobs == 1
+
+
+def test_collect_with_stats_runs_the_collect_statement(spark, store):
+    """``collect_with_stats()`` runs the statement ``collect()`` runs,
+    with the same jobs and stages (a point query: one job, one stage),
+    and reads its counts from that statement's executed plan: every
+    candidate row per query, the valid scores that pass the score
+    filter, and the result rows."""
+    from otters_spark.suite import Q11
+
+    plan = store.query(Q7, "cosine").take(10)
+    want, jobs, stages = jobs_and_stages(spark, "stats-collect", plan.collect)
+    (rows, stats), s_jobs, s_stages = jobs_and_stages(
+        spark, "stats-with-stats", plan.collect_with_stats
+    )
+    assert rows == want and (s_jobs, s_stages) == (jobs, stages) == (1, 1)
+    n = store.df.count()
+    assert (stats.candidate_rows, stats.rows_after_filters, stats.result_rows) == (n, n, 10)
+
+    def filtered():
+        return store.query([Q7, Q11], "cosine").meta_filter(col("label").gte(5)).vec_filter(
+            0.0, "gt")
+
+    plan = filtered().take(10)
+    want, jobs, stages = jobs_and_stages(spark, "stats-collect-2", plan.collect)
+    (rows, stats), s_jobs, s_stages = jobs_and_stages(
+        spark, "stats-with-stats-2", plan.collect_with_stats
+    )
+    assert rows == want and (s_jobs, s_stages) == (jobs, stages)
+    candidates = store.df.filter(F.col("label") >= 5).count()
+    assert (stats.candidate_rows, stats.vectors_compared) == (candidates, 2 * candidates)
+    assert stats.rows_after_filters == len(filtered().take(None).collect())
+    assert stats.result_rows == len(rows) == 10
+
+
+def test_dataframe_entry_points_score_each_pair_once(spark, store, sf_dir, tmp_path):
+    """Every DataFrame vector entry point ranks through the statement
+    texts: its executed plan evaluates each kernel once (one
+    ``aggregate(zip_with(…))`` per kernel, inside its one-element
+    ``inline``), and where it ranks, the validity filter sits below the
+    limit or window, so invalid scores are dropped before the top-k."""
+    import numpy as np
+
+    from otters_spark.operators.similarity import (
+        binary_index, binary_search, hyperplanes, ivf_search, ivf_search_batch, lsh_index,
+        lsh_load, lsh_save, lsh_search, lsh_search_batch, maxsim_topk, pq_search,
+    )
+    from otters_spark.suite import Q11, Q13, sim_hard_negatives, sim_knn_classify
+
+    qs = [Q7, Q11, Q13]
+    planes = hyperplanes(64, n_planes=2, seed=3)
+    lsh_save(lsh_index(store.df, planes), str(tmp_path / "lsh"))
+    indexed = lsh_load(spark, str(tmp_path / "lsh"))
+    assigned = store.df.withColumn("ivf_cell", (F.col("vec_id") % 4).cast("int"))
+    M, K = 8, 4
+    encoded = store.df.select(
+        "vec_id", F.array(*[(F.col("vec_id") % K).cast("int")] * M).alias("pq_code")
+    )
+    codebooks = np.random.default_rng(0).standard_normal((M, K, 64 // M))
+    tokens = store.df.select((F.col("vec_id") % 50).alias("group_id"), "embedding")
+    # (entry point, kernels, ranked by rank_topk)
+    cases = {
+        "lsh": (lsh_search(indexed, Q7, planes, 5, multiprobe=1), 1, True),
+        "lsh_batch": (lsh_search_batch(indexed, qs, planes, 5, multiprobe=1), 1, True),
+        "ivf": (ivf_search(assigned, np.eye(4, 64), Q7, 5, nprobe=2), 1, True),
+        "ivf_batch": (ivf_search_batch(assigned, np.eye(4, 64), qs, 5, nprobe=2), 1, True),
+        "pq_rerank": (pq_search(encoded, codebooks, Q7, 5, store=store.df, rerank=20), 2, True),
+        "binary": (binary_search(binary_index(store.df), Q7, 5), 1, True),
+        "maxsim": (maxsim_topk(tokens, qs, k=5), 1, False),
+        "knn_classify": (sim_knn_classify(spark, sf_dir), 1, True),
+        "hard_negatives": (sim_hard_negatives(spark, sf_dir), 1, True),
+    }
+    for name, (df, kernels, ranked) in cases.items():
+        assert df.collect(), name
+        plan = final_plan_of(df)
+        lines = plan.splitlines()
+        generates = [line for line in lines
+                     if "Generate inline(array(" in line and "struct(score, " in line]
+        assert len(generates) == kernels == plan.count("aggregate(zip_with("), (name, plan)
+        if ranked:
+            top = min(i for i, line in enumerate(lines)
+                      if "TakeOrderedAndProject" in line or "WindowGroupLimit" in line)
+            valid = [i for i, line in enumerate(lines) if "Filter isnotnull(nanvl(" in line]
+            assert valid and min(valid) > top, (name, plan)
 
 
 def test_vector_literal_is_bit_exact(spark):

@@ -794,15 +794,12 @@ def test_pq_srp_differential_fuzz(spark):
 
 
 def test_per_query_topk_matches_naive_window(emb, spark):
-    """per_query_topk (rank window planned as WindowGroupLimit
-    Partial/Final — bounded shuffle input) must return EXACTLY the rows
-    the naive Window.partitionBy(query_id) returns, for both orderings
-    — it is the scale-safe form of that window, not an
-    approximation."""
-    from pyspark.sql.window import Window
-
-    from otters_spark.functions.vector import score_queries
-    from otters_spark.operators.similarity import per_query_topk
+    """rank_topk with a query column (a rank window planned as
+    WindowGroupLimit Partial/Final — bounded shuffle input) must return
+    EXACTLY the rows the naive Window.partitionBy(query_id) returns over
+    the valid rows, for both orderings — it is the scale-safe form of
+    that window, not an approximation."""
+    from otters_spark.functions.vector import rank_topk, score_queries
     from otters_spark.store import VecStore
 
     store = VecStore.from_df(emb, vec_col="embedding", dim=64, validate=False)
@@ -810,29 +807,35 @@ def test_per_query_topk_matches_naive_window(emb, spark):
         scored = score_queries(store.df, [Q7, Q11], metric, "embedding").select(
             "query_id", "vec_id", "score", "label"
         )
-        direction = (
-            F.col("score").asc() if ascending else F.col("score").desc()
-        )
-        w = Window.partitionBy("query_id").orderBy(direction, F.col("vec_id"))
-        naive = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 7)
-            .drop("rn")
-        )
-        got = per_query_topk(scored, 7, ascending=ascending)
+        naive = _naive_per_query_topk(scored, 7, ascending)
+        got = rank_topk(scored, 7, metric, "vec_id", query_col="query_id")
         key = lambda r: (r["query_id"], r["vec_id"])
         assert sorted(got.collect(), key=key) == sorted(
             naive.collect(), key=key
         ), metric
 
 
+def _naive_per_query_topk(scored, k, ascending):
+    """The plain per-query rank window over the rows with a real score."""
+    from pyspark.sql.window import Window
+
+    valid = scored.filter(F.col("score").isNotNull() & ~F.isnan("score"))
+    direction = F.col("score").asc() if ascending else F.col("score").desc()
+    w = Window.partitionBy("query_id").orderBy(direction, F.col("vec_id"))
+    return (
+        valid.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
 def test_per_query_topk_bounded_state_across_batches(spark):
     """Exactness pin over a single-partition multi-batch input: the
     round-11 pandas partial needed a running top-k ACROSS Arrow batches
-    and this test caught carry bugs; kept after the round-12 JVM
-    WindowGroupLimit rewrite as a pure exactness regression (the tiny
-    Arrow batch size is now irrelevant but harmless)."""
-    from otters_spark.operators.similarity import per_query_topk
+    and this test caught carry bugs; kept after the JVM WindowGroupLimit
+    rewrite as a pure exactness regression of rank_topk's per-query
+    form (the tiny Arrow batch size is now irrelevant but harmless)."""
+    from otters_spark.functions.vector import rank_topk
 
     rows = [(qid, i, float((i * 37 + qid * 11) % 101))
             for qid in (0, 1) for i in range(500)]
@@ -841,7 +844,8 @@ def test_per_query_topk_bounded_state_across_batches(spark):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
     try:
         got = sorted(
-            (r["query_id"], r["vec_id"]) for r in per_query_topk(df, 3).collect()
+            (r["query_id"], r["vec_id"])
+            for r in rank_topk(df, 3, "dot", "vec_id", query_col="query_id").collect()
         )
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -854,40 +858,33 @@ def test_per_query_topk_bounded_state_across_batches(spark):
 
 
 def test_per_query_topk_null_keys_and_scores_match_naive(spark):
-    """Round-11 ADVICE hazards, locked after the round-12 JVM rewrite:
-    a NULL query key must form its OWN top-k group (the pandas partial
-    silently dropped it — groupby dropna), and NULL scores must follow
-    Spark's window NULL ordering exactly (DESC = NULLs last, ASC =
-    NULLs first; the pandas partial conflated NULL with NaN). Both are
-    asserted by equality against the naive window, per ordering."""
-    from pyspark.sql.window import Window
-
-    from otters_spark.operators.similarity import per_query_topk
+    """Round-11 ADVICE hazards, kept for rank_topk's per-query form: a
+    NULL query key must form its OWN top-k group (the pandas partial
+    silently dropped it — groupby dropna), and NULL and NaN scores are
+    never returned. Both are asserted by equality against the naive
+    window over the valid rows, per ordering."""
+    from otters_spark.functions.vector import rank_topk
 
     rows = []
     for qid in (None, 0, 1):
         for i in range(40):
-            score = None if i % 7 == 0 else float((i * 13 + (qid or 2) * 5) % 23)
+            score = float((i * 13 + (qid or 2) * 5) % 23)
+            if i % 7 == 0:
+                score = None
+            elif i % 11 == 0:
+                score = float("nan")
             rows.append((qid, i, score))
     df = spark.createDataFrame(
         rows, "query_id int, vec_id long, score double"
     ).repartition(4)
-    for ascending in (False, True):
-        direction = (
-            F.col("score").asc() if ascending else F.col("score").desc()
-        )
-        w = Window.partitionBy("query_id").orderBy(direction, F.col("vec_id"))
-        naive = (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 5)
-            .drop("rn")
-        )
-        got = per_query_topk(df, 5, ascending=ascending)
+    for metric, ascending in (("dot", False), ("euclidean", True)):
+        naive = _naive_per_query_topk(df, 5, ascending)
+        got = rank_topk(df, 5, metric, "vec_id", query_col="query_id")
         key = lambda r: (
             r["query_id"] if r["query_id"] is not None else -1,
             r["vec_id"],
         )
         got_rows = sorted(got.collect(), key=key)
-        assert got_rows == sorted(naive.collect(), key=key), ascending
+        assert got_rows == sorted(naive.collect(), key=key), metric
         # the NULL query key group is present with its own top-5
         assert sum(1 for r in got_rows if r["query_id"] is None) == 5

@@ -387,7 +387,7 @@ def test_per_query_k_bounded_by_window_group_limit(spark, matrix_store, tmp_path
     naming the conf, and serving rejects a bad k before any stream
     starts."""
     from otters_spark.functions.vector import (
-        WINDOW_GROUP_LIMIT_CONF, per_query_topk, rank_topk, score_queries,
+        WINDOW_GROUP_LIMIT_CONF, rank_topk, score_queries,
     )
 
     scored = score_queries(matrix_store.df, _MATRIX_QUERIES, "cosine", "embedding")
@@ -399,7 +399,6 @@ def test_per_query_k_bounded_by_window_group_limit(spark, matrix_store, tmp_path
         assert top.count() == 6
         for call in (
             lambda: rank_topk(scored, 4, "cosine", "vec_id", query_col="query_id"),
-            lambda: per_query_topk(scored, 4),
             lambda: serve_query_stream(
                 spark.readStream.schema(QUERY_SCHEMA).json(str(tmp_path)),
                 matrix_store, on_batch=lambda df, bid: None,
