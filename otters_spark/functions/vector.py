@@ -30,9 +30,6 @@ plan API and the serving loop render one statement per query batch,
 and the DataFrame entry points wrap the same texts
 (:func:`score_queries`, :func:`rank_topk`); :func:`score_pairs` scores
 queries that are themselves a DataFrame with the same kernel.
-
-Scale note: an Arrow/pandas-UDF matmul path for very wide vectors lives
-in ``otters_spark.operators.similarity``.
 """
 
 from __future__ import annotations
@@ -278,7 +275,7 @@ def score_expr(vec_col, q_col, metric: str, inv_norm_col=None, q_inv_norm=None) 
 # --- the one scoring-and-ranking path ----------------------------------
 #
 # Every vector search entry point (plan API, serving, LSH/IVF/PQ/binary
-# ANN, the pandas matmul merge, the suite) ranks by one rule: direction
+# ANN, MaxSim, the suite) ranks by one rule: direction
 # from METRICS (src/vec.rs:92-98), NaN scores dropped (src/vec_compute.rs:
 # 236-239) — NULL with them — and ties broken on id ascending so results
 # are reproducible. The rule exists as one SQL text, :func:`topk_sql`,

@@ -74,46 +74,40 @@ def semantic_contamination_report(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     eval_vec_col: str | None = None,
-    eval_id_col: str | None = None,
 ) -> DataFrame:
     """Embedding-space decontamination — the semantic complement of the
     n-gram collision check: a train item whose embedding sits within
     ``cosine >= threshold`` of ANY benchmark item is flagged even when
     it shares no verbatim span (paraphrased eval leakage). Returns, per
     contaminated train row, ``max_cosine`` (6 dp) and ``n_eval_hits``;
-    clean rows are absent — the report is the drop list.
+    clean rows are absent — the report is the drop list. A NULL or NaN
+    cosine is never a hit.
 
     Scale shape: the benchmark side is small by definition (eval sets
     are thousands of rows, the corpus is billions), so it BROADCASTS
-    and scoring is a map-side nested-loop over each corpus partition —
-    one scan of the corpus, no shuffle until the per-train-id groupBy
-    (which AQE coalesces; its key is the train id, so it is as
-    parallel as the corpus). Cosine uses the engine's precomputed
-    inverse-norm convention (zero vectors score 0.0). For benchmark
-    sides too big to broadcast, generate candidates with the LSH
-    bucket machinery first (operators/similarity.py) and verify only
-    bucket collisions."""
-    from ..functions.vector import cosine_expr, inv_norm_expr
+    and scoring is a map-side nested-loop over each corpus partition
+    (:func:`~otters_spark.functions.vector.score_pairs`) — one scan of
+    the corpus, no shuffle until the per-train-id groupBy (which AQE
+    coalesces; its key is the train id, so it is as parallel as the
+    corpus). Cosine uses the engine's precomputed inverse-norm
+    convention (zero vectors score 0.0), each side's norm computed once
+    per row, never per pair. For benchmark sides too big to broadcast,
+    generate candidates with the LSH bucket machinery first
+    (operators/similarity.py) and verify only bucket collisions."""
+    from ..functions.vector import INV_NORM_COL, inv_norm_expr, score_pairs, valid_score
 
-    ev, ei = eval_vec_col or vec_col, eval_id_col or id_col
     t = train_df.select(
         F.col(id_col).alias("train_id"),
         F.col(vec_col).alias("__v"),
-        inv_norm_expr(vec_col).alias("__iv"),
+        inv_norm_expr(vec_col).alias(INV_NORM_COL),
     )
-    e = eval_df.select(
-        F.col(ei).alias("eval_id"),
-        F.col(ev).alias("__q"),
-        inv_norm_expr(ev).alias("__iq"),
-    )
-    scored = t.crossJoin(F.broadcast(e)).withColumn(
-        "__cos", cosine_expr("__v", "__q", F.col("__iv"), F.col("__iq"))
-    )
+    e = eval_df.select(F.col(eval_vec_col or vec_col).alias("__q"))
+    scored = score_pairs(t, e, "cosine", "__v", "__q")
     return (
-        scored.filter(F.col("__cos") >= threshold)
+        scored.filter(valid_score("score") & (F.col("score") >= threshold))
         .groupBy("train_id")
         .agg(
-            F.round(F.max("__cos"), 6).alias("max_cosine"),
+            F.round(F.max("score"), 6).alias("max_cosine"),
             F.count(F.lit(1)).alias("n_eval_hits"),
         )
     )

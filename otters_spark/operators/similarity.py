@@ -1,15 +1,12 @@
 """Similarity search operators.
 
-Three tiers, trading exactness for scale:
+Two tiers, trading exactness for scale:
 
 * **brute-force** (exact, the reference's own semantics) — the fluent
   plan in ``otters_spark.plan``; scoring is JVM higher-order-function
   expressions with the query inlined as a literal.
   Exact and embarrassingly parallel: at 100 TB it is one scan, no
   shuffle, top-k via per-partition bounded heaps.
-* **pandas/Arrow matmul** — same exact math through ``mapInPandas`` +
-  NumPy BLAS; wins for wide vectors (dim >~ 256) or large query
-  batches where per-element codegen loses to a (n×d)@(d×q) matmul.
 * **approximate** — random-hyperplane LSH bucketing and IVF (MLlib
   KMeans coarse quantizer, "batch index build"): prune the scan to a
   few buckets/cells, then exact re-score inside. The index build is a
@@ -30,14 +27,13 @@ from ..functions.vector import (
     dot_expr,
     inv_norm_expr,
     rank_topk,
-    ranks_ascending,
     score_queries,
+    valid_score,
 )
 from ..store import INV_NORM_COL
 
 __all__ = [
     "maxsim_topk",
-    "pandas_matmul_topk",
     "hyperplanes",
     "lsh_bucket_expr",
     "lsh_index",
@@ -216,9 +212,6 @@ def prototype_outliers(
     )
 
 
-# --- Arrow/NumPy matmul path --------------------------------------------
-
-
 def maxsim_topk(
     vectors: DataFrame,
     queries: Sequence[Sequence[float]],
@@ -239,10 +232,12 @@ def maxsim_topk(
     (above it they would re-evaluate per query token); the two-level
     max-then-sum lowers to two partial-aggregated groupBys whose
     shuffle rows are (group, qid, double) — the raw vectors never
-    shuffle — and the final top-k is a TakeOrderedAndProject. One
-    corpus scan, |corpus|·|q| dot products, no Python. Zero-norm tokens
-    score 0.0 (inverse norm stored as 0.0), matching the engine's
-    cosine convention."""
+    shuffle — and the final top-k is :func:`rank_topk`'s
+    TakeOrderedAndProject. One corpus scan, |corpus|·|q| dot products,
+    no Python. Zero-norm tokens score 0.0 (inverse norm stored as 0.0),
+    matching the engine's cosine convention; a token whose score is
+    NULL or NaN is dropped before the max, so a document scores from
+    its valid tokens."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     queries = list(queries)
@@ -252,81 +247,10 @@ def maxsim_topk(
         inv_norm_expr(vec_col).alias(INV_NORM_COL),
     )
     scored = score_queries(toks, queries, "cosine", "__v", query_ids=range(len(queries)))
-    per_q = scored.groupBy(group_col, "query_id").agg(F.max("score").alias("__m"))
-    return (
-        per_q.groupBy(group_col)
-        .agg(F.sum("__m").alias("score"))
-        .orderBy(F.col("score").desc(), group_col)
-        .limit(k)
-    )
-
-
-def pandas_matmul_topk(
-    df: DataFrame,
-    queries: Iterable[Sequence[float]],
-    k: int,
-    metric: str = "cosine",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Batch top-k via Arrow-batched NumPy matmul: each partition
-    scores (batch×dim) @ (dim×q) in one BLAS call, keeps its own
-    top-k, and the global merge is ORDER BY/LIMIT over q*k rows per
-    partition. Global-merge semantics match the reference's batch
-    behavior (src/vec.rs:217-219)."""
-    Q = np.asarray([list(map(float, q)) for q in queries], dtype=np.float64)
-    if metric == "cosine":
-        norms = np.linalg.norm(Q, axis=1)
-        Qn = Q * np.where(norms == 0.0, 0.0, 1.0 / np.where(norms == 0, 1, norms))[:, None]
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.IntegerType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    nq = Q.shape[0]
-    ascending = ranks_ascending(metric)
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.asarray(np.vstack(pdf[vec_col].to_numpy()), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            if metric == "dot":
-                S = M @ Q.T
-            elif metric == "cosine":
-                mn = np.linalg.norm(M, axis=1)
-                Mn = M * np.where(mn == 0.0, 0.0, 1.0 / np.where(mn == 0, 1, mn))[:, None]
-                S = Mn @ Qn.T
-            elif metric == "euclidean":
-                S = (
-                    (M * M).sum(1)[:, None]
-                    - 2.0 * (M @ Q.T)
-                    + (Q * Q).sum(1)[None, :]
-                )
-            else:
-                raise ValueError(f"unknown metric {metric!r}")
-            # per-partition top-k per query before emitting: bounds the
-            # merge input to k rows per (partition, query)
-            frames = []
-            for qi in range(nq):
-                s = S[:, qi]
-                if len(s) > k:
-                    idx = np.argpartition(s if ascending else -s, k)[:k]
-                else:
-                    idx = np.arange(len(s))
-                frames.append(
-                    pd.DataFrame(
-                        {"query_id": qi, id_col: ids[idx], "score": s[idx]}
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    return rank_topk(df.mapInPandas(score, out_schema), k, metric, id_col)
+    per_q = (scored.filter(valid_score("score"))
+             .groupBy(group_col, "query_id").agg(F.max("score").alias("__m")))
+    per_doc = per_q.groupBy(group_col).agg(F.sum("__m").alias("score"))
+    return rank_topk(per_doc, k, "cosine", group_col)
 
 
 # --- random-hyperplane LSH ----------------------------------------------
@@ -356,8 +280,12 @@ def lsh_index(
 ) -> DataFrame:
     """Attach the LSH bucket. At scale, write this partitioned by
     ``lsh_bucket`` so a search prunes to matching files (partition
-    pruning does the candidate selection)."""
-    return df.withColumn("lsh_bucket", lsh_bucket_expr(vec_col, planes))
+    pruning does the candidate selection). The bucket is computed
+    inside a one-element ``inline``, so a search's ``lsh_bucket IN
+    (...)`` filter on an unsaved index stays above it instead of being
+    pushed into a second copy of the plane kernels."""
+    bucket = F.struct(lsh_bucket_expr(vec_col, planes).alias("lsh_bucket"))
+    return df.drop("lsh_bucket").select("*", F.inline(F.array(bucket)))
 
 
 def lsh_save(indexed: DataFrame, path: str, mode: str = "overwrite") -> None:

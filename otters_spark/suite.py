@@ -4238,13 +4238,15 @@ FROM ex ORDER BY sq, vec_id LIMIT 10
 
 
 def sim_pandas_matmul_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Arrow/NumPy matmul scoring path (exact, for wide vectors /
-    big query batches) — same global top-k semantics as the codegen
-    path, so it shares an oracle shape with vs_batch_global_topk."""
-    from .operators.similarity import pandas_matmul_topk
-
+    """The several-query global merge of the DataFrame entry points:
+    three known queries scored by ``score_queries`` (one literal array,
+    ids 0..2) and ranked together by ``rank_topk`` — the reference's
+    batch semantics (src/vec.rs:217-219), one top-12 over every
+    (query, row) pair, so it shares an oracle shape with
+    vs_batch_global_topk."""
     emb = load(spark, sf_dir, "embeddings")
-    out = pandas_matmul_topk(emb, [Q7, Q11, Q13], k=12, metric="dot")
+    scored = score_queries(emb, [Q7, Q11, Q13], "dot", "embedding", query_ids=range(3))
+    out = rank_topk(scored, 12, "dot", "vec_id")
     return out.select(
         "query_id", "vec_id", F.round("score", 6).alias("score")
     )

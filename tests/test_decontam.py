@@ -42,6 +42,7 @@ def test_semantic_contamination_planted(spark):
         (1, [0.99, 0.14, 0.0]),  # paraphrase-near eval 100
         (2, [0.0, 1.0, 0.0]),    # orthogonal -> clean
         (3, [0.0, 0.0, 0.0]),    # zero vector scores 0.0 -> clean
+        (4, [float("nan"), 0.0, 0.0]),  # NaN cosine is never a hit
     ]
     train = spark.createDataFrame(rows, ["vec_id", "embedding"]).withColumn(
         "embedding", F.col("embedding").cast("array<float>")

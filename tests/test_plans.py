@@ -279,7 +279,7 @@ def test_dataframe_entry_points_score_each_pair_once(spark, store, sf_dir, tmp_p
         "ivf_batch": (ivf_search_batch(assigned, np.eye(4, 64), qs, 5, nprobe=2), 1, True),
         "pq_rerank": (pq_search(encoded, codebooks, Q7, 5, store=store.df, rerank=20), 2, True),
         "binary": (binary_search(binary_index(store.df), Q7, 5), 1, True),
-        "maxsim": (maxsim_topk(tokens, qs, k=5), 1, False),
+        "maxsim": (maxsim_topk(tokens, qs, k=5), 1, True),
         "knn_classify": (sim_knn_classify(spark, sf_dir), 1, True),
         "hard_negatives": (sim_hard_negatives(spark, sf_dir), 1, True),
     }
@@ -295,6 +295,30 @@ def test_dataframe_entry_points_score_each_pair_once(spark, store, sf_dir, tmp_p
                       if "TakeOrderedAndProject" in line or "WindowGroupLimit" in line)
             valid = [i for i, line in enumerate(lines) if "Filter isnotnull(nanvl(" in line]
             assert valid and min(valid) > top, (name, plan)
+
+
+def test_unsaved_lsh_index_evaluates_each_plane_once(spark, sf_dir):
+    """Over an ``lsh_index`` frame that is not saved, the probe filter
+    stays above the ``inline`` that computes ``lsh_bucket``: the
+    executed plan holds each plane kernel once, plus the score kernel."""
+    from otters_spark.operators.similarity import (
+        hyperplanes, lsh_index, lsh_search, lsh_search_batch,
+    )
+    from otters_spark.suite import Q11, Q13, sim_lsh_topk
+
+    n_planes = 4
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    planes = hyperplanes(64, n_planes=n_planes, seed=42)
+    indexed = lsh_index(emb, planes)
+    cases = {
+        "lsh": lsh_search(indexed, Q7, planes, 10, multiprobe=3),
+        "lsh_batch": lsh_search_batch(indexed, [Q7, Q11, Q13], planes, 10, multiprobe=3),
+        "sim_lsh_topk": sim_lsh_topk(spark, sf_dir),
+    }
+    for name, df in cases.items():
+        assert df.collect(), name
+        plan = final_plan_of(df)
+        assert plan.count("aggregate(zip_with(") == n_planes + 1, (name, plan)
 
 
 def test_vector_literal_is_bit_exact(spark):

@@ -1,16 +1,17 @@
-"""Similarity-search operators: exactness of the matmul path, recall of
-the approximate paths against brute force on real testdata."""
+"""Similarity-search operators: exactness of the several-query global
+merge, recall of the approximate paths against brute force on real
+testdata."""
 
 import pytest
 from pyspark.sql import functions as F
 
+from otters_spark.functions.vector import rank_topk, score_queries
 from otters_spark.operators.similarity import (
     hyperplanes,
     ivf_build,
     ivf_search,
     lsh_index,
     lsh_search,
-    pandas_matmul_topk,
 )
 from otters_spark.store import VecStore
 from otters_spark.suite import Q7, Q11
@@ -27,12 +28,13 @@ def brute_top10(emb):
     return [r["vec_id"] for r in store.query(Q7, "cosine").take(10).collect()]
 
 
-def test_pandas_matmul_matches_codegen_path(emb):
+def test_score_queries_global_merge_matches_plan_api(emb):
     store = VecStore.from_df(emb, vec_col="embedding", dim=64, validate=False)
     native = store.query([Q7, Q11], "dot").take(10).collect()
-    arrow = pandas_matmul_topk(emb, [Q7, Q11], k=10, metric="dot").collect()
-    assert [r["vec_id"] for r in native] == [r["vec_id"] for r in arrow]
-    for a, b in zip(native, arrow):
+    scored = score_queries(emb, [Q7, Q11], "dot", "embedding", query_ids=[0, 1])
+    merged = rank_topk(scored, 10, "dot", "vec_id").collect()
+    assert [r["vec_id"] for r in native] == [r["vec_id"] for r in merged]
+    for a, b in zip(native, merged):
         assert abs(a["score"] - b["score"]) < 1e-9
 
 
@@ -250,6 +252,10 @@ def test_maxsim_matches_numpy(spark):
     rng = np.random.default_rng(17)
     n_groups, toks_per, d = 12, 4, 8
     vecs = rng.normal(size=(n_groups * toks_per, d))
+    # a token of document 2 has a NaN coordinate: its scores are
+    # invalid, so document 2 scores from its other three tokens (and
+    # still ranks in the top 5)
+    vecs[2 * toks_per + 1, 3] = np.nan
     rows = [
         (int(i // toks_per), [float(x) for x in vecs[i]])
         for i in range(len(vecs))
@@ -260,13 +266,14 @@ def test_maxsim_matches_numpy(spark):
         r["group_id"]: r["score"]
         for r in maxsim_topk(df, [list(q) for q in qs], k=5).collect()
     }
+    assert not any(np.isnan(v) for v in got.values()), got
 
     def cos(a, b):
         return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
 
     exp = {}
     for g in range(n_groups):
-        block = vecs[g * toks_per : (g + 1) * toks_per]
+        block = [t for t in vecs[g * toks_per : (g + 1) * toks_per] if not np.isnan(t).any()]
         exp[g] = sum(max(cos(q, t) for t in block) for q in qs)
     top5 = sorted(exp, key=lambda g: (-exp[g], g))[:5]
     assert sorted(got) == sorted(top5)

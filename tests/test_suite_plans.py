@@ -24,7 +24,6 @@ ARROW_OK = {
     "neardup_embedding_pairs",
     "multimodal_features",
     "multimodal_frame_sample",  # Arrow-batched frame decode kernel
-    "sim_pandas_matmul_topk",
     "dedup_char_shingle_pairs",  # incidence-matmul kernel
     "dedup_containment_pairs",  # incidence-matmul kernel
     "dedup_edit_distance_verified",  # shingle matmul candidate generator
